@@ -41,8 +41,9 @@ case class AlertState(event: MetagameEvent)
   * (FIXTURES.md scenario 4: an `ended` with no prior `started` tombstones
   * the key — a later, *older* `started` must not resurrect it).
   *
-  * State is bounded: RocksDB-backed state store at scale, TTL via
-  * event-time timeout + watermark, keys ≈ concurrent alerts (tens).
+  * State is bounded: Spark's default HDFS-backed state store (only the
+  * `transformWithState` processors run on RocksDB), TTL via event-time
+  * timeout + watermark, keys ≈ concurrent alerts (tens).
   */
 object AlertPipeline {
 

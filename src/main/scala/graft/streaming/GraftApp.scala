@@ -74,7 +74,9 @@ object GraftApp {
     * it to the shared sub-plan would double-count every event when both
     * queries run (each query executes its own copy of the plan).
     *
-    * @param live continuous service mode (processing-time trigger) vs
+    * @param live continuous service mode, where each query starts its
+    *             next micro-batch as soon as the previous one commits
+    *             (`ProcessingTime(0)`, no fixed tick to wait for), vs
     *             drain-and-stop replay mode (`AvailableNow`, the default
     *             for tests and batch replays)
     */
@@ -93,7 +95,7 @@ object GraftApp {
     val events = MetagameEvent.fromJson(raw.select("value"))
     val observed = Observability.observed(events.toDF()).as[MetagameEvent]
     val trigger =
-      if (live) Trigger.ProcessingTime("1 second") else Trigger.AvailableNow()
+      if (live) Trigger.ProcessingTime(0) else Trigger.AvailableNow()
 
     val publishQ =
       if (cfg.publishEnabled)

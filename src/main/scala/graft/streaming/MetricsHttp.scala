@@ -35,13 +35,44 @@ class MetricsHttp(port: Int) extends AutoCloseable {
   private def render(): String =
     Metrics.snapshot.toSeq.sortBy(_._1).map { case (name, v) =>
       val n = name.replaceAll("[^a-zA-Z0-9_]", "_")
-      s"# TYPE graft_$n gauge\ngraft_$n $v"
+      val (kind, help) = MetricsHttp.described
+        .getOrElse(name, ("gauge", s"graft metric $name."))
+      s"# HELP graft_$n $help\n# TYPE graft_$n $kind\ngraft_$n $v"
     }.mkString("", "\n", "\n")
 
   override def close(): Unit = server.stop(0)
 }
 
 object MetricsHttp {
+  import graft.sources.FrameTransport
+
+  /** Prometheus type and help text per series. Counters only grow over
+    * the process lifetime; every other series, listed or not, is a gauge.
+    */
+  private val described: Map[String, (String, String)] = Map(
+    "total_events" ->
+      ("counter", "Events parsed by the state query."),
+    "malformed_frames" ->
+      ("counter", "ESS frames that failed to parse."),
+    FrameTransport.ReconnectsMetric ->
+      ("counter", "ESS websocket reconnect attempts."),
+    "ess_dropped_frames" ->
+      ("counter", "ESS frames dropped by a full source buffer."),
+    FilePublisher.CorruptLinesMetric ->
+      ("counter", "Corrupt lines skipped while reading the publish log."),
+    AmqpConnections.DialsMetric ->
+      ("counter", "AMQP broker connections dialed."),
+    "last_event_time" ->
+      ("gauge", "Event time of the newest event seen, in POSIX seconds."),
+    "running_queries" ->
+      ("gauge", "Streaming queries currently running."),
+    FrameTransport.StatusGauge ->
+      ("gauge", "Open ESS websocket connections."),
+    FrameTransport.OutageGauge ->
+      ("gauge", "1 while the ESS websocket is down, else 0."),
+    FrameTransport.OutageSinceGauge ->
+      ("gauge", "Start of the current ESS outage in epoch ms, 0 when healthy."))
+
   /** Reference default: METRICS_PORT, 8000 (`ess_client.py:32`). */
   def fromEnv(): MetricsHttp =
     new MetricsHttp(sys.env.getOrElse("METRICS_PORT", "8000").toInt)

@@ -2,7 +2,10 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.model.MetagameEvent
@@ -23,9 +26,9 @@ import graft.model.MetagameEvent
   * Layout: a log-plus-compaction scheme (the shape Delta/Iceberg give you
   * for free — re-derived here on bare parquet). `_CURRENT` atomically
   * points at a manifest file; the manifest lists segment directories in
-  * application order. Each merge writes ONLY the batch's (per-id resolved)
-  * rows as a new delta segment — O(|batch|) I/O, not O(|table|) — and
-  * readers resolve last-writer-wins across segments. Once the manifest
+  * application order. Each merge writes ONLY the batch's rows, as given,
+  * as a new delta segment — O(|batch|) I/O, not O(|table|) — and readers
+  * resolve last-writer-wins across and within segments. Once the manifest
   * exceeds `compactEvery` segments, the merge folds everything into a
   * fresh base segment, so read amplification is bounded and compaction
   * cost amortizes to |table|/compactEvery per batch.
@@ -174,10 +177,6 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
         col("c.img.timestamp").as("timestamp"))
   }
 
-  /** Merge one batch of updates into the table: write the batch as a new
-    * delta segment (cost scales with the batch), fold into a fresh base
-    * only when the segment count reaches `compactEvery`.
-    */
   /** Next version id: one past the highest id any existing manifest or
     * segment carries. Derived from the DIRECTORY, not a clock —
     * `System.nanoTime` has an arbitrary per-boot origin, so clock-named
@@ -213,15 +212,39 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     FilePublisher.syncDir(d.toFile)
   }
 
+  /** Merge one batch of updates into the table: write the batch as a new
+    * delta segment (cost scales with the batch), fold into a fresh base
+    * only when the segment count reaches `compactEvery`.
+    *
+    * The batch's plan runs exactly once, as the segment write: a
+    * streaming batch's state-store version commits inside that action,
+    * so it must run even when it yields no rows, and a second action
+    * would recompute the whole stateful stage. The write counts its own
+    * rows; an empty segment is deleted before any manifest is written.
+    * The batch is written unresolved: readers and compaction resolve
+    * last-writer-wins, so a duplicate id inside one segment is harmless.
+    */
   def merge(spark: SparkSession, updates: DataFrame): Unit = synchronized {
-    if (updates.isEmpty) return // a zero-row segment has no parquet footer
     val prevManifest = currentManifestName
     val segs = prevManifest.map(manifestOf).getOrElse(Seq.empty)
     val id = nextId()
     val delta = s"s${pad(id)}d"
-    resolve(updates
-      .select(AlertStateTable.schema.fieldNames.toIndexedSeq.map(col): _*))
+    val rows = Observation()
+    updates
+      .select(AlertStateTable.schema.fieldNames.toIndexedSeq.map(col): _*)
+      .observe(rows, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).parquet(s"$path/$delta")
+    // the count arrives through the session's listener bus, which drops
+    // events when its queue overflows: wait a bounded time, and without
+    // a count keep the segment (an empty write still leaves a readable
+    // footer-only file) rather than stall the stream
+    val written =
+      try Some(Await.result(rows.future, 1.minute).getAs[Long]("rows"))
+      catch { case _: TimeoutException => None }
+    if (written.contains(0L)) {
+      deleteRecursively(Paths.get(path, delta))
+      return
+    }
     syncSegment(delta)
     val newSegs =
       if (segs.length + 1 >= compactEvery) {
@@ -229,12 +252,13 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
         // key-RANGE the compacted output: `compactPartitions` writer
         // tasks each own a contiguous id range, so a 100× key space
         // compacts as parallel files instead of funneling the whole
-        // table through however few partitions the resolve left —
-        // compaction wall-clock scales with the cluster, and each
-        // output file covers a disjoint key interval (a range-predicate
-        // reader can skip files via parquet min/max on id)
-        readSegments(spark, segs :+ delta)
-          .repartitionByRange(compactPartitions, col("id"))
+        // table through one writer task — compaction wall-clock scales
+        // with the cluster, and each output file covers a disjoint key
+        // interval (a range-predicate reader can skip files via parquet
+        // min/max on id). Ranging BEFORE the resolve lets its window
+        // reuse the range partitioning: one shuffle, not two.
+        resolve(spark.read.parquet((segs :+ delta).map(s => s"$path/$s"): _*)
+          .repartitionByRange(compactPartitions, col("id")))
           .write.mode(SaveMode.Overwrite).parquet(s"$path/$base")
         syncSegment(base)
         Seq(base)

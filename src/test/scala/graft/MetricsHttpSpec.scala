@@ -16,8 +16,33 @@ class MetricsHttpSpec extends AnyFunSuite {
     org.scalatest.concurrent.Eventually.PatienceConfig(
       org.scalatest.time.Span(10, Seconds), 50.milliseconds)
 
+  /** Parse the text exposition format: series name -> (type, sample).
+    * Every sample line must follow its own `# HELP` and `# TYPE` lines.
+    */
+  private def parseExposition(body: String): Map[String, (String, Double)] = {
+    val Help = raw"# HELP (\S+) (.+)".r
+    val Type = raw"# TYPE (\S+) (counter|gauge)".r
+    val Sample = raw"(\S+) (\S+)".r
+    val lines = body.linesIterator.toList
+    lines.sliding(3, 3).map {
+      case List(Help(h, _), Type(t, kind), Sample(n, v)) if h == n && t == n =>
+        n -> (kind, v.toDouble)
+      case other => fail(s"malformed exposition block: $other")
+    }.toMap.ensuring(_.size * 3 == lines.length, body)
+  }
+
   test("metrics endpoint serves gauges in Prometheus text format") {
     Metrics.reset()
+    // the monotonic series are counters, every other one a gauge
+    val counters = Seq("total_events", "malformed_frames",
+      FrameTransport.ReconnectsMetric, "ess_dropped_frames",
+      graft.streaming.FilePublisher.CorruptLinesMetric,
+      graft.streaming.AmqpConnections.DialsMetric)
+    val gauges = Seq("last_event_time", "running_queries",
+      FrameTransport.StatusGauge, FrameTransport.OutageGauge,
+      FrameTransport.OutageSinceGauge)
+    (counters ++ gauges).zipWithIndex.foreach { case (n, i) =>
+      Metrics.set(n, i.toDouble) }
     Metrics.set("total_events", 42.0)
     Metrics.set("last_event_time", 1700000000.0)
     val http = new MetricsHttp(0) // ephemeral port
@@ -28,8 +53,14 @@ class MetricsHttpSpec extends AnyFunSuite {
         HttpResponse.BodyHandlers.ofString())
       assert(resp.statusCode() == 200)
       assert(resp.headers().firstValue("Content-Type").get.contains("text/plain"))
-      assert(resp.body().contains("graft_total_events 42.0"))
-      assert(resp.body().contains("# TYPE graft_last_event_time gauge"))
+      val body = resp.body()
+      // sample lines keep their `graft_<name> <double>` form
+      assert(body.linesIterator.contains("graft_total_events 42.0"), body)
+      assert(body.linesIterator.contains("graft_last_event_time 1.7E9"), body)
+      val series = parseExposition(body)
+      val expected = counters.map(n => s"graft_$n" -> "counter") ++
+        gauges.map(n => s"graft_$n" -> "gauge")
+      assert(series.map { case (n, (t, _)) => n -> t } == expected.toMap, body)
     } finally http.close()
   }
 

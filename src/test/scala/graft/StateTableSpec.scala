@@ -42,6 +42,31 @@ class StateTableSpec extends AnyFunSuite {
     table.merge(spark, Seq(AlertUpdate("17-1", "live", 1, 17, 1000.0)).toDF())
     assert(table.snapshot(spark).count() == 0,
       "tombstone must outrank the older live update")
+    // the same race inside ONE batch, with more duplicate ids: the delta
+    // segment keeps every row, and both reads and the compaction that
+    // folds it into a base equal the last-writer-wins fold
+    val oneDir = Files.createTempDirectory("alert_table3b").toString
+    val one = new AlertStateTable(oneDir, compactEvery = 2)
+    val batch = Seq(AlertUpdate("17-1", "removed", 2, 17, 2000.0),
+      AlertUpdate("17-1", "live", 1, 17, 1000.0),
+      AlertUpdate("19-2", "live", 3, 19, 1500.0),
+      AlertUpdate("19-2", "live", 4, 19, 1500.0),
+      AlertUpdate("13-9", "live", 5, 13, 3000.0),
+      AlertUpdate("13-9", "expired", 5, 13, 3000.0))
+    // newest (timestamp, eventId) per id; a non-live status wins a dead tie
+    def fold(us: Seq[AlertUpdate]): Set[AlertUpdate] =
+      us.groupBy(_.id).values.map(_.maxBy(u =>
+        (u.timestamp, u.eventId, if (u.status == "live") 0 else 1))).toSet
+    def rows = one.raw(spark).as[AlertUpdate].collect().toSet
+    def segRows = spark.read.parquet(s"$oneDir/${one.segmentDirs.last}").count()
+    one.merge(spark, batch.toDF())
+    assert(segRows == batch.length)
+    assert(rows == fold(batch))
+    val later = AlertUpdate("11-4", "live", 7, 11, 4000.0)
+    one.merge(spark, Seq(later).toDF())
+    assert(one.segmentDirs.length == 1 && one.segmentDirs.head.endsWith("b"))
+    assert(segRows == 4)
+    assert(rows == fold(batch :+ later))
   }
 
   test("merge cost scales with the batch, not the table") {
@@ -207,5 +232,42 @@ class StateTableSpec extends AnyFunSuite {
     val second = table.snapshot(spark).collect().map(_.toString).sorted
     assert(first.sameElements(second))
     assert(first.length == 1)
+    // an empty batch is a no-op too: no version, no segment, no orphan
+    val before = layout(table, dir)
+    table.merge(spark, Seq.empty[AlertUpdate].toDF())
+    assert(layout(table, dir) == before)
+  }
+
+  /** (versions, segmentDirs, every `s*` directory on disk). */
+  private type Layout = (Seq[String], Seq[String], Seq[String])
+  private def layout(table: AlertStateTable, dir: String): Layout =
+    (table.versions, table.segmentDirs,
+      new java.io.File(dir).list().filter(_.startsWith("s")).sorted.toSeq)
+
+  test("a no-data watermark batch from the sink leaves the table untouched") {
+    val dir = Files.createTempDirectory("alert_table_nodata").toString
+    val layouts = scala.collection.mutable.ArrayBuffer.empty[(Layout, Layout)]
+    val table = new AlertStateTable(dir) {
+      override def merge(s: org.apache.spark.sql.SparkSession,
+          updates: org.apache.spark.sql.DataFrame): Unit = {
+        val before = layout(this, dir)
+        super.merge(s, updates)
+        layouts += ((before, layout(this, dir)))
+      }
+    }
+    val mem = MemoryStream[MetagameEvent](spark)
+    mem.addData(Seq(ev("17-1", "started", 1000), ev("19-2", "started", 1100)))
+    // TTL on: the watermark advance schedules a no-data batch, whose
+    // update set is empty (nothing is old enough to expire)
+    val q = AlertStateTable.sink(mem.toDS(), table, ttlSeconds = Some(5400L))
+      .start()
+    try q.awaitTermination() finally q.stop()
+    val inputs = q.recentProgress.toSeq.map(_.numInputRows)
+    assert(inputs == Seq(2L, 0L), s"expected a data then a no-data batch: $inputs")
+    assert(layouts.length == 2)
+    assert(layouts(0)._1 != layouts(0)._2, "the data batch must add a version")
+    assert(layouts(1)._1 == layouts(1)._2,
+      s"the no-data batch changed the table: ${layouts(1)}")
+    assert(table.snapshot(spark).count() == 2)
   }
 }

@@ -1,8 +1,14 @@
 #!/usr/bin/env bash
-# Full local gate: compile, specs, oracle verify at sf0.01, bench at sf0.1.
+# Full local gate: compile, specs, the service-path benchmark workloads,
+# oracle verify at sf0.01, bench at sf0.1.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch compile test
+# the service path end to end: each run exits non-zero when its output
+# check fails, which fails this gate (set -e)
+for w in alert_live alert_bulk; do
+  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 20 --trace 0
+done
 OUT=$(mktemp -d)
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT"
 python3 tools/verify_local.py /root/testdata/sf0.01 "$OUT"
