@@ -47,7 +47,10 @@ object Tables {
   *
   * Local mode is a stand-in for a real cluster: shuffle partitions sized to
   * cores (not the 200 default), AQE on so skewed shuffles re-plan at runtime
-  * exactly as they would on a 1000-executor cluster.
+  * exactly as they would on a 1000-executor cluster. The local filesystem
+  * is replaced by [[graft.io.NioLocalFileSystem]] / [[graft.io.NioLocalFs]]:
+  * without libhadoop, Hadoop's own starts a `chmod` or `readlink` process
+  * on every checkpoint, state-store and parquet file create or rename.
   */
 object GraftSession {
   def tune(b: SparkSession.Builder, cores: String): SparkSession.Builder = b
@@ -59,6 +62,10 @@ object GraftSession {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     .config("spark.ui.enabled", "false")
+    .config("spark.hadoop.fs.file.impl",
+      classOf[graft.io.NioLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[graft.io.NioLocalFs].getName)
 
   def local(cores: Int = 4): SparkSession = {
     val s = tune(SparkSession.builder().master(s"local[$cores]")

@@ -21,6 +21,8 @@ import graft.model.MetagameEvent
   * | `PURGE_STALE_ALERTS`   | TTL purge gate                   | `true` |
   * | `ALERT_TTL_SECONDS`    | 5400 s purge horizon             | `5400` |
   * | `STATE_TABLE_PATH`     | Mongo alerts collection          | `/tmp/graft_alerts` |
+  * | `METRICS_PORT`         | `METRICS_PORT`: port of `/metrics` ([[MetricsHttp.fromEnv]]) | `8000` |
+  * | `SPARK_GRAFT_CPUS`     | — (cores of the local Spark session) | `4` |
   *
   * Boolean envs are parsed properly (the reference string-compares
   * `== 'True'`, a quirk not worth preserving).

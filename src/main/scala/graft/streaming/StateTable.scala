@@ -85,9 +85,16 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       AlertStateTable.schema)
 
+  /** Segment rows as written, read with the table's schema: inferring it
+    * would launch a footer-reading job per read.
+    */
+  private def readRows(spark: SparkSession, segs: Seq[String]): DataFrame =
+    spark.read.schema(AlertStateTable.schema)
+      .parquet(segs.map(s => s"$path/$s"): _*)
+
   private def readSegments(spark: SparkSession, segs: Seq[String]): DataFrame =
     if (segs.isEmpty) empty(spark)
-    else resolve(spark.read.parquet(segs.map(s => s"$path/$s"): _*))
+    else resolve(readRows(spark, segs))
 
   /** All retained rows — live entries and tombstones, LWW-resolved. */
   def raw(spark: SparkSession): DataFrame =
@@ -146,9 +153,7 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
         val newSegs = toSegs.filterNot(fromSegs.contains)
         if (newSegs.isEmpty) return changeFrame(spark, before0.limit(0),
           after0.limit(0))
-        val cand = spark.read
-          .parquet(newSegs.map(s => s"$path/$s"): _*)
-          .select(col("id")).distinct()
+        val cand = readRows(spark, newSegs).select(col("id")).distinct()
         (before0.join(cand, Seq("id"), "left_semi"),
           after0.join(cand, Seq("id"), "left_semi"))
       } else (before0, after0)
@@ -257,7 +262,7 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
         // interval (a range-predicate reader can skip files via parquet
         // min/max on id). Ranging BEFORE the resolve lets its window
         // reuse the range partitioning: one shuffle, not two.
-        resolve(spark.read.parquet((segs :+ delta).map(s => s"$path/$s"): _*)
+        resolve(readRows(spark, segs :+ delta)
           .repartitionByRange(compactPartitions, col("id")))
           .write.mode(SaveMode.Overwrite).parquet(s"$path/$base")
         syncSegment(base)
