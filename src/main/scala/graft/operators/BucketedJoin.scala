@@ -29,40 +29,25 @@ object BucketedJoin {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private[operators] val Buckets = 8
+  private val Buckets = 8
 
-  /** The artifact holds BOTH bucketed facts, so the key must fingerprint
-    * both sources: keying on orders alone would keep `isReady` true when
-    * only lineitem.parquet is regenerated and silently adopt a stale
-    * bucketed lineitem. The lineitem stamp rides in the layout slot so
-    * either table's change rotates the key.
+  /** The bucketed orders/lineitem pair. The artifact holds BOTH facts,
+    * so the key fingerprints both sources: keying on orders alone would
+    * adopt a stale bucketed lineitem after only lineitem.parquet is
+    * regenerated.
     */
-  private def key(d: String): String =
-    SharedArtifacts.fingerprint(d, "orders.parquet",
-      s"bktjoin:v2:$Buckets:" +
-        SharedArtifacts.fingerprint(d, "lineitem.parquet"))
-
-  /** Build-or-adopt the bucketed orders/lineitem pair; returns the two
-    * catalog tables.
-    */
-  private def bucketedFacts(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    val ds = key(d)
+  private[graft] lazy val bucketedFacts = Materialized.shared(
+      "bkt_shared_build", "bktjoin_", s"bktjoin:v2:$Buckets:",
+      "orders.parquet", "lineitem.parquet") { (s, base) =>
+    val ds = base.getFileName.toString.stripPrefix("bktjoin_")
     val oTbl = s"graft_bkt_orders_$ds"
     val lTbl = s"graft_bkt_lineitem_$ds"
-    val base = SharedArtifacts.root.resolve(s"bktjoin_$ds")
-    if (!s.catalog.tableExists(oTbl) || !s.catalog.tableExists(lTbl)) {
-      if (!SharedArtifacts.isReady(base)) build(s, d, base)
-      register(s, oTbl, base.resolve("orders"), "o_orderkey")
-      register(s, lTbl, base.resolve("lineitem"), "l_orderkey")
-    }
-    SharedArtifacts.markUsed(base)
+    Materialized.registerBucketed(s, oTbl, base.resolve("orders"),
+      "o_orderkey", Buckets)
+    Materialized.registerBucketed(s, lTbl, base.resolve("lineitem"),
+      "l_orderkey", Buckets)
     (s.table(oTbl), s.table(lTbl))
-  }
-
-  private def build(s: SparkSession, d: String,
-      base: java.nio.file.Path): Unit = {
-    val staging = SharedArtifacts.stagingFor(base)
+  } { (s, d, staging) =>
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val oTmp = s"graft_build_bo_$attempt"
     val lTmp = s"graft_build_bl_$attempt"
@@ -77,31 +62,10 @@ object BucketedJoin {
         .sortBy("l_orderkey")
         .option("path", staging.resolve("lineitem").toString)
         .saveAsTable(lTmp)
-      SharedArtifacts.publish(staging, base)
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $oTmp")
       s.sql(s"DROP TABLE IF EXISTS $lTmp")
     }
-  }
-
-  private def register(s: SparkSession, name: String,
-      path: java.nio.file.Path, bucketCol: String): Unit =
-    if (!s.catalog.tableExists(name)) {
-      val ddl = s.read.parquet(path.toString).schema.toDDL
-      s.sql(s"""CREATE TABLE IF NOT EXISTS `$name` ($ddl) USING PARQUET
-               |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
-               |INTO $Buckets BUCKETS
-               |LOCATION '${path.toString}'""".stripMargin)
-    }
-
-  /** Bench visibility hook — charge the one-time bucketed write to a
-    * named line item; returns whether the build was fresh.
-    */
-  def ensureBucketedFacts(s: SparkSession, d: String): Boolean = {
-    val existed =
-      SharedArtifacts.isReady(SharedArtifacts.root.resolve(s"bktjoin_${key(d)}"))
-    bucketedFacts(s, d)
-    !existed
   }
 
   /** The zero-exchange join itself: both sides read bucket-aligned, the

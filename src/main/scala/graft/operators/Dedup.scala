@@ -155,7 +155,7 @@ object Dedup {
     * the identical banding — the IVM identity is about the index, not a
     * reimplemented join.
     */
-  private[graft] def bandPairs(sig: DataFrame): DataFrame = {
+  private[operators] def bandPairs(sig: DataFrame): DataFrame = {
     val bands = bandKeys(sig)
     val l = bands.select(col("doc_id").as("a_id"), col("band"), col("key"))
     val r = bands.select(col("doc_id").as("b_id"), col("band"), col("key"))
@@ -164,12 +164,12 @@ object Dedup {
       .agg(count(lit(1)).as("n_bands"))
   }
 
-  /** LSH candidates read the SHARED signature table ([[sharedTables]]) —
+  /** LSH candidates read the SHARED signature table ([[sigTables]]) —
     * the signatures are computed once per dataset version and every
     * dedup job (candidates, verified pipeline) reuses them. The h-column
     * projection means only 8 small string columns are scanned.
     */
-  private val minhashLsh: Q = (s, d) => bandPairs(sharedTables(s, d)._2)
+  private val minhashLsh: Q = (s, d) => bandPairs(sigTables(s, d)._2)
 
   /** The LSH candidate pairs off the shared signature table — exposed
     * for graph-analytics consumers ([[GraphOps]]) so they amortize the
@@ -193,7 +193,7 @@ object Dedup {
     * derives it (the full LSH SQL + the endpoint predicate).
     */
   private val minhashIncremental: Q = (s, d) => {
-    val bands = bandKeys(sharedTables(s, d)._2)
+    val bands = bandKeys(sigTables(s, d)._2)
     val fresh = bands.filter(pmod(col("doc_id"), lit(10)) === 7)
       .select(col("doc_id").as("n_id"), col("band"), col("key"))
     val corpus = bands.select(col("doc_id").as("c_id"), col("band"), col("key"))
@@ -407,14 +407,6 @@ object Dedup {
     * these are exactly the shared signature/shingle tables a 100 TB
     * dedup pipeline maintains incrementally.
     */
-  /** Fingerprint of a dataset's `documents` table: path plus every data
-    * file's (name, mtime, size). Keys the materialized shingle/signature
-    * tables — a changed source yields a new key, so reuse can never
-    * serve stale derived data.
-    */
-  private[graft] def datasetKey(d: String): String =
-    SharedArtifacts.fingerprint(d, "documents.parquet", sharedLayout)
-
   /** Bucket count for the shared tables: matches the 32 cores the bench
     * runs on — a 16-bucket layout caps every bucketed-read stage at half
     * the machine. On a cluster this is sized to target-parallelism, not
@@ -425,7 +417,7 @@ object Dedup {
   /** Layout key of the shared tables: every parameter that shapes the
     * written files (bucket count, minhash count, band count, shingle
     * width), plus an algorithm-version token to bump on any hashing
-    * change that leaves the counts alone. Part of [[datasetKey]] so a
+    * change that leaves the counts alone. Part of the key so a
     * parameter change can never adopt an artifact built under the old
     * layout — e.g. declaring a 16-bucket table INTO 32 BUCKETS would
     * silently corrupt every bucketed join over it.
@@ -433,51 +425,31 @@ object Dedup {
   private[operators] def sharedLayout: String =
     s"mh:v1:b$Buckets:n$NumHashes:bd$Bands:w$ShingleWidth"
 
-  /** Build-or-reuse the SHARED materialized dedup tables for a dataset:
-    * `(shingles, signatures)` — shingles exploded+hashed exactly once,
-    * signatures (+ per-doc shingle count) aggregated exactly once, both
-    * bucketed+sorted by doc_id. Built once per (dataset, content
-    * version) and reused by every dedup query — the maintained signature
-    * table a 100 TB dedup pipeline shares across jobs, not per-query
-    * scratch.
+  /** The SHARED materialized dedup tables for a dataset: `(shingles,
+    * signatures)` — shingles exploded+hashed exactly once, signatures
+    * (+ per-doc shingle count) aggregated exactly once, both
+    * bucketed+sorted by doc_id — the maintained signature table a
+    * 100 TB dedup pipeline shares across jobs, not per-query scratch.
+    * Keyed on the documents table (the directory name IS the key).
+    * Bucketed writes need transient catalog names; the EXTERNAL drop
+    * afterwards leaves the staged files alone.
     *
-    * Reuse is by PATH EXISTENCE, not catalog lookup: the files live
-    * under a content-fingerprint key and carry a `_READY` marker, so a
-    * FRESH SparkSession (a new job against the same dataset — the
-    * 100 TB cross-job story) finds the finished files and re-registers
-    * external bucketed tables over them without rewriting anything
-    * (spec-asserted with a second session). Builders stage into a
-    * private directory and publish with one atomic rename — a
-    * concurrent builder loses the rename and adopts the winner's files,
-    * and a crashed build leaves no marker, so readers can never see a
-    * torn table. Rebuilds happen only when the fingerprint says the
-    * source changed (fresh key), never per invocation or per session.
+    * Reuse is by PATH, not catalog lookup: a FRESH SparkSession (a new
+    * job against the same dataset) finds the published files and
+    * re-registers external bucketed tables over them without rewriting
+    * anything (spec-asserted with a dropped catalog).
     */
-  private[graft] def sharedTables(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val ds = datasetKey(d)
-    val shTbl = s"graft_mh_shingles_$ds"
-    val sigTbl = s"graft_mh_sig_$ds"
-    val base = SharedArtifacts.root.resolve(ds)
-    if (!s.catalog.tableExists(shTbl) || !s.catalog.tableExists(sigTbl)) {
-      if (!SharedArtifacts.isReady(base)) buildShared(s, d, base)
-      registerBucketed(s, shTbl, base.resolve("shingles"))
-      registerBucketed(s, sigTbl, base.resolve("signatures"))
-    }
-    // refresh the stale-sweep lease on EVERY use, not just on build —
-    // an artifact adopted daily but never rebuilt must not age past
-    // sweepStale's window while live tables point at its files
-    SharedArtifacts.markUsed(base)
+  private[graft] lazy val sigTables = Materialized.shared(
+      "dedup_shared_build", "", sharedLayout, "documents.parquet") {
+      (s, base) =>
+    val shTbl = s"graft_mh_shingles_${base.getFileName}"
+    val sigTbl = s"graft_mh_sig_${base.getFileName}"
+    Materialized.registerBucketed(s, shTbl, base.resolve("shingles"),
+      "doc_id", Buckets)
+    Materialized.registerBucketed(s, sigTbl, base.resolve("signatures"),
+      "doc_id", Buckets)
     (s.table(shTbl), s.table(sigTbl))
-  }
-
-  /** Materialize shingles+signatures via the [[SharedArtifacts]]
-    * staging+publish protocol. Bucketed writes need transient catalog
-    * names; the EXTERNAL drop afterwards leaves the published files
-    * alone.
-    */
-  private def buildShared(s: SparkSession, d: String,
-      base: java.nio.file.Path): Unit = {
-    val staging = SharedArtifacts.stagingFor(base)
+  } { (s, d, staging) =>
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val shTmp = s"graft_build_sh_$attempt"
     val sigTmp = s"graft_build_sig_$attempt"
@@ -493,52 +465,24 @@ object Dedup {
         .write.mode("overwrite").bucketBy(Buckets, "doc_id").sortBy("doc_id")
         .option("path", staging.resolve("signatures").toString)
         .saveAsTable(sigTmp)
-      SharedArtifacts.publish(staging, base)
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $shTmp")
       s.sql(s"DROP TABLE IF EXISTS $sigTmp")
     }
   }
 
-  /** Register an EXTERNAL bucketed table over already-written files —
-    * how a fresh session adopts a prior job's materialization. The
-    * schema comes from the parquet footers, so registration can never
-    * drift from what was written.
-    */
-  private def registerBucketed(s: SparkSession, name: String,
-      path: java.nio.file.Path): Unit =
-    if (!s.catalog.tableExists(name)) {
-      val ddl = s.read.parquet(path.toString).schema.toDDL
-      s.sql(s"""CREATE TABLE IF NOT EXISTS `$name` ($ddl) USING PARQUET
-               |CLUSTERED BY (doc_id) SORTED BY (doc_id)
-               |INTO $Buckets BUCKETS
-               |LOCATION '${path.toString}'""".stripMargin)
-    }
-
   /** The shared materialized shingle table — exposed for corpus-level
     * consumers (the contamination check) so they amortize the same
     * materialization every dedup job uses.
     */
   private[operators] def sharedShingles(s: SparkSession, d: String): DataFrame =
-    sharedTables(s, d)._1
+    sigTables(s, d)._1
 
   /** The shingle CTE as SQL, for oracles composing over shingles. */
   private[operators] def shingleCteSql: String = shingleCte
 
-  /** Eagerly build (or adopt) the shared tables for `d`, returning true
-    * if this call did the build — the bench's hook for charging the
-    * materialization cost to a visible line item instead of whichever
-    * dedup query happens to touch the tables first.
-    */
-  def ensureSharedTables(s: SparkSession, d: String): Boolean = {
-    val existed =
-      SharedArtifacts.isReady(SharedArtifacts.root.resolve(datasetKey(d)))
-    sharedTables(s, d)
-    !existed
-  }
-
   private val minhashVerified: Q = (s, d) => {
-    val (sh, sigN) = sharedTables(s, d)
+    val (sh, sigN) = sigTables(s, d)
     verifiedPairsOn(sh, sigN)
   }
 
@@ -560,7 +504,7 @@ object Dedup {
     * candidates come from, not a reimplemented verifier). `sh`/`sizes`
     * must cover both endpoints of every candidate.
     */
-  private[graft] def verifyCandidates(cand: DataFrame, sh: DataFrame,
+  private def verifyCandidates(cand: DataFrame, sh: DataFrame,
       sizes: DataFrame): DataFrame = {
     // the b-side closes on the (b_id, shingle) EQUI-join — shingle in
     // the join key, not a post-join filter, so volume is O(|A|) probes
@@ -611,7 +555,7 @@ object Dedup {
     * construction.
     */
   private val decontamLsh: Q = (s, d) => {
-    val (sh, sigN) = sharedTables(s, d)
+    val (sh, sigN) = sigTables(s, d)
     val bands = bandKeys(sigN)
     val isEval = col("doc_id") % DecontamEvalMod === DecontamEvalRem
     val e = bands.filter(isEval)
@@ -656,7 +600,7 @@ object Dedup {
     * documents, no all-pairs anywhere.
     */
   private val minhashEst: Q = (s, d) => {
-    val (sh, sigN) = sharedTables(s, d)
+    val (sh, sigN) = sigTables(s, d)
     val cand = bandPairs(sigN).select(col("a_id"), col("b_id"))
     val ha = sigN.select(col("doc_id").as("a_id") +:
       (0 until NumHashes).map(i => col(s"h$i").as(s"ha$i")): _*)
@@ -694,17 +638,6 @@ object Dedup {
     */
   private val components: Q = (s, d) => componentsTable(s, d)
 
-  /** The `cc:v3` layout tag pins the component-label artifact to the
-    * minhash layout it was clustered under (`mh:v1` banding feeds the
-    * verified pairs) — bump BOTH when the LSH parameters change, or an
-    * old clustering would be served over new candidate semantics.
-    * (v3 = the exact-dup pre-collapsed builder; output is identical to
-    * v2 — spec-asserted — but the bump forces every environment through
-    * the new build path once.)
-    */
-  private def componentsKey(d: String): String =
-    SharedArtifacts.fingerprint(d, "documents.parquet", "cc:v3:mh:v1")
-
   /** The shared COMPONENT-LABEL artifact: `(doc_id, component)` for
     * every doc in any verified near-dup pair — built once per dataset
     * version by the iterative [[connectedComponentsWithRounds]] loop
@@ -717,7 +650,7 @@ object Dedup {
     * sf0.1 for three recomputations of one result.
     */
   private def componentsTable(s: SparkSession, d: String): DataFrame =
-    ccArtifact(s, d, "labels")
+    s.read.parquet(clusters(s, d).resolve("labels").toString)
 
   /** The component-label face of the shared artifact, for graph
     * consumers ([[GraphOps]]' modularity report).
@@ -734,9 +667,9 @@ object Dedup {
     * from scratch every gate run — it is the oracle-checked derivation
     * the artifact's builder shares code with.
     */
-  private[graft] def verifiedPairsTable(s: SparkSession, d: String)
+  private[operators] def verifiedPairsTable(s: SparkSession, d: String)
       : DataFrame =
-    ccArtifact(s, d, "pairs")
+    s.read.parquet(clusters(s, d).resolve("pairs").toString)
 
   /** EXACT-DUP PRE-COLLAPSED clustering build — the shape that removed
     * the one super-linear item from the 100× rung (`cc_shared_build`,
@@ -771,7 +704,7 @@ object Dedup {
     */
   private[graft] def ccBuildFrames(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    val (sh, sigN) = sharedTables(s, d)
+    val (sh, sigN) = sigTables(s, d)
     val keyed = T(s, d, "documents")
       .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
     val groups = keyed.groupBy(col("h"))
@@ -819,37 +752,26 @@ object Dedup {
     (pairs, labels)
   }
 
-  /** Build-or-adopt the clustering artifact and read one face of it:
-    * the verified pair list and the component labels are ONE build
-    * (labels are derived from pairs), published atomically together.
-    * The builder is the pre-collapsed [[ccBuildFrames]]; the labels are
-    * written from the staged pairs' frame lineage, both faces in one
-    * staging → one atomic publish.
+  /** The clustering artifact: the verified pair list and the component
+    * labels are ONE build (labels are derived from pairs), published
+    * atomically together. The builder is the pre-collapsed
+    * [[ccBuildFrames]]; the labels are written from the staged pairs'
+    * frame lineage. The `cc:v3` layout tag pins the artifact to the
+    * minhash layout it was clustered under (`mh:v1` banding feeds the
+    * verified pairs) — bump BOTH when the LSH parameters change, or an
+    * old clustering would be served over new candidate semantics.
+    * (v3 = the exact-dup pre-collapsed builder; output is identical to
+    * v2 — spec-asserted — but the bump forces every environment through
+    * the new build path once.)
     */
-  private def ccArtifact(s: SparkSession, d: String,
-      face: String): DataFrame = {
-    val base = SharedArtifacts.root.resolve(s"cc_${componentsKey(d)}")
-    if (!SharedArtifacts.isReady(base)) {
-      val staging = SharedArtifacts.stagingFor(base)
-      val (pairs, labels) = ccBuildFrames(s, d)
-      pairs.write.mode("overwrite")
-        .parquet(staging.resolve("pairs").toString)
-      labels.write.mode("overwrite")
-        .parquet(staging.resolve("labels").toString)
-      SharedArtifacts.publish(staging, base)
-    }
-    SharedArtifacts.markUsed(base)
-    s.read.parquet(base.resolve(face).toString)
-  }
-
-  /** Eagerly build (or adopt) the shared component-label artifact —
-    * the bench's visibility hook, like `ensureSharedTables`.
-    */
-  def ensureComponentsArtifact(s: SparkSession, d: String): Boolean = {
-    val existed = SharedArtifacts.isReady(
-      SharedArtifacts.root.resolve(s"cc_${componentsKey(d)}"))
-    componentsTable(s, d)
-    !existed
+  private[graft] lazy val clusters = Materialized.shared("cc_shared_build",
+      "cc_", "cc:v3:mh:v1", "documents.parquet")(Materialized.dir) {
+      (s, d, staging) =>
+    val (pairs, labels) = ccBuildFrames(s, d)
+    pairs.write.mode("overwrite")
+      .parquet(staging.resolve("pairs").toString)
+    labels.write.mode("overwrite")
+      .parquet(staging.resolve("labels").toString)
   }
 
   // ---- incremental clustering maintenance (dedup_cc_ivm) ------------------
@@ -990,9 +912,9 @@ object Dedup {
     * [[minhashSig]] frame. The adoption path for replay base builds
     * that would otherwise re-shingle the resident corpus.
     */
-  private[graft] def sharedSigSlice(s: SparkSession, d: String,
+  private[operators] def sharedSigSlice(s: SparkSession, d: String,
       ids: DataFrame): DataFrame =
-    sharedTables(s, d)._2.join(ids, Seq("doc_id"), "left_semi").drop("n")
+    sigTables(s, d)._2.join(ids, Seq("doc_id"), "left_semi").drop("n")
 
   /** [[ccIvmBase]] with the signing REUSED from the shared bucketed
     * tables — the registry face's base path: the resident slice's
@@ -1006,7 +928,7 @@ object Dedup {
     */
   private[graft] def ccIvmBaseFromShared(s: SparkSession, d: String,
       residentIds: DataFrame, state: java.nio.file.Path): Unit = {
-    val (sh, sigN) = sharedTables(s, d)
+    val (sh, sigN) = sigTables(s, d)
     val shSlice = sh.join(residentIds, Seq("doc_id"), "left_semi")
     // base LABELS: connected components over the resident slice of the
     // shared verified-pairs artifact — never a re-band + re-verify of
@@ -1326,7 +1248,7 @@ object Dedup {
 
   /** The maintained shared tables, for rung-scale maintenance timing. */
   private[graft] def maintainedStores(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = sharedTables(s, d)
+      : (DataFrame, DataFrame) = sigTables(s, d)
 
   /** The clustering artifact's labels, for rung-scale maintenance
     * timing (the resident label store the per-batch fold probes).
@@ -1486,13 +1408,13 @@ object Dedup {
     * closes with ONE equi-join on `(b_id, shingle)` — volume
     * O(Σ|A| over candidate pairs), all hash joins. Shingles AND the
     * per-doc set sizes come straight from the SHARED bucketed artifact
-    * tables ([[sharedTables]] — sizes were aggregated into the
+    * tables ([[sigTables]] — sizes were aggregated into the
     * signature build), so this query re-scans neither `documents` nor
     * the shingle set: measured 3.0 s → 1.8 s at sf0.1 vs recomputing
     * both.
     */
   private val containmentQ: Q = (s, d) => {
-    val (sh, sigs) = sharedTables(s, d)
+    val (sh, sigs) = sigTables(s, d)
     val sizes = sigs.select(col("doc_id"), col("n").cast("long").as("n_sh"))
     val pairs = lshPairs(s, d).select(col("a_id"), col("b_id"))
     val common = pairs
@@ -1871,7 +1793,7 @@ object Dedup {
     * visibility is the point of the sweep.
     */
   private val bandSweep: Q = (s, d) => {
-    val sig = sharedTables(s, d)._2
+    val sig = sigTables(s, d)._2
     val keyStructs = for {
       (b, r) <- BandConfigs
       band <- 0 until b

@@ -213,27 +213,11 @@ object GraphOps {
     * both the forest face and the single-linkage clusters face. The
     * layout tag pins the kNN geometry + the weight rule.
     */
-  private def msfBase(d: String): java.nio.file.Path =
-    SharedArtifacts.root.resolve("msf_" +
-      SharedArtifacts.fingerprint(d, "embeddings.parquet", "msf:v1:knn3:w1e4"))
-
-  private[graft] def msfShared(s: SparkSession, d: String): DataFrame = {
-    val base = msfBase(d)
-    if (!SharedArtifacts.isReady(base)) {
-      val staging = SharedArtifacts.stagingFor(base)
-      boruvkaMsf(mstEdges(s, d)).write.mode("overwrite")
-        .parquet(staging.resolve("msf").toString)
-      SharedArtifacts.publish(staging, base)
-    }
-    SharedArtifacts.markUsed(base)
-    s.read.parquet(base.resolve("msf").toString)
-  }
-
-  /** Bench visibility hook, like the other ensure* builds. */
-  def ensureMsfArtifact(s: SparkSession, d: String): Boolean = {
-    val existed = SharedArtifacts.isReady(msfBase(d))
-    msfShared(s, d).queryExecution
-    !existed
+  private[graft] lazy val msfShared = Materialized.shared("msf_shared_build",
+      "msf_", "msf:v1:knn3:w1e4", "embeddings.parquet")(
+      Materialized.parquet("msf")) { (s, d, staging) =>
+    boruvkaMsf(mstEdges(s, d)).write.mode("overwrite")
+      .parquet(staging.resolve("msf").toString)
   }
 
   private val mst: Q = (s, d) => msfShared(s, d)

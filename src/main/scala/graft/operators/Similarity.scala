@@ -392,36 +392,26 @@ object Similarity {
     * any session or process, adopts the files: an ANN index at 100 TB
     * is maintained infrastructure, not a per-query recomputation. The
     * inverted lists are re-derived from the WRITTEN centroids, so index
-    * and quantizer can never drift.
+    * and quantizer can never drift. The layout tag (seed stride +
+    * algorithm version) keeps a parameter change from adopting an index
+    * trained under the old shape.
     */
-  /** Key of the trained index: source content fingerprint salted with
-    * the training layout (seed stride + algorithm version), so a
-    * parameter change can never adopt an index trained under the old
-    * shape.
-    */
-  private def ivfKey(d: String): String =
-    SharedArtifacts.fingerprint(d, "embeddings.parquet",
-      s"ivf:v2:seed$IvfSeedStep:cap$IvfCentroidCap")
-
-  private def ivfArtifacts(s: SparkSession, d: String,
-      e: DataFrame): (DataFrame, DataFrame) = {
-    val base = SharedArtifacts.root.resolve(s"ivf_${ivfKey(d)}")
-    if (!SharedArtifacts.isReady(base)) {
-      val staging = SharedArtifacts.stagingFor(base)
-      // stride-capped seeds + one Lloyd step ([[ivfTrainOn]]); the
-      // inverted lists re-derive from the WRITTEN centroids, so index
-      // and quantizer can never drift
-      ivfTrainOn(e)
-        .write.mode("overwrite").parquet(staging.resolve("centroids").toString)
-      nearestCentroid(e,
-        s.read.parquet(staging.resolve("centroids").toString))
-        .write.mode("overwrite").parquet(staging.resolve("lists").toString)
-      SharedArtifacts.publish(staging, base)
-    }
-    // refresh the stale-sweep lease on every adoption, not just builds
-    SharedArtifacts.markUsed(base)
-    (s.read.parquet(base.resolve("centroids").toString),
-      s.read.parquet(base.resolve("lists").toString))
+  private[graft] lazy val ivfArtifacts = Materialized.shared(
+      "ivf_shared_build", "ivf_", s"ivf:v2:seed$IvfSeedStep:cap$IvfCentroidCap",
+      "embeddings.parquet")((s, base) =>
+      (s.read.parquet(base.resolve("centroids").toString),
+        s.read.parquet(base.resolve("lists").toString))) {
+      (s, d, staging) =>
+    val e = T(s, d, "embeddings")
+      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      .withColumn("nrm", norm2(col("v")))
+    // stride-capped seeds + one Lloyd step ([[ivfTrainOn]]); the
+    // inverted lists re-derive from the WRITTEN centroids, so index and
+    // quantizer can never drift
+    ivfTrainOn(e)
+      .write.mode("overwrite").parquet(staging.resolve("centroids").toString)
+    nearestCentroid(e, s.read.parquet(staging.resolve("centroids").toString))
+      .write.mode("overwrite").parquet(staging.resolve("lists").toString)
   }
 
   /** Train the IVF quantizer on an arbitrary `(vec_id, v)` frame —
@@ -451,26 +441,12 @@ object Similarity {
   private[graft] def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
     nearestCentroid(e, cents)
 
-  /** Eagerly train (or adopt) the shared IVF index for `d`, returning
-    * true if this call did the training — the bench's visibility hook,
-    * like [[Dedup.ensureSharedTables]].
-    */
-  def ensureIvfArtifacts(s: SparkSession, d: String): Boolean = {
-    val existed =
-      SharedArtifacts.isReady(SharedArtifacts.root.resolve(s"ivf_${ivfKey(d)}"))
-    val e = T(s, d, "embeddings")
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", norm2(col("v")))
-    ivfArtifacts(s, d, e)
-    !existed
-  }
-
   def ivfModel(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val e = T(s, d, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm", norm2(col("v")))
-    val (centroids, _) = ivfArtifacts(s, d, e)
+    val (centroids, _) = ivfArtifacts(s, d)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qn"))
@@ -486,7 +462,7 @@ object Similarity {
 
   private val annIvf: Q = (s, d) => {
     val (e, _, probes, q) = ivfModel(s, d)
-    val lists = ivfArtifacts(s, d, e)._2 // (vec_id, cid): inverted index
+    val lists = ivfArtifacts(s, d)._2 // (vec_id, cid): inverted index
     val candidates = lists
       .join(broadcast(probes), Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
@@ -556,7 +532,7 @@ object Similarity {
         explode(array(ProbeBudgets.map(lit(_)): _*)))
       .filter(col("pr") <= col("nprobe"))
       .select(col("nprobe"), col("q_id"), col("cid"))
-    val lists = ivfArtifacts(s, d, e)._2
+    val lists = ivfArtifacts(s, d)._2
     val candidates = lists.join(broadcast(probesR), Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("nprobe"), col("q_id"), col("vec_id"))
@@ -781,47 +757,30 @@ object Similarity {
     * three derived tables (`cb`, per-vector `codes`, query ADC `dt`),
     * so query faces never touch raw vectors.
     */
-  private def pqArtifactBase(d: String): java.nio.file.Path =
-    SharedArtifacts.root.resolve("pqcb_" +
-      SharedArtifacts.fingerprint(d, "embeddings.parquet",
-        s"pqcb:v3:K$PqK:step$PqSeedStep:it$PqIters:tc$PqTrainCap:m$PqSubspaces:j$PqSubDim"))
-
-  private def pqArtifacts(s: SparkSession, d: String): Unit = {
-    val base = pqArtifactBase(d)
-    if (!SharedArtifacts.isReady(base)) {
-      val staging = SharedArtifacts.stagingFor(base)
-      // el feeds every Lloyd round's assignment AND sums, plus the
-      // encode pass — pin it once for the build instead of re-exploding
-      // the embeddings per stage (and sub2 feeds both the codes and dt
-      // writes, so the encode is pinned too). REPARTITION first: the
-      // argmin is now a per-row interpreted array fold, so a gate-SF
-      // table that arrives as one parquet split would otherwise fold on
-      // ONE core (measured 56 s for the sf0.1 build vs ~12 s spread) —
-      // one bounded shuffle of the block rows buys full parallelism for
-      // all five assignment passes
-      val blocks = pqBlocks(T(s, d, "embeddings"))
-        .repartition(s.sparkContext.defaultParallelism).persist()
-      try {
-        val cb = pqTrain(blocks, PqSeedStep)
-        cb.write.mode("overwrite").parquet(staging.resolve("cb").toString)
-        val frozen = s.read.parquet(staging.resolve("cb").toString)
-        val (codes, dt) = pqFromCodebook(blocks, frozen)
-        codes.write.mode("overwrite")
-          .parquet(staging.resolve("codes").toString)
-        dt.write.mode("overwrite").parquet(staging.resolve("dt").toString)
-      } finally blocks.unpersist()
-      SharedArtifacts.publish(staging, base)
-    }
-    SharedArtifacts.markUsed(base)
-  }
-
-  /** Eagerly build (or adopt) the trained PQ codebook — the bench's
-    * visibility hook, like [[ensureKmeansArtifact]].
-    */
-  def ensurePqArtifact(s: SparkSession, d: String): Boolean = {
-    val existed = SharedArtifacts.isReady(pqArtifactBase(d))
-    pqArtifacts(s, d)
-    !existed
+  private[graft] lazy val pqCodebook = Materialized.shared("pq_shared_build",
+      "pqcb_", s"pqcb:v3:K$PqK:step$PqSeedStep:it$PqIters:tc$PqTrainCap:" +
+        s"m$PqSubspaces:j$PqSubDim", "embeddings.parquet")(
+      Materialized.dir) { (s, d, staging) =>
+    // el feeds every Lloyd round's assignment AND sums, plus the encode
+    // pass — pin it once for the build instead of re-exploding the
+    // embeddings per stage (and sub2 feeds both the codes and dt
+    // writes, so the encode is pinned too). REPARTITION first: the
+    // argmin is a per-row interpreted array fold, so a gate-SF table
+    // that arrives as one parquet split would otherwise fold on ONE
+    // core (measured 56 s for the sf0.1 build vs ~12 s spread) — one
+    // bounded shuffle of the block rows buys full parallelism for all
+    // five assignment passes
+    val blocks = pqBlocks(T(s, d, "embeddings"))
+      .repartition(s.sparkContext.defaultParallelism).persist()
+    try {
+      val cb = pqTrain(blocks, PqSeedStep)
+      cb.write.mode("overwrite").parquet(staging.resolve("cb").toString)
+      val frozen = s.read.parquet(staging.resolve("cb").toString)
+      val (codes, dt) = pqFromCodebook(blocks, frozen)
+      codes.write.mode("overwrite")
+        .parquet(staging.resolve("codes").toString)
+      dt.write.mode("overwrite").parquet(staging.resolve("dt").toString)
+    } finally blocks.unpersist()
   }
 
   /** Registry-face model: codes and query ADC tables adopted straight
@@ -830,8 +789,7 @@ object Similarity {
     */
   private def pqModelCached(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    pqArtifacts(s, d)
-    val base = pqArtifactBase(d)
+    val base = pqCodebook(s, d)
     (s.read.parquet(base.resolve("codes").toString),
       s.read.parquet(base.resolve("dt").toString))
   }
@@ -887,7 +845,7 @@ object Similarity {
     */
   private val annIvfPq: Q = (s, d) => {
     val (e, _, probes, _) = ivfModel(s, d)
-    val lists = ivfArtifacts(s, d, e)._2
+    val lists = ivfArtifacts(s, d)._2
     val cand = lists.join(broadcast(probes.select(col("q_id"), col("cid"))),
         Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
@@ -1006,37 +964,18 @@ object Similarity {
     * deterministic result). Layout key pins the seed stride and
     * iteration count — a parameter change can never adopt stale labels.
     */
-  private def kmAssignTable(s: SparkSession, d: String): DataFrame = {
-    val key = SharedArtifacts.fingerprint(d, "embeddings.parquet",
-      s"km:v2:seed$IvfSeedStep:cap$IvfCentroidCap:it$KmIters")
-    val base = SharedArtifacts.root.resolve(s"km_$key")
-    if (!SharedArtifacts.isReady(base)) {
-      val staging = SharedArtifacts.stagingFor(base)
-      val e = T(s, d, "embeddings")
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      kmeansAssign(e)
-        .write.mode("overwrite").parquet(staging.resolve("assign").toString)
-      SharedArtifacts.publish(staging, base)
-    }
-    SharedArtifacts.markUsed(base)
-    s.read.parquet(base.resolve("assign").toString)
-  }
-
-  /** Eagerly build (or adopt) the shared k-means assignment — the
-    * bench's visibility hook, like [[ensureMomentsArtifact]].
-    */
-  def ensureKmeansArtifact(s: SparkSession, d: String): Boolean = {
-    val key = SharedArtifacts.fingerprint(d, "embeddings.parquet",
-      s"km:v2:seed$IvfSeedStep:cap$IvfCentroidCap:it$KmIters")
-    val existed = SharedArtifacts.isReady(
-      SharedArtifacts.root.resolve(s"km_$key"))
-    kmAssignTable(s, d)
-    !existed
+  private[graft] lazy val kmAssign = Materialized.shared("km_shared_build",
+      "km_", s"km:v2:seed$IvfSeedStep:cap$IvfCentroidCap:it$KmIters",
+      "embeddings.parquet")(Materialized.parquet("assign")) {
+      (s, d, staging) =>
+    kmeansAssign(T(s, d, "embeddings")
+        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
+      .write.mode("overwrite").parquet(staging.resolve("assign").toString)
   }
 
   private val kmeansMix: Q = (s, d) => {
     val emb = T(s, d, "embeddings")
-    val af = kmAssignTable(s, d)
+    val af = kmAssign(s, d)
     val mix = af.join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
       .groupBy(col("cid"), col("label")).agg(count(lit(1)).as("n"))
     val byCid = Window.partitionBy(col("cid"))
@@ -1074,7 +1013,7 @@ object Similarity {
   private val semanticDedup: Q = (s, d) => {
     val e = T(s, d, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val m = kmAssignTable(s, d)
+    val m = kmAssign(s, d)
       .join(e.withColumn("nrm", norm2(col("v"))), Seq("vec_id"))
     val a = m.select(col("cid"), col("vec_id").as("a_id"),
       col("v").as("va"), col("nrm").as("na"))
@@ -1172,62 +1111,50 @@ object Similarity {
     * IVF artifacts. DECIMAL(38,0) end to end, so every consumer's
     * arithmetic stays exact.
     */
-  private def momentsKey(d: String): String =
-    SharedArtifacts.fingerprint(d, "embeddings.parquet", "moments:v1")
-
-  private def moments(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val base = SharedArtifacts.root.resolve(s"moments_${momentsKey(d)}")
-    if (!SharedArtifacts.isReady(base)) {
-      val staging = SharedArtifacts.stagingFor(base)
-      val q = T(s, d, "embeddings").select(transform(col("embedding"),
-        x => round(x.cast("double") * lit(1000000d)).cast("long")).as("q"))
-      // upper triangle only (the matrix is symmetric): two chained
-      // posexplode GENERATORS — codegen'd, not interpreted lambdas —
-      // with map-side partial aggregation, so shuffle volume is
-      // O(d²·tasks), corpus-size independent.
-      // TWO-STAGE exactness: the hot loop (corpus·d²/2 multiplies)
-      // accumulates per-INPUT-PARTITION partials in primitive LONGs —
-      // |q| ≤ 1e6 ⟹ product ≤ 1e12, so a partition of P vectors
-      // bounds the partial at P·1e12, overflow-safe to P ≈ 9e6 (a
-      // 128 MB parquet split holds ~5e5 of these rows — 18× margin at
-      // any corpus size, since P is per-split, not per-corpus). Only
-      // the tiny d²·tasks-row merge runs in DECIMAL(38,0). Same exact
-      // result as the previous all-decimal formulation; r10-measured
-      // 7.1 → 5.7 s on the sf0.1 build slot (the remainder is the pca
-      // derivation and parquet/publish constants, not the multiply).
-      q.select(col("q"), posexplode(col("q")).as(Seq("i", "xv")))
-        .select(col("i"), col("xv"),
-          posexplode(col("q")).as(Seq("j", "yv")))
-        .filter(col("j") >= col("i"))
-        .groupBy(spark_partition_id().as("pid"), col("i"), col("j"))
-        .agg(sum(col("xv") * col("yv")).as("psxy"),
-          count(lit(1)).as("pn"))
-        .groupBy(col("i"), col("j"))
-        .agg(sum(col("psxy").cast("decimal(38,0)")).as("sxy"),
-          sum(col("pn")).as("n"))
-        .write.mode("overwrite").parquet(staging.resolve("gram").toString)
-      q.select(posexplode(col("q")).as(Seq("i", "v")))
-        .groupBy(col("i"))
-        .agg(sum(col("v").cast("decimal(38,0)")).as("sx"),
-          count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(staging.resolve("sums").toString)
-      SharedArtifacts.publish(staging, base)
-    }
-    SharedArtifacts.markUsed(base)
-    (s.read.parquet(base.resolve("gram").toString),
-      s.read.parquet(base.resolve("sums").toString))
+  private lazy val moments = Materialized.shared("moments",
+      "moments_", "moments:v1", "embeddings.parquet")((s, base) =>
+      (s.read.parquet(base.resolve("gram").toString),
+        s.read.parquet(base.resolve("sums").toString))) {
+      (s, d, staging) =>
+    val q = T(s, d, "embeddings").select(transform(col("embedding"),
+      x => round(x.cast("double") * lit(1000000d)).cast("long")).as("q"))
+    // upper triangle only (the matrix is symmetric): two chained
+    // posexplode GENERATORS — codegen'd, not interpreted lambdas —
+    // with map-side partial aggregation, so shuffle volume is
+    // O(d²·tasks), corpus-size independent.
+    // TWO-STAGE exactness: the hot loop (corpus·d²/2 multiplies)
+    // accumulates per-INPUT-PARTITION partials in primitive LONGs —
+    // |q| ≤ 1e6 ⟹ product ≤ 1e12, so a partition of P vectors
+    // bounds the partial at P·1e12, overflow-safe to P ≈ 9e6 (a
+    // 128 MB parquet split holds ~5e5 of these rows — 18× margin at
+    // any corpus size, since P is per-split, not per-corpus). Only
+    // the tiny d²·tasks-row merge runs in DECIMAL(38,0). Same exact
+    // result as the previous all-decimal formulation; r10-measured
+    // 7.1 → 5.7 s on the sf0.1 build slot (the remainder is the pca
+    // derivation and parquet/publish constants, not the multiply).
+    q.select(col("q"), posexplode(col("q")).as(Seq("i", "xv")))
+      .select(col("i"), col("xv"),
+        posexplode(col("q")).as(Seq("j", "yv")))
+      .filter(col("j") >= col("i"))
+      .groupBy(spark_partition_id().as("pid"), col("i"), col("j"))
+      .agg(sum(col("xv") * col("yv")).as("psxy"),
+        count(lit(1)).as("pn"))
+      .groupBy(col("i"), col("j"))
+      .agg(sum(col("psxy").cast("decimal(38,0)")).as("sxy"),
+        sum(col("pn")).as("n"))
+      .write.mode("overwrite").parquet(staging.resolve("gram").toString)
+    q.select(posexplode(col("q")).as(Seq("i", "v")))
+      .groupBy(col("i"))
+      .agg(sum(col("v").cast("decimal(38,0)")).as("sx"),
+        count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(staging.resolve("sums").toString)
   }
 
-  /** Eagerly build (or adopt) the shared moments artifact — the
-    * bench's visibility hook, like [[ensureIvfArtifacts]].
+  /** The moments artifact and the direction layered on it share one
+    * bench item.
     */
-  def ensureMomentsArtifact(s: SparkSession, d: String): Boolean = {
-    val existed = SharedArtifacts.isReady(
-      SharedArtifacts.root.resolve(s"moments_${momentsKey(d)}"))
-    moments(s, d)
-    pcaDirection(s, d) // the derived layer rides the same build slot
-    !existed
-  }
+  private[graft] lazy val momentsBuild = Materialized.together(
+    "moments_shared_build")(Seq(moments, pcaDirection))
 
   /** Dominant principal direction of the embedding cloud by POWER
     * ITERATION on the exact integer second-moment matrix — the first
@@ -1255,18 +1182,11 @@ object Similarity {
     * of plan overhead per call — materializing its 64-row result once
     * per dataset version turns both consumers into plain reads.
     */
-  private def pcaDirection(s: SparkSession, d: String): DataFrame = {
-    val base = SharedArtifacts.root.resolve(
-      s"pca_${SharedArtifacts.fingerprint(d, "embeddings.parquet",
-        s"pca:v2:iters$PowerIters")}")
-    if (!SharedArtifacts.isReady(base)) {
-      val staging = SharedArtifacts.stagingFor(base)
-      pcaPowerCompute(s, d).write.mode("overwrite")
-        .parquet(staging.resolve("direction").toString)
-      SharedArtifacts.publish(staging, base)
-    }
-    SharedArtifacts.markUsed(base)
-    s.read.parquet(base.resolve("direction").toString)
+  private lazy val pcaDirection = Materialized.shared("pca", "pca_",
+      s"pca:v2:iters$PowerIters", "embeddings.parquet")(
+      Materialized.parquet("direction")) { (s, d, staging) =>
+    pcaPowerCompute(s, d).write.mode("overwrite")
+      .parquet(staging.resolve("direction").toString)
   }
 
   private def pcaPowerCompute(s: SparkSession, d: String): DataFrame = {
@@ -1452,7 +1372,7 @@ object Similarity {
         asDouble(col("embedding")).as("v"))
       .withColumn("nrm", norm2(col("v")))
     val (centroids, _) =
-      ivfArtifacts(s, d, e.select(col("vec_id"), col("v"), col("nrm")))
+      ivfArtifacts(s, d)
     // Per-vector probe set as a map-side-combinable typed top-k (the
     // sim_topk_agg machinery) on NEGATED d2 — Ordering.by((-score, id))
     // over negd2 is exactly (d2 asc, cid asc), the argmin tie-break
@@ -1511,20 +1431,12 @@ object Similarity {
     * layout tag carries the probe width and quantizer version, so a
     * knob change can never adopt a graph built under the old shape.
     */
-  private def knnKey(d: String): String =
-    SharedArtifacts.fingerprint(d, "embeddings.parquet",
-      s"knn:v3:k$KnnK:ivf$IvfSeedStep:cap$IvfCentroidCap:np$KnnProbes")
-
-  private[graft] def knnShared(s: SparkSession, d: String): DataFrame = {
-    val base = SharedArtifacts.root.resolve(s"knn_${knnKey(d)}")
-    if (!SharedArtifacts.isReady(base)) {
-      val staging = SharedArtifacts.stagingFor(base)
-      knnGraphAnn(s, d).write.mode("overwrite")
-        .parquet(staging.resolve("graph").toString)
-      SharedArtifacts.publish(staging, base)
-    }
-    SharedArtifacts.markUsed(base)
-    s.read.parquet(base.resolve("graph").toString)
+  private[graft] lazy val knnShared = Materialized.shared("knn_shared_build",
+      "knn_", s"knn:v3:k$KnnK:ivf$IvfSeedStep:cap$IvfCentroidCap:np$KnnProbes",
+      "embeddings.parquet")(Materialized.parquet("graph")) {
+      (s, d, staging) =>
+    knnGraphAnn(s, d).write.mode("overwrite")
+      .parquet(staging.resolve("graph").toString)
   }
 
   /** kNN-GRAPH RECALL GATE — edge agreement of the published ANN-
@@ -1548,16 +1460,6 @@ object Similarity {
       .agg(count(lit(1)).as("n_possible"),
         sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
       .withColumn("recall_bp", expr("n_hits * 10000 div n_possible"))
-  }
-
-  /** Eagerly build (or adopt) the shared kNN graph — the bench's
-    * visibility hook, like [[ensureIvfArtifacts]].
-    */
-  def ensureKnnArtifact(s: SparkSession, d: String): Boolean = {
-    val existed =
-      SharedArtifacts.isReady(SharedArtifacts.root.resolve(s"knn_${knnKey(d)}"))
-    knnShared(s, d).queryExecution // adopt/build without scanning rows
-    !existed
   }
 
   /** The kNN graph as a directed `(src, dst)` edge list — the input
@@ -1648,7 +1550,7 @@ object Similarity {
 
   /** Concurrency of the insert walk's arrival slices — walks are
     * per-query independent, so the slice count trades scheduler
-    * overlap against per-slice job overhead (see [[builtGnavInsert]]).
+    * overlap against per-slice job overhead (see [[gnavInsertRun]]).
     */
   private val GnavInsSlices = 8L
 
@@ -1660,11 +1562,6 @@ object Similarity {
   private val GnavSeedStep = 16
   private val GnavSeedCap = 64L
 
-  private def gnavKey(d: String): String =
-    SharedArtifacts.fingerprint(d, "embeddings.parquet",
-      s"gnav:v1:d$GnavDegree:gk$GnavK:ivf$IvfSeedStep:" +
-        s"cap$IvfCentroidCap:np$KnnProbes")
-
   /** The published navigation graph `(vec_id, nbr_id, sim)` under the
     * shared-artifact protocol: symmetrize the cross-label ANN kNN
     * graph (a pair's sim is bit-identical in both directions — same
@@ -1673,35 +1570,22 @@ object Similarity {
     * (sim desc, nbr_id) over the artifact's ROUNDED sims, which both
     * engines hold byte-equal.
     */
-  private[graft] def gnavShared(s: SparkSession, d: String): DataFrame = {
-    val base = SharedArtifacts.root.resolve(s"gnav_${gnavKey(d)}")
-    if (!SharedArtifacts.isReady(base)) {
-      val staging = SharedArtifacts.stagingFor(base)
-      val g = knnGraphAnn(s, d, sameLabelOnly = false, k = GnavK)
-        .select(col("vec_id"), col("nbr_id"), col("sim"))
-      val sym = g.union(g.select(col("nbr_id").as("vec_id"),
-          col("vec_id").as("nbr_id"), col("sim")))
-        .distinct()
-      val byNode = Window.partitionBy(col("vec_id"))
-        .orderBy(col("sim").desc, col("nbr_id"))
-      sym.withColumn("rn", row_number().over(byNode))
-        .filter(col("rn") <= GnavDegree)
-        .select(col("vec_id"), col("nbr_id"), col("sim"))
-        .write.mode("overwrite").parquet(staging.resolve("adj").toString)
-      SharedArtifacts.publish(staging, base)
-    }
-    SharedArtifacts.markUsed(base)
-    s.read.parquet(base.resolve("adj").toString)
-  }
-
-  /** Eagerly build (or adopt) the navigation graph — the bench's
-    * visibility hook, like [[ensureKnnArtifact]].
-    */
-  def ensureGnavArtifact(s: SparkSession, d: String): Boolean = {
-    val existed = SharedArtifacts.isReady(
-      SharedArtifacts.root.resolve(s"gnav_${gnavKey(d)}"))
-    gnavShared(s, d).queryExecution
-    !existed
+  private[graft] lazy val gnavShared = Materialized.shared(
+      "gnav_shared_build", "gnav_", s"gnav:v1:d$GnavDegree:gk$GnavK:" +
+        s"ivf$IvfSeedStep:cap$IvfCentroidCap:np$KnnProbes",
+      "embeddings.parquet")(Materialized.parquet("adj")) {
+      (s, d, staging) =>
+    val g = knnGraphAnn(s, d, sameLabelOnly = false, k = GnavK)
+      .select(col("vec_id"), col("nbr_id"), col("sim"))
+    val sym = g.union(g.select(col("nbr_id").as("vec_id"),
+        col("vec_id").as("nbr_id"), col("sim")))
+      .distinct()
+    val byNode = Window.partitionBy(col("vec_id"))
+      .orderBy(col("sim").desc, col("nbr_id"))
+    sym.withColumn("rn", row_number().over(byNode))
+      .filter(col("rn") <= GnavDegree)
+      .select(col("vec_id"), col("nbr_id"), col("sim"))
+      .write.mode("overwrite").parquet(staging.resolve("adj").toString)
   }
 
   /** GRAPH-NAVIGATION ANN SEARCH — greedy beam search over the
@@ -1934,69 +1818,64 @@ object Similarity {
     * of the corpus is the expensive part; two faces re-running it
     * would double the bill for no extra evidence).
     */
-  private val gnavInsRunCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private def builtGnavInsert(s: SparkSession, d: String)
-      : java.nio.file.Path =
-    gnavInsRunCache.computeIfAbsent(gnavKey(d) + ":ins", _ => {
-      val run = java.nio.file.Files.createTempDirectory("graft_gins_")
-      val isArr = (c: Column) => pmod(c, lit(ClsArrMod)) === ClsArrRem
-      val resident = gnavShared(s, d)
-        .filter(!isArr(col("vec_id")) && !isArr(col("nbr_id")))
-      val (_, eP, _, _) = gnavInputs(s, d)
-      val adj = graft.operators.Dedup.materialize(
-        resident.select(col("vec_id").as("node"), col("nbr_id")))
-      val e = graft.operators.Dedup.materialize(eP)
-      val q = e.filter(isArr(col("vec_id")))
-        .select(col("vec_id").as("q_id"), col("v").as("qv"),
-          col("nrm").as("qn"))
-      val seeds = e.filter(pmod(col("vec_id"), lit(GnavSeedStep)) === 0 &&
-          col("vec_id") < GnavSeedStep * GnavSeedCap)
-        .select(col("vec_id").as("node"))
-      // the walk is per-arrival independent (beam state never crosses
-      // q_id), so slice the arrival set and materialize the slices
-      // CONCURRENTLY — the [[gnavResults]] sweep trick applied to the
-      // insert walk: a 5-hop beam walk over a few hundred arrivals is
-      // bounded by sequential stage-scheduling latency, not data, and
-      // the slices' idle scheduler time overlaps. Output-identical to
-      // the unsliced walk (union of per-q_id results, same join
-      // shapes per slice — at 100 TB each slice is still beam·degree
-      // equi-join probes against the partitioned adjacency).
-      val slices = (0L until GnavInsSlices).map { r =>
-        q.filter(pmod(col("q_id"), lit(GnavInsSlices)) === r)
-      }
-      val walkedSlices = materializeSlices(slices.map(qs => () => {
-        val pins = scala.collection.mutable.Buffer.empty[DataFrame]
-        val w = graft.operators.Dedup.materialize(
-          gnavWalk(adj, e, qs, seeds, GnavBeam, topN = GnavK,
-            hopPins = Some(pins))
-            .select(col("q_id").as("vec_id"),
-              col("neighbor_id").as("nbr_id"), col("sim")))
-        pins.foreach(graft.operators.Dedup.releaseCheckpoint)
-        w
-      }))
-      val walked = walkedSlices.reduce(_.unionByName(_))
-      // bidirectional connect; the walk only ever reaches resident
-      // nodes (beam and expansion live on the resident graph), so new
-      // edges are always arrival↔resident and never collide
-      val sym = walked.union(walked.select(col("nbr_id").as("vec_id"),
-        col("vec_id").as("nbr_id"), col("sim")))
-      val byNode = Window.partitionBy(col("vec_id"))
-        .orderBy(col("sim").desc, col("nbr_id"))
-      resident.select(col("vec_id"), col("nbr_id"), col("sim"))
-        .union(sym).distinct()
-        .withColumn("rn", row_number().over(byNode))
-        .filter(col("rn") <= GnavDegree)
-        .select(col("vec_id"), col("nbr_id"), col("sim"))
-        .write.mode("overwrite").parquet(run.resolve("adj").toString)
-      (Seq(adj, e) ++ walkedSlices)
-        .foreach(graft.operators.Dedup.releaseCheckpoint)
-      run.resolve("adj")
-    })
+  private[graft] lazy val gnavInsertRun = Materialized.memo(
+      "gnav_insert_build", "graft_gins_", "ins:v1") { (s, d, run) =>
+    val isArr = (c: Column) => pmod(c, lit(ClsArrMod)) === ClsArrRem
+    val resident = gnavShared(s, d)
+      .filter(!isArr(col("vec_id")) && !isArr(col("nbr_id")))
+    val (_, eP, _, _) = gnavInputs(s, d)
+    val adj = graft.operators.Dedup.materialize(
+      resident.select(col("vec_id").as("node"), col("nbr_id")))
+    val e = graft.operators.Dedup.materialize(eP)
+    val q = e.filter(isArr(col("vec_id")))
+      .select(col("vec_id").as("q_id"), col("v").as("qv"),
+        col("nrm").as("qn"))
+    val seeds = e.filter(pmod(col("vec_id"), lit(GnavSeedStep)) === 0 &&
+        col("vec_id") < GnavSeedStep * GnavSeedCap)
+      .select(col("vec_id").as("node"))
+    // the walk is per-arrival independent (beam state never crosses
+    // q_id), so slice the arrival set and materialize the slices
+    // CONCURRENTLY — the [[gnavResults]] sweep trick applied to the
+    // insert walk: a 5-hop beam walk over a few hundred arrivals is
+    // bounded by sequential stage-scheduling latency, not data, and
+    // the slices' idle scheduler time overlaps. Output-identical to
+    // the unsliced walk (union of per-q_id results, same join
+    // shapes per slice — at 100 TB each slice is still beam·degree
+    // equi-join probes against the partitioned adjacency).
+    val slices = (0L until GnavInsSlices).map { r =>
+      q.filter(pmod(col("q_id"), lit(GnavInsSlices)) === r)
+    }
+    val walkedSlices = materializeSlices(slices.map(qs => () => {
+      val pins = scala.collection.mutable.Buffer.empty[DataFrame]
+      val w = graft.operators.Dedup.materialize(
+        gnavWalk(adj, e, qs, seeds, GnavBeam, topN = GnavK,
+          hopPins = Some(pins))
+          .select(col("q_id").as("vec_id"),
+            col("neighbor_id").as("nbr_id"), col("sim")))
+      pins.foreach(graft.operators.Dedup.releaseCheckpoint)
+      w
+    }))
+    val walked = walkedSlices.reduce(_.unionByName(_))
+    // bidirectional connect; the walk only ever reaches resident
+    // nodes (beam and expansion live on the resident graph), so new
+    // edges are always arrival↔resident and never collide
+    val sym = walked.union(walked.select(col("nbr_id").as("vec_id"),
+      col("vec_id").as("nbr_id"), col("sim")))
+    val byNode = Window.partitionBy(col("vec_id"))
+      .orderBy(col("sim").desc, col("nbr_id"))
+    resident.select(col("vec_id"), col("nbr_id"), col("sim"))
+      .union(sym).distinct()
+      .withColumn("rn", row_number().over(byNode))
+      .filter(col("rn") <= GnavDegree)
+      .select(col("vec_id"), col("nbr_id"), col("sim"))
+      .write.mode("overwrite").parquet(run.resolve("adj").toString)
+    (Seq(adj, e) ++ walkedSlices)
+      .foreach(graft.operators.Dedup.releaseCheckpoint)
+    run.resolve("adj")
+  }
 
   private val gnavInsert: Q = (s, d) =>
-    s.read.parquet(builtGnavInsert(s, d).toString)
+    s.read.parquet(gnavInsertRun(s, d).toString)
 
   /** The resident restriction of the published adjacency WITH its
     * rounded sims — the frozen routing tier `stream_gnav_insert`'s
@@ -2033,7 +1912,7 @@ object Similarity {
     * schema) as queries, cut each to its top-[[GnavK]], connect both
     * ways. Returns a MATERIALIZED symmetric edge frame; all interior
     * pins are released here. The per-query independence lets the
-    * query set slice into concurrent walks ([[builtGnavInsert]]'s
+    * query set slice into concurrent walks ([[gnavInsertRun]]'s
     * trick) — output-identical union. This is the one walk body the
     * insert stream, the vacuum repair, and the lifecycle capstone all
     * fold through.
@@ -2073,17 +1952,6 @@ object Similarity {
     sym
   }
 
-  /** Eagerly run (or adopt) the insertion pass — the bench's
-    * visibility hook: the arrival walk is the insert family's real
-    * cost, and without a named item the best-of-2 face timing would
-    * discard the run that paid it.
-    */
-  def ensureGnavInsert(s: SparkSession, d: String): Boolean = {
-    val existed = gnavInsRunCache.containsKey(gnavKey(d) + ":ins")
-    builtGnavInsert(s, d)
-    !existed
-  }
-
   /** NAVIGABILITY AFTER INSERTION — the number that decides whether
     * [[gnavInsert]]'s maintenance loop is deployable: the standard
     * 10-query beam walk over the UPDATED adjacency, recall@[[K]]
@@ -2093,7 +1961,7 @@ object Similarity {
     * both results and routing waypoints.
     */
   private val gnavInsertRecall: Q = (s, d) => {
-    val uadj = s.read.parquet(builtGnavInsert(s, d).toString)
+    val uadj = s.read.parquet(gnavInsertRun(s, d).toString)
       .select(col("vec_id").as("node"), col("nbr_id"))
     val (_, eP, _, _) = gnavInputs(s, d)
     val adj = graft.operators.Dedup.materialize(uadj)
@@ -2150,71 +2018,57 @@ object Similarity {
     */
   private[graft] val GnavVacuumFloor = GnavDegree - 2
 
-  private val gnavVacRunCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private def builtGnavVacuum(s: SparkSession, d: String)
-      : java.nio.file.Path =
-    gnavVacRunCache.computeIfAbsent(gnavKey(d) + ":vac", _ => {
-      val run = java.nio.file.Files.createTempDirectory("graft_gvac_")
-      val survives = (c: Column) =>
-        pmod(c, lit(StreamingQueries.TakedownMod)) =!=
-          StreamingQueries.TakedownRem
-      val pub = gnavShared(s, d)
-      val pruned = pub
-        .filter(survives(col("vec_id")) && survives(col("nbr_id")))
-      val lost = pub
-        .filter(survives(col("vec_id")) && !survives(col("nbr_id")))
-        .select(col("vec_id")).distinct()
-      val prunedDeg = pruned.groupBy(col("vec_id"))
-        .agg(count(lit(1)).as("deg"))
-      val repair = lost.join(prunedDeg, Seq("vec_id"), "left")
-        .filter(coalesce(col("deg"), lit(0L)) < GnavVacuumFloor)
-        .select(col("vec_id"))
-      val (_, eP, _, _) = gnavInputs(s, d)
-      val adj = graft.operators.Dedup.materialize(
-        pruned.select(col("vec_id").as("node"), col("nbr_id")))
-      val e = graft.operators.Dedup.materialize(eP)
-      val q = e.join(repair, Seq("vec_id"), "left_semi")
-        .select(col("vec_id").as("q_id"), col("v").as("qv"),
-          col("nrm").as("qn"))
-      val seeds = e.filter(pmod(col("vec_id"), lit(GnavSeedStep)) === 0 &&
-          col("vec_id") < GnavSeedStep * GnavSeedCap)
-        .select(col("vec_id").as("node"))
-      val pins = scala.collection.mutable.Buffer.empty[DataFrame]
-      val walked = graft.operators.Dedup.materialize(
-        gnavWalk(adj, e, q, seeds, GnavBeam, topN = GnavK,
-          hopPins = Some(pins))
-          .select(col("q_id").as("vec_id"), col("neighbor_id").as("nbr_id"),
-            col("sim")))
-      val sym = walked.union(walked.select(col("nbr_id").as("vec_id"),
-        col("vec_id").as("nbr_id"), col("sim")))
-      val byNode = Window.partitionBy(col("vec_id"))
-        .orderBy(col("sim").desc, col("nbr_id"))
-      pruned.select(col("vec_id"), col("nbr_id"), col("sim"))
-        .union(sym)
-        .groupBy(col("vec_id"), col("nbr_id"))
-        .agg(max(col("sim")).as("sim"))
-        .withColumn("rn", row_number().over(byNode))
-        .filter(col("rn") <= GnavDegree)
-        .select(col("vec_id"), col("nbr_id"), col("sim"))
-        .write.mode("overwrite").parquet(run.resolve("adj").toString)
-      (Seq(adj, e, walked) ++ pins)
-        .foreach(graft.operators.Dedup.releaseCheckpoint)
-      run.resolve("adj")
-    })
+  private[graft] lazy val gnavVacuumRun = Materialized.memo(
+      "gnav_vacuum_build", "graft_gvac_", "vac:v1") { (s, d, run) =>
+    val survives = (c: Column) =>
+      pmod(c, lit(StreamingQueries.TakedownMod)) =!=
+        StreamingQueries.TakedownRem
+    val pub = gnavShared(s, d)
+    val pruned = pub
+      .filter(survives(col("vec_id")) && survives(col("nbr_id")))
+    val lost = pub
+      .filter(survives(col("vec_id")) && !survives(col("nbr_id")))
+      .select(col("vec_id")).distinct()
+    val prunedDeg = pruned.groupBy(col("vec_id"))
+      .agg(count(lit(1)).as("deg"))
+    val repair = lost.join(prunedDeg, Seq("vec_id"), "left")
+      .filter(coalesce(col("deg"), lit(0L)) < GnavVacuumFloor)
+      .select(col("vec_id"))
+    val (_, eP, _, _) = gnavInputs(s, d)
+    val adj = graft.operators.Dedup.materialize(
+      pruned.select(col("vec_id").as("node"), col("nbr_id")))
+    val e = graft.operators.Dedup.materialize(eP)
+    val q = e.join(repair, Seq("vec_id"), "left_semi")
+      .select(col("vec_id").as("q_id"), col("v").as("qv"),
+        col("nrm").as("qn"))
+    val seeds = e.filter(pmod(col("vec_id"), lit(GnavSeedStep)) === 0 &&
+        col("vec_id") < GnavSeedStep * GnavSeedCap)
+      .select(col("vec_id").as("node"))
+    val pins = scala.collection.mutable.Buffer.empty[DataFrame]
+    val walked = graft.operators.Dedup.materialize(
+      gnavWalk(adj, e, q, seeds, GnavBeam, topN = GnavK,
+        hopPins = Some(pins))
+        .select(col("q_id").as("vec_id"), col("neighbor_id").as("nbr_id"),
+          col("sim")))
+    val sym = walked.union(walked.select(col("nbr_id").as("vec_id"),
+      col("vec_id").as("nbr_id"), col("sim")))
+    val byNode = Window.partitionBy(col("vec_id"))
+      .orderBy(col("sim").desc, col("nbr_id"))
+    pruned.select(col("vec_id"), col("nbr_id"), col("sim"))
+      .union(sym)
+      .groupBy(col("vec_id"), col("nbr_id"))
+      .agg(max(col("sim")).as("sim"))
+      .withColumn("rn", row_number().over(byNode))
+      .filter(col("rn") <= GnavDegree)
+      .select(col("vec_id"), col("nbr_id"), col("sim"))
+      .write.mode("overwrite").parquet(run.resolve("adj").toString)
+    (Seq(adj, e, walked) ++ pins)
+      .foreach(graft.operators.Dedup.releaseCheckpoint)
+    run.resolve("adj")
+  }
 
   private val gnavVacuum: Q = (s, d) =>
-    s.read.parquet(builtGnavVacuum(s, d).toString)
-
-  /** Eagerly run (or adopt) the vacuum — the bench's visibility hook
-    * (the repair walk is the vacuum's real cost).
-    */
-  def ensureGnavVacuum(s: SparkSession, d: String): Boolean = {
-    val existed = gnavVacRunCache.containsKey(gnavKey(d) + ":vac")
-    builtGnavVacuum(s, d)
-    !existed
-  }
+    s.read.parquet(gnavVacuumRun(s, d).toString)
 
   /** ROUTING AFTER VACUUM — the number that decides whether the
     * hard-removal is deployable: the standard 10-query beam walk over
@@ -2227,7 +2081,7 @@ object Similarity {
     val survives = (c: Column) =>
       pmod(c, lit(StreamingQueries.TakedownMod)) =!=
         StreamingQueries.TakedownRem
-    val uadj = s.read.parquet(builtGnavVacuum(s, d).toString)
+    val uadj = s.read.parquet(gnavVacuumRun(s, d).toString)
       .select(col("vec_id").as("node"), col("nbr_id"))
     val (_, eP, _, _) = gnavInputs(s, d)
     val adj = graft.operators.Dedup.materialize(uadj)
@@ -2329,7 +2183,7 @@ object Similarity {
         col("label").cast("long").as("label"))
       .withColumn("nrm", norm2(col("v")))
     val (centroids, lists) =
-      ivfArtifacts(s, d, e.select(col("vec_id"), col("v"), col("nrm")))
+      ivfArtifacts(s, d)
     (lists.join(e, Seq("vec_id")), centroids)
   }
 

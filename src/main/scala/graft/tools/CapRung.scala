@@ -58,23 +58,12 @@ object CapRung {
     // the shared artifacts the replay bases ADOPT — built (or adopted)
     // here so the capstone timings below account folds + compactions,
     // not train-once artifact costs (the bench's named-item split)
-    timed("dedup shared tables (sig artifact)") {
-      graft.operators.Dedup.ensureSharedTables(spark, dest)
+    val capstones = graft.operators.Materialized.builds.collect {
+      case m: graft.operators.Materialized.Memo[_]
+          if m.name.startsWith("lifecycle") => m
     }
-    timed("cc components/pairs artifact") {
-      graft.operators.Dedup.ensureComponentsArtifact(spark, dest)
-    }
-    timed("tf shared artifact") {
-      graft.operators.StreamingQueries.ensureTfArtifact(spark, dest)
-    }
-    timed("gnav resident artifact") {
-      graft.operators.Similarity.ensureGnavArtifact(spark, dest)
-    }
-    timed(s"lifecycle_build ${factor}x (batch capstone)") {
-      graft.operators.StreamingQueries.ensureLifecycle(spark, dest)
-    }
-    timed(s"lifecycle_stream_build ${factor}x (streaming capstone)") {
-      graft.operators.StreamingQueries.ensureLifecycleStream(spark, dest)
+    (capstones.flatMap(_.adopts).distinct ++ capstones).foreach { e =>
+      timed(s"${e.name} ${factor}x")(e.ensure(spark, dest))
     }
     spark.stop()
   }

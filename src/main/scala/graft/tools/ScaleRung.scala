@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-evidence rung beyond the bench SF: synthesize an N× documents +
@@ -83,22 +82,19 @@ object ScaleRung {
       s"${spark.read.parquet(s"$dest/documents.parquet").count()} docs, " +
       s"${spark.read.parquet(s"$dest/embeddings.parquet").count()} vectors)")
 
-    val builds = Seq[(String, (SparkSession, String) => Boolean)](
-      "dedup_shared_build" -> graft.operators.Dedup.ensureSharedTables,
-      "cc_shared_build" -> graft.operators.Dedup.ensureComponentsArtifact,
-      "ivf_shared_build" -> graft.operators.Similarity.ensureIvfArtifacts,
-      "moments_shared_build" -> graft.operators.Similarity.ensureMomentsArtifact,
-      "km_shared_build" -> graft.operators.Similarity.ensureKmeansArtifact,
-      "pq_shared_build" -> graft.operators.Similarity.ensurePqArtifact,
-      "knn_shared_build" -> graft.operators.Similarity.ensureKnnArtifact,
-      "gnav_shared_build" -> graft.operators.Similarity.ensureGnavArtifact,
-      "msf_shared_build" -> graft.operators.GraphOps.ensureMsfArtifact)
+    // every shared artifact over the tables this rung generates
+    val builds = graft.operators.Materialized.builds.filter {
+      case _: graft.operators.Materialized.Memo[_] |
+          _: graft.operators.Materialized.ReplayGroup => false
+      case e => e.tables(dest).forall(t => Files.exists(Paths.get(dest, t)))
+    }
     println("\n| build | fresh (s) | adopt (s) | fresh? |")
-    builds.foreach { case (name, ensure) =>
-      val (fresh, t1) = timed(s"$name fresh")(ensure(spark, dest))
-      val (again, t2) = timed(s"$name adopt")(ensure(spark, dest))
-      println(f"| $name | $t1%.2f | $t2%.2f | $fresh/$again |")
-      assert(!again, s"$name rebuilt on second invocation — adoption broken")
+    builds.foreach { e =>
+      val (fresh, t1) = timed(s"${e.name} fresh")(e.ensure(spark, dest))
+      val (again, t2) = timed(s"${e.name} adopt")(e.ensure(spark, dest))
+      println(f"| ${e.name} | $t1%.2f | $t2%.2f | $fresh/$again |")
+      assert(!again,
+        s"${e.name} rebuilt on second invocation — adoption broken")
     }
 
     val queries = Seq("dedup_lsh_recall", "sim_ann_recall", "sim_pq_recall",
@@ -332,7 +328,7 @@ object ScaleRung {
     // (cc recluster fresh + the gnav build above) because its fold
     // phases track batch/affected-slice size, not the corpus.
     val (_, tLc) = timed("lifecycle composed replay") {
-      graft.operators.StreamingQueries.ensureLifecycle(spark, dest)
+      graft.operators.StreamingQueries.lifecycleRun.ensure(spark, dest)
     }
     println(f"| lifecycle composed replay | $tLc%.2f | four families |")
     spark.stop()

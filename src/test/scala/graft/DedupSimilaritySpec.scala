@@ -499,7 +499,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // build (or adopt) once so the published files + _READY marker exist
     Dedup.queries("dedup_minhash_lsh")(spark, sf).write
       .format("noop").mode("overwrite").save()
-    val key = Dedup.datasetKey(sf)
+    val key = Dedup.sigTables.key(sf)
     val base = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft_shared", key)
     assert(java.nio.file.Files.exists(base.resolve("_READY")))
@@ -514,7 +514,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // stay — the 100 TB cross-job story is that the NEXT job finds them
     spark.sql(s"DROP TABLE IF EXISTS graft_mh_shingles_$key")
     spark.sql(s"DROP TABLE IF EXISTS graft_mh_sig_$key")
-    assert(!Dedup.ensureSharedTables(spark, sf),
+    assert(!Dedup.sigTables.ensure(spark, sf),
       "adoption must not rebuild already-published tables")
     assert(mtimes == before,
       "adopting a published table must not rewrite any of its files")

@@ -46,8 +46,8 @@ class SharedArtifactsSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     import spark.implicits._
     // first call builds or adopts; the second MUST adopt (fresh=false)
-    graft.operators.Dedup.ensureComponentsArtifact(spark, sf)
-    assert(!graft.operators.Dedup.ensureComponentsArtifact(spark, sf),
+    graft.operators.Dedup.clusters.ensure(spark, sf)
+    assert(!graft.operators.Dedup.clusters.ensure(spark, sf),
       "second ensure must adopt the published artifact, not rebuild")
     val viaArtifact = SparkEntry.queries("dedup_components")(spark, sf)
       .as[(Long, Long)].collect().toSet

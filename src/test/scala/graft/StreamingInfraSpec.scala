@@ -193,7 +193,7 @@ class StreamingInfraSpec extends AnyFunSuite {
     java.nio.file.Files.createDirectories(live)
     val unrelated = root.resolve("somethingelse")
     java.nio.file.Files.createDirectories(unrelated)
-    graft.operators.StreamingQueries.sweepDeadSiblings(root)
+    graft.operators.Materialized.sweepDeadSiblings(root, "graft_winstream_")
     assert(!java.nio.file.Files.exists(dead), "dead-pid dir reclaimed")
     assert(java.nio.file.Files.exists(live), "own dir untouched")
     assert(java.nio.file.Files.exists(unrelated), "non-matching dir untouched")
