@@ -307,14 +307,18 @@ private[graft] object Materialized {
     }
   }
 
-  /** Delete `<prefix><pid>` entries of `tmpRoot` whose pid is dead. */
+  /** Delete `<prefix><digits>` entries of `tmpRoot` whose digits name no
+    * live process: a dead pid, or a number too large for one (run
+    * directories were once `Files.createTempDirectory(prefix)`, named by
+    * a random unsigned long of up to 20 digits).
+    */
   private[graft] def sweepDeadSiblings(tmpRoot: Path, prefix: String): Unit = {
-    val orphan = (java.util.regex.Pattern.quote(prefix) + raw"(\d{1,18})").r
+    val orphan = (java.util.regex.Pattern.quote(prefix) + raw"(\d+)").r
     val self = ProcessHandle.current().pid()
     Option(tmpRoot.toFile.listFiles()).getOrElse(Array.empty).foreach { f =>
       f.getName match {
-        case orphan(pid) if pid.toLong != self &&
-            !ProcessHandle.of(pid.toLong).isPresent =>
+        case orphan(n) if n.toLongOption.forall(pid =>
+            pid != self && !ProcessHandle.of(pid).isPresent) =>
           SharedArtifacts.deleteRecursively(f.toPath)
         case _ => ()
       }

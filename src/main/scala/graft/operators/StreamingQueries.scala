@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables.{load => T}
+import graft.io.Dirs
 import graft.streaming.{AlertPipeline, AlertStateTable, AlertUpdate, LiveCountsView}
 
 /** The live pipeline (SURVEY.md §3.1) exercised end-to-end as a real
@@ -297,7 +298,6 @@ object StreamingQueries {
     Materialized.shared(name, name + "_", layout, "events.parquet")(
         Materialized.dir) { (s, d, staging) =>
       import java.nio.file.Files
-      import scala.jdk.CollectionConverters._
       val bucketed = assign(T(s, d, "events")
         .withColumn("ts", expr("unix_micros(CAST(ts AS TIMESTAMP)) * 1000")))
         .persist()
@@ -305,7 +305,7 @@ object StreamingQueries {
         val part = staging.resolve(s"part$k")
         bucketed.filter(col("bucket") === k).drop("bucket")
           .coalesce(1).write.mode("overwrite").parquet(part.toString)
-        val file = Files.list(part).iterator().asScala
+        val file = Dirs.list(part)
           .find(_.getFileName.toString.endsWith(".parquet")).get
         Files.createDirectories(staging.resolve("data"))
         Files.move(file, staging.resolve("data").resolve(s"b$k.parquet"))
@@ -320,10 +320,9 @@ object StreamingQueries {
   private def link4(base: java.nio.file.Path,
       run: java.nio.file.Path): Unit = {
     import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
     Files.createDirectories(run.resolve("src"))
-    Files.list(base.resolve("data")).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sorted
+    Dirs.list(base.resolve("data"))
+      .filter(_.getFileName.toString.endsWith(".parquet")).sorted
       .zipWithIndex.foreach { case (p, i) =>
         val dst = run.resolve("src").resolve(p.getFileName.toString)
         linkOrCopy(p, dst)
@@ -922,8 +921,7 @@ object StreamingQueries {
     */
   private lazy val nanosEventsArtifact = Materialized.shared("nanos_events",
       "nanos_events_", "nanos-long-v1", "events.parquet") { (_, base) =>
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.list(base.resolve("data")).iterator().asScala
+    Dirs.list(base.resolve("data"))
       .find(_.getFileName.toString.endsWith(".parquet")).get
   } { (s, d, staging) =>
     s.read.parquet(java.nio.file.Paths.get(d, "events.parquet").toString)
@@ -967,8 +965,7 @@ object StreamingQueries {
         }.toSeq: _*)),
       schema)
     sentinel.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    import scala.jdk.CollectionConverters._
-    val part = Files.list(stage).iterator().asScala
+    val part = Dirs.list(stage)
       .find(_.getFileName.toString.endsWith(".parquet")).get
     Files.move(part, src.resolve("zz_sentinel.parquet"))
     src.toString
@@ -1092,9 +1089,7 @@ object StreamingQueries {
     */
   private def readIndexGens(s: SparkSession,
       idx: java.nio.file.Path): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val gens = java.nio.file.Files.list(idx).iterator().asScala
-      .map(_.toString).toSeq.sorted
+    val gens = Dirs.list(idx).map(_.toString).sorted
     s.read.parquet(gens: _*)
   }
 
@@ -1298,11 +1293,7 @@ object StreamingQueries {
         .start()
       q.awaitTermination()
     }
-    val gens = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(out).iterator().asScala
-        .map(_.toString).toSeq.sorted
-    }
+    val gens = Dirs.list(out).map(_.toString).sorted
     s.read.parquet(gens: _*)
   }
 
@@ -1358,11 +1349,7 @@ object StreamingQueries {
         .start()
       q.awaitTermination()
     }
-    val gens = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(out).iterator().asScala
-        .map(_.toString).toSeq.sorted
-    }
+    val gens = Dirs.list(out).map(_.toString).sorted
     s.read.parquet(gens: _*)
   }
 
@@ -1417,11 +1404,7 @@ object StreamingQueries {
         .start()
       q.awaitTermination()
     }
-    val gens = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(out).iterator().asScala
-        .map(_.toString).toSeq.sorted
-    }
+    val gens = Dirs.list(out).map(_.toString).sorted
     s.read.parquet(gens: _*)
       .join(emb.select(col("vec_id"),
         col("label").cast("long").as("label")), Seq("vec_id"))
@@ -1469,11 +1452,7 @@ object StreamingQueries {
         .start()
       q.awaitTermination()
     }
-    val gens = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(out).iterator().asScala
-        .map(_.toString).toSeq.sorted
-    }
+    val gens = Dirs.list(out).map(_.toString).sorted
     s.read.parquet(gens: _*)
   }
 
@@ -1575,11 +1554,7 @@ object StreamingQueries {
         .start()
       q.awaitTermination()
     }
-    val gens = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(out).iterator().asScala
-        .map(_.toString).toSeq.sorted
-    }
+    val gens = Dirs.list(out).map(_.toString).sorted
     val arrHist = s.read.parquet(gens: _*)
       .groupBy(col("i"), col("bucket"))
       .agg(sum(col("n_b_part")).as("n_b"))
@@ -1737,9 +1712,7 @@ object StreamingQueries {
   /** Union every generation of one maintained-index frame. */
   private def readTextGens(s: SparkSession, idx: java.nio.file.Path,
       sub: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val gens = java.nio.file.Files.list(idx.resolve(sub)).iterator()
-      .asScala.map(_.toString).toSeq.sorted
+    val gens = Dirs.list(idx.resolve(sub)).map(_.toString).sorted
     s.read.parquet(gens: _*)
   }
 
@@ -1968,9 +1941,7 @@ object StreamingQueries {
       q.awaitTermination()
     }
     def delGens(sub: String): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      val gens = java.nio.file.Files.list(del.resolve(sub)).iterator()
-        .asScala.map(_.toString).toSeq.sorted
+      val gens = Dirs.list(del.resolve(sub)).map(_.toString).sorted
       s.read.parquet(gens: _*)
     }
     val tomb = delGens("tomb")
@@ -2058,10 +2029,8 @@ object StreamingQueries {
     // itself, which is already degree-capped (a restriction of the
     // published capped graph), so no re-cap is needed
     val gens = {
-      import scala.jdk.CollectionConverters._
       if (!java.nio.file.Files.isDirectory(gensDir)) Seq.empty[String]
-      else java.nio.file.Files.list(gensDir).iterator().asScala
-        .map(_.toString).toSeq.sorted
+      else Dirs.list(gensDir).map(_.toString).sorted
     }
     val resident = Similarity.gnavResidentAdj(s, d)
       .select(col("vec_id"), col("nbr_id"), col("sim"))
@@ -2123,9 +2092,7 @@ object StreamingQueries {
     */
   private def rdGensOf(s: SparkSession, dir: java.nio.file.Path)
       : DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val gens = java.nio.file.Files.list(dir).iterator().asScala
-      .map(_.toString).toSeq.sorted
+    val gens = Dirs.list(dir).map(_.toString).sorted
     s.read.parquet(gens: _*)
   }
 
@@ -2291,13 +2258,10 @@ object StreamingQueries {
     */
   private def ccTerminalLabels(s: SparkSession,
       ccC: java.nio.file.Path): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val lblGens = java.nio.file.Files.list(ccC.resolve("lbl")).iterator()
-      .asScala.map(_.toString).toSeq.sorted
+    val lblGens = Dirs.list(ccC.resolve("lbl")).map(_.toString).sorted
     val remapGens =
       if (!java.nio.file.Files.isDirectory(ccC.resolve("remap"))) Seq.empty
-      else java.nio.file.Files.list(ccC.resolve("remap"))
-        .iterator().asScala.map(_.toString).toSeq.sorted
+      else Dirs.list(ccC.resolve("remap")).map(_.toString).sorted
     val lbl = s.read.parquet(lblGens: _*)
     if (remapGens.isEmpty) lbl.select(col("doc_id"), col("component"))
     else lbl.withColumnRenamed("component", "l0")
@@ -2502,7 +2466,6 @@ object StreamingQueries {
   private def stageOrderedFiles(slices: Seq[DataFrame],
       srcDir: java.nio.file.Path): Unit = {
     import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
     Files.createDirectories(srcDir)
     // one fixed base stamp for the whole staging — per-slice "now"
     // could go backwards across slices on a slow clock tick
@@ -2517,7 +2480,7 @@ object StreamingQueries {
       // schedule (row order inside a staged file is immaterial: every
       // downstream fold is a join/aggregation)
       df.repartition(1).write.mode("overwrite").parquet(part.toString)
-      val file = Files.list(part).iterator().asScala
+      val file = Dirs.list(part)
         .find(_.getFileName.toString.endsWith(".parquet"))
         .getOrElse(throw new IllegalStateException(
           s"stageOrderedFiles: slice $i wrote no parquet part under " +
@@ -3043,14 +3006,13 @@ object StreamingQueries {
     // (its own earlier writes are excluded, the idempotency the
     // per-gen-dir layout exists for)
     def gensBefore(sub: String, batchId: Long): Seq[String] = {
-      import scala.jdk.CollectionConverters._
       val dir = state.resolve(sub)
       if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
-      else java.nio.file.Files.list(dir).iterator().asScala
+      else Dirs.list(dir)
         .filter { p =>
           val n = p.getFileName.toString
           n == "base" || n.drop(1).toLong < batchId
-        }.map(_.toString).toSeq.sorted
+        }.map(_.toString).sorted
     }
     withStreamingParallelism(s) {
       val q = raw.writeStream
@@ -3132,14 +3094,13 @@ object StreamingQueries {
     // two stores (live until the boundary, compacted after)
     def gensBefore(root: java.nio.file.Path, sub: String,
         batchId: Long): Seq[String] = {
-      import scala.jdk.CollectionConverters._
       val dir = root.resolve(sub)
       if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
-      else java.nio.file.Files.list(dir).iterator().asScala
+      else Dirs.list(dir)
         .filter { p =>
           val n = p.getFileName.toString
           n == "base" || n.drop(1).toLong < batchId
-        }.map(_.toString).toSeq.sorted
+        }.map(_.toString).sorted
     }
     val compactAt = 2L
     withStreamingParallelism(s) {
@@ -3244,14 +3205,13 @@ object StreamingQueries {
     val dGen = f"d$deleteAt%05d"
 
     def gensBefore(sub: String, batchId: Long): Seq[String] = {
-      import scala.jdk.CollectionConverters._
       val dir = state.resolve(sub)
       if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
-      else java.nio.file.Files.list(dir).iterator().asScala
+      else Dirs.list(dir)
         .filter { p =>
           val n = p.getFileName.toString
           n == "base" || n.drop(1).toLong < batchId
-        }.map(_.toString).toSeq.sorted
+        }.map(_.toString).sorted
     }
 
     def rdDelete(sp: SparkSession, sub: String): DataFrame =

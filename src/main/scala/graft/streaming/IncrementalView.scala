@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Dirs
 
 /** An INCREMENTALLY MAINTAINED materialized aggregate over an
   * [[AlertStateTable]]: live-alert counts grouped by `bucketExpr`
@@ -94,7 +95,7 @@ class LiveCountsView(path: String, bucketExpr: String = "worldId % 10",
       // grace the table's own GC gives)
       import scala.jdk.CollectionConverters._
       val keep = Set(dir) ++ prior.map(_._1)
-      Files.list(Paths.get(path)).iterator().asScala.toSeq
+      Dirs.list(Paths.get(path))
         .filter(p => p.getFileName.toString.startsWith("c") &&
           !keep.contains(p.getFileName.toString))
         .foreach { p =>

@@ -8,6 +8,7 @@ import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import graft.io.Dirs
 import graft.model.MetagameEvent
 
 /** The durable face of the in-progress alert set: a keyed parquet table
@@ -38,6 +39,17 @@ import graft.model.MetagameEvent
   * fully readable. GC retains the previous manifest's segments for one
   * generation (delete N-2, not N-1): a reader that resolved `_CURRENT`
   * just before a swap still finds every file it planned.
+  *
+  * Files: a delta segment is ONE parquet file and a base is
+  * `compactPartitions` key-ranged files, each beside its `.crc`; neither
+  * carries a `_SUCCESS` marker, because the manifest plus the `_CURRENT`
+  * swap is the commit record and nothing reads `_SUCCESS`. Every file a
+  * merge writes is fsync'd and later deleted by GC, and on a filesystem
+  * mounted with online discard each unlink of a synced file costs tens
+  * of milliseconds (about 65 ms on ext4 with `discard`) while every
+  * other fsync on the device waits behind it. So a delta is 3 directory
+  * entries, not one file per writer task, and a base
+  * `2 * compactPartitions + 1`.
   */
 class AlertStateTable(path: String, compactEvery: Int = 8,
     retainGenerations: Int = 2, compactPartitions: Int = 8)
@@ -105,12 +117,10 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     * version id derived from the directory, restart-safe).
     */
   def versions: Seq[String] = {
-    import scala.jdk.CollectionConverters._
     val p = Paths.get(path)
     if (!Files.exists(p)) Seq.empty
-    else Files.list(p).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("m") && n != "_CURRENT").toSeq.sorted
+    else Dirs.list(p).map(_.getFileName.toString)
+      .filter(n => n.startsWith("m") && n != "_CURRENT").sorted
   }
 
   /** The table as of a retained manifest version — the lake-table time
@@ -189,18 +199,21 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     * Zero-padded to fixed width so lexicographic order IS numeric order.
     */
   private def nextId(): Long = {
-    import scala.jdk.CollectionConverters._
     val p = Paths.get(path)
     val ids = if (!Files.exists(p)) Seq.empty[Long]
-      else Files.list(p).iterator().asScala
-        .map(_.getFileName.toString)
+      else Dirs.list(p).map(_.getFileName.toString)
         .collect { case n if n.length > 1 && (n.head == 'm' || n.head == 's') =>
           n.drop(1).takeWhile(_.isDigit) }
-        .filter(_.nonEmpty).map(_.toLong).toSeq
+        .filter(_.nonEmpty).map(_.toLong)
     (ids :+ 0L).max + 1
   }
 
   private def pad(id: Long): String = f"$id%018d"
+
+  /** The write option that, set to "false", stops the committer leaving
+    * a `_SUCCESS` file in a segment.
+    */
+  private val noMarker = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
   /** fsync every file in a freshly-written segment directory, then the
     * directory itself: Spark's local-FS parquet writer never forces the
@@ -210,9 +223,8 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     * Same best-effort contract as [[FilePublisher.syncFile]].
     */
   private def syncSegment(seg: String): Unit = {
-    import scala.jdk.CollectionConverters._
     val d = Paths.get(path, seg)
-    Files.list(d).iterator().asScala.filter(Files.isRegularFile(_))
+    Dirs.list(d).filter(Files.isRegularFile(_))
       .foreach(FilePublisher.syncFile)
     FilePublisher.syncDir(d.toFile)
   }
@@ -228,6 +240,8 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     * rows; an empty segment is deleted before any manifest is written.
     * The batch is written unresolved: readers and compaction resolve
     * last-writer-wins, so a duplicate id inside one segment is harmless.
+    * It is written as one file, with no `_SUCCESS` marker (see the class
+    * doc for why the file count matters).
     */
   def merge(spark: SparkSession, updates: DataFrame): Unit = synchronized {
     val prevManifest = currentManifestName
@@ -237,8 +251,10 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     val rows = Observation()
     updates
       .select(AlertStateTable.schema.fieldNames.toIndexedSeq.map(col): _*)
+      .coalesce(1)
       .observe(rows, count(lit(1)).as("rows"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/$delta")
+      .write.mode(SaveMode.Overwrite).option(noMarker, "false")
+      .parquet(s"$path/$delta")
     // the count arrives through the session's listener bus, which drops
     // events when its queue overflows: wait a bounded time, and without
     // a count keep the segment (an empty write still leaves a readable
@@ -264,7 +280,8 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
         // reuse the range partitioning: one shuffle, not two.
         resolve(readRows(spark, segs :+ delta)
           .repartitionByRange(compactPartitions, col("id")))
-          .write.mode(SaveMode.Overwrite).parquet(s"$path/$base")
+          .write.mode(SaveMode.Overwrite).option(noMarker, "false")
+          .parquet(s"$path/$base")
         syncSegment(base)
         Seq(base)
       } else segs :+ delta
@@ -295,9 +312,8 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     * segment write and pointer swap.
     */
   private def gc(keepManifests: Set[String]): Unit = {
-    import scala.jdk.CollectionConverters._
     val keepSegs = keepManifests.flatMap(manifestOf)
-    Files.list(Paths.get(path)).iterator().asScala.toSeq.foreach { p =>
+    Dirs.list(Paths.get(path)).foreach { p =>
       val name = p.getFileName.toString
       val stale =
         (name.startsWith("m") && !keepManifests.contains(name)) ||

@@ -115,6 +115,21 @@ class MaterializedSpec extends AnyFunSuite {
     }
   }
 
+  test("run directories named by a random 19-20 digit suffix are swept, live ones kept") {
+    val root = Files.createTempDirectory("graft_mzsweep_")
+    val self = ProcessHandle.current().pid()
+    val swept = Seq("graft_gvac_11619076953903729680",
+      "graft_gvac_6203913722118408617")
+    val kept = Seq(s"graft_gvac_$self", "graft_gvac_keep", "graft_gins_1")
+    (swept ++ kept).foreach(n =>
+      Files.createDirectories(root.resolve(n).resolve("x")))
+    try {
+      Materialized.sweepDeadSiblings(root, "graft_gvac_")
+      swept.foreach(n => assert(!Files.exists(root.resolve(n)), s"$n not swept"))
+      kept.foreach(n => assert(Files.exists(root.resolve(n)), s"$n swept"))
+    } finally SharedArtifacts.deleteRecursively(root)
+  }
+
   test("a live process serves door read-backs of the rewritten customer table, not the old ones") {
     val a = copyOfSf("doorA")
     val b = copyOfSf("doorB")

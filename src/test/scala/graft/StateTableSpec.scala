@@ -143,6 +143,78 @@ class StateTableSpec extends AnyFunSuite {
     assert(k7.toSeq == Seq(307), "newest generation must win per key")
   }
 
+  /** The file names of one segment directory. */
+  private def segFiles(dir: String, seg: String): Seq[String] =
+    new java.io.File(s"$dir/$seg").list().toSeq.sorted
+
+  test("a delta segment is one part file, a base compactPartitions, neither with _SUCCESS") {
+    val dir = Files.createTempDirectory("alert_table_files").toString
+    val table = new AlertStateTable(dir, compactEvery = 3, compactPartitions = 4)
+    val batch = (gen: Int) => (1 to 40).map(i => AlertUpdate(f"k-$i%03d",
+      "live", gen * 100 + i, 17, 1000.0 * gen + i)).toDF()
+      .repartition(4) // several writer tasks upstream of the segment write
+    table.merge(spark, batch(1))
+    val delta = table.segmentDirs.last
+    assert(delta.endsWith("d"))
+    val files = segFiles(dir, delta)
+    val part = files.filter(_.startsWith("part-"))
+    assert(part.length == 1 && files == Seq(s".${part.head}.crc", part.head),
+      s"a delta is one part file and its checksum: $files")
+    (2 to 3).foreach(g => table.merge(spark, batch(g)))
+    val base = table.segmentDirs.head
+    assert(table.segmentDirs.length == 1 && base.endsWith("b"))
+    val baseFiles = segFiles(dir, base)
+    assert(baseFiles.count(_.startsWith("part-")) == 4 &&
+      baseFiles.length == 8, s"a base is 4 part files and checksums: $baseFiles")
+  }
+
+  test("snapshot, rawAt and changesBetween are unchanged across a compaction") {
+    // the same merges into a table that compacts every 3 and one that
+    // never does: every read of every version must agree
+    val compacting = new AlertStateTable(
+      Files.createTempDirectory("alert_table_cmp").toString,
+      compactEvery = 3, retainGenerations = 10)
+    val flat = new AlertStateTable(
+      Files.createTempDirectory("alert_table_flat").toString,
+      compactEvery = 100, retainGenerations = 10)
+    val batches = (1 to 7).map(g => (1 to 12).map { i =>
+      val k = (g * 5 + i) % 20
+      AlertUpdate(s"k-$k", if ((g + i) % 4 == 0) "removed" else "live",
+        g * 100 + i, k, 1000.0 * g + i)
+    })
+    batches.foreach { b =>
+      compacting.merge(spark, b.toDF())
+      flat.merge(spark, b.toDF())
+    }
+    assert(compacting.versions == flat.versions && flat.versions.length == 7)
+    assert(compacting.segmentDirs.length < 3 && flat.segmentDirs.length == 7)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.toString).toSet
+    assert(rows(compacting.snapshot(spark)) == rows(flat.snapshot(spark)))
+    val vs = flat.versions
+    vs.foreach(v =>
+      assert(rows(compacting.rawAt(spark, v)) == rows(flat.rawAt(spark, v)), v))
+    // every step, and the whole window (both cross compactions)
+    (vs.sliding(2).map(w => (w(0), w(1))).toSeq :+ ((vs.head, vs.last)))
+      .foreach { case (a, b) =>
+        assert(rows(compacting.changesBetween(spark, a, b)) ==
+          rows(flat.changesBetween(spark, a, b)), s"$a -> $b")
+      }
+  }
+
+  test("merges hold no file descriptors open") {
+    val dir = Files.createTempDirectory("alert_table_fds").toString
+    val table = new AlertStateTable(dir)
+    val merge = (g: Int) => table.merge(spark,
+      Seq(AlertUpdate(s"k-${g % 7}", "live", g, 17, 1000.0 + g)).toDF())
+    def openFds = new java.io.File("/proc/self/fd").list().length
+    (1 to 5).foreach(merge) // warm up the writer
+    val before = openFds
+    (6 to 55).foreach(merge)
+    val grown = openFds - before
+    assert(grown <= 20, s"50 merges left $grown more file descriptors open")
+  }
+
   test("a reader planned before a merge survives the swap (one-generation retention)") {
     val dir = Files.createTempDirectory("alert_table6").toString
     val table = new AlertStateTable(dir)
@@ -210,8 +282,7 @@ class StateTableSpec extends AnyFunSuite {
     assert(java.nio.file.Files.exists(tables),
       "expected the durable table dir for this process")
     val raw = new AlertStateTable(
-      java.nio.file.Files.list(tables).iterator().next()
-        .resolve("table").toString)
+      graft.io.Dirs.list(tables).head.resolve("table").toString)
       .snapshot(spark)
       .select(org.apache.spark.sql.functions.col("id").cast("long"),
         org.apache.spark.sql.functions.col("eventId").cast("long"))

@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Full local gate: compile, specs, the service-path benchmark workloads,
-# oracle verify at sf0.01, bench at sf0.1.
+# oracle verify at sf0.001 and sf0.01, bench at sf0.1.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch compile test
@@ -9,9 +9,12 @@ sbt -batch compile test
 for w in alert_live alert_bulk; do
   python3 perfbench/run.py --workload "$w" --seed 1 --seconds 20 --trace 0
 done
-OUT=$(mktemp -d)
-sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT"
-python3 tools/verify_local.py /root/testdata/sf0.01 "$OUT"
+# the oracle at both correctness scale factors
+for sf in sf0.001 sf0.01; do
+  OUT=$(mktemp -d)
+  sbt -batch "runMain graft.Verify /root/testdata/$sf $OUT"
+  python3 tools/verify_local.py "/root/testdata/$sf" "$OUT"
+done
 sbt -batch "runMain graft.ExplainAudit EXPLAIN_AUDIT.md"
 # BENCH_LOCAL: the complete per-query line (the driver's tail capture
 # truncates the head), committed per round for cross-round diffing
