@@ -151,7 +151,7 @@ object StreamingQueries {
 
   /** SNAPSHOT-ISOLATION TIME TRAVEL as a registry face: replay the
     * 4-quartile staging through the durable [[AlertStateTable]] (4
-    * merges → 4 retained manifest versions), then read the table AS OF
+    * merges → 4 retained versions), then read the table AS OF
     * the SECOND version — `rawAt`, the `versionAsOf` analog the
     * log+compact layout gives for free — and emit its live set. Because
     * the staging split is data-defined (event-time quartiles under the

@@ -19,8 +19,7 @@ import graft.io.Dirs
   * when the last-applied version has aged out of the table's retention
   * window (or on first refresh).
   *
-  * Durability follows the table's own discipline scaled down: counts
-  * live in immutable versioned dirs, `_CURRENT` records
+  * Durability: counts live in immutable versioned dirs, `_CURRENT` records
   * `<countsDir> <appliedTableVersion>` and swaps via ATOMIC_MOVE, so a
   * crashed refresh leaves the previous view fully readable and the
   * next refresh re-derives from the recorded version (re-applying a

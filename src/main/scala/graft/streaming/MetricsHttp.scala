@@ -62,6 +62,10 @@ object MetricsHttp {
       ("counter", "Corrupt lines skipped while reading the publish log."),
     AmqpConnections.DialsMetric ->
       ("counter", "AMQP broker connections dialed."),
+    AlertStateTable.MergesMetric ->
+      ("counter", "Versions the alert state table committed."),
+    AlertStateTable.FreedMetric ->
+      ("counter", "Directory entries the alert state table deleted."),
     "last_event_time" ->
       ("gauge", "Event time of the newest event seen, in POSIX seconds."),
     "running_queries" ->
@@ -71,7 +75,9 @@ object MetricsHttp {
     FrameTransport.OutageGauge ->
       ("gauge", "1 while the ESS websocket is down, else 0."),
     FrameTransport.OutageSinceGauge ->
-      ("gauge", "Start of the current ESS outage in epoch ms, 0 when healthy."))
+      ("gauge", "Start of the current ESS outage in epoch ms, 0 when healthy."),
+    AlertStateTable.SegmentsGauge ->
+      ("gauge", "Segments in the alert state table's current version."))
 
   /** Reference default: METRICS_PORT, 8000 (`ess_client.py:32`). */
   def fromEnv(): MetricsHttp =

@@ -1,10 +1,15 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.TimeoutException
+import java.util.zip.CRC32
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -25,57 +30,98 @@ import graft.model.MetagameEvent
   * at-least-once micro-batch retries safe.
   *
   * Layout: a log-plus-compaction scheme (the shape Delta/Iceberg give you
-  * for free — re-derived here on bare parquet). `_CURRENT` atomically
-  * points at a manifest file; the manifest lists segment directories in
-  * application order. Each merge writes ONLY the batch's rows, as given,
-  * as a new delta segment — O(|batch|) I/O, not O(|table|) — and readers
-  * resolve last-writer-wins across and within segments. Once the manifest
-  * exceeds `compactEvery` segments, the merge folds everything into a
-  * fresh base segment, so read amplification is bounded and compaction
-  * cost amortizes to |table|/compactEvery per batch.
+  * for free — re-derived here on bare parquet). A version is a segment
+  * list in application order. Each merge writes ONLY the batch's rows, as
+  * given, as a new delta segment — O(|batch|) I/O, not O(|table|) — and
+  * readers resolve last-writer-wins across and within segments. Once a
+  * version would reach `compactEvery` segments, the merge folds everything
+  * into a fresh base segment instead, so read amplification is bounded
+  * and compaction cost amortizes to |table|/compactEvery per batch.
   *
-  * Crash safety: segments and manifests are immutable; `_CURRENT` swaps
-  * via ATOMIC_MOVE, so a crash at any point leaves the previous manifest
-  * fully readable. GC retains the previous manifest's segments for one
-  * generation (delete N-2, not N-1): a reader that resolved `_CURRENT`
-  * just before a swap still finds every file it planned.
+  * Versions live in `max(retainGenerations, 2)` fixed head slots,
+  * `_HEAD0`, `_HEAD1`, … — the superblock pattern of log-structured
+  * stores. A slot holds one version record: the payload length, the
+  * payload (the version id, then the segment list) and its CRC32. The
+  * newest valid record is the current version; a torn or corrupt slot is
+  * ignored. A merge overwrites, in place, the slot of the oldest retained
+  * version (never the current one's) and forces it; a crash at any point
+  * leaves the current version readable. GC then deletes every segment no
+  * retained version names, so a reader that resolved the current version
+  * just before a merge still finds every file it planned (the previous
+  * version is retained), `rawAt` can time-travel the window, and the
+  * next merge sweeps the orphans of a merge that crashed.
   *
-  * Files: a delta segment is ONE parquet file and a base is
-  * `compactPartitions` key-ranged files, each beside its `.crc`; neither
-  * carries a `_SUCCESS` marker, because the manifest plus the `_CURRENT`
-  * swap is the commit record and nothing reads `_SUCCESS`. Every file a
-  * merge writes is fsync'd and later deleted by GC, and on a filesystem
-  * mounted with online discard each unlink of a synced file costs tens
-  * of milliseconds (about 65 ms on ext4 with `discard`) while every
-  * other fsync on the device waits behind it. So a delta is 3 directory
-  * entries, not one file per writer task, and a base
-  * `2 * compactPartitions + 1`.
+  * What is fsync'd, and why: every segment a head names (each part file,
+  * its `.crc` and the segment directory), then the table directory, so
+  * the segment's entry is durable before any head names it, then the
+  * slot. A compacting merge still writes its delta — the batch's plan
+  * must run exactly once — but no head ever names that delta, so it is
+  * read back into the base and deleted unsynced.
+  *
+  * The cost of freeing a block: on a filesystem mounted with online
+  * discard, unlinking a file whose blocks were fsync'd costs tens of
+  * milliseconds (58 ms for a 4 KiB file on ext4 with `discard`, against
+  * 0.04 ms for an empty file and 0.23 ms to overwrite a synced file in
+  * place and `fdatasync` it), does not batch, and stalls every other
+  * fsync on the device. So no commit unlinks, renames over or truncates
+  * a synced file: a slot is overwritten without truncation, a delta is
+  * one part file with no `_SUCCESS` marker, and a base is
+  * `compactPartitions` files (one by default). A 7-merge cycle at the
+  * defaults frees 24 directory entries — 21 synced ones, in the merge
+  * after a compaction — and an ordinary merge frees none.
+  *
+  * A directory of the earlier layout (a `_CURRENT` pointer to `m…`
+  * manifest files, no `_HEAD*` file) reads as its current manifest; the
+  * first merge writes that version to a slot and then drops the old
+  * pointer and manifests.
   */
 class AlertStateTable(path: String, compactEvery: Int = 8,
-    retainGenerations: Int = 2, compactPartitions: Int = 8)
+    retainGenerations: Int = 2, compactPartitions: Int = 1)
     extends Serializable {
+  import AlertStateTable.Head
 
-  private def pointer: Path = Paths.get(path, "_CURRENT")
+  private val slots = math.max(retainGenerations, 2)
 
-  private def manifestOf(name: String): Seq[String] = {
-    val p = Paths.get(path, name)
-    if (Files.exists(p))
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    else Seq.empty
+  private def file(name: String): Path = Paths.get(path, name)
+
+  private def slotFile(i: Int): Path = file(s"_HEAD$i")
+
+  /** The table directory's entry names; empty before the first merge. */
+  private def entries: Seq[String] =
+    try Dirs.list(Paths.get(path)).map(_.getFileName.toString)
+    catch { case _: NoSuchFileException => Nil }
+
+  private def readFile(p: Path): Option[Array[Byte]] =
+    try Some(Files.readAllBytes(p))
+    catch { case _: NoSuchFileException => None }
+
+  /** The valid version records on disk, oldest first: every `_HEAD<i>`
+    * present, whatever `i` (so a reopen with another `retainGenerations`
+    * still finds the newest), or, in a directory of the earlier layout
+    * with no `_HEAD*` file, the manifest `_CURRENT` names.
+    */
+  private def heads(names: Seq[String]): Seq[Head] = {
+    val slotted = names.flatMap(AlertStateTable.slotIndex)
+    if (slotted.nonEmpty)
+      slotted.flatMap(i => readFile(slotFile(i))
+        .flatMap(AlertStateTable.decode).map(_.copy(slot = Some(i))))
+        .sortBy(_.id)
+    else (for {
+      pointer <- readFile(file("_CURRENT"))
+      manifest = new String(pointer, StandardCharsets.UTF_8).trim
+      body <- readFile(file(manifest))
+      id <- manifest.drop(1).toLongOption
+    } yield Head(id, new String(body, StandardCharsets.UTF_8)
+      .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq, None)).toSeq
   }
 
-  private def currentManifestName: Option[String] =
-    if (Files.exists(pointer))
-      Some(new String(Files.readAllBytes(pointer), StandardCharsets.UTF_8).trim)
-        .filter(m => Files.exists(Paths.get(path, m)))
-    else None
+  private def heads: Seq[Head] = heads(entries)
 
   /** Segment dirs (relative to `path`) of the current version, in
     * application order. Exposed for the cost-scaling spec.
     */
   def segmentDirs: Seq[String] =
-    currentManifestName.map(manifestOf).getOrElse(Seq.empty)
+    heads.lastOption.map(_.segments).getOrElse(Seq.empty)
 
   /** Last-writer-wins resolution. Tie-break beyond (timestamp, eventId):
     * a TTL "expired" update carries the SAME event coordinates as the
@@ -112,23 +158,22 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
   def raw(spark: SparkSession): DataFrame =
     readSegments(spark, segmentDirs)
 
-  /** Retained manifest versions, oldest → newest (time travel horizon =
-    * `retainGenerations`; manifest names carry a zero-padded monotonic
-    * version id derived from the directory, restart-safe).
+  /** Retained versions, oldest → newest (time travel horizon =
+    * `retainGenerations`). A version's name is `m` and its zero-padded
+    * monotonic id, derived from the directory and so restart-safe; a
+    * table of the earlier layout keeps its manifest names.
     */
-  def versions: Seq[String] = {
-    val p = Paths.get(path)
-    if (!Files.exists(p)) Seq.empty
-    else Dirs.list(p).map(_.getFileName.toString)
-      .filter(n => n.startsWith("m") && n != "_CURRENT").sorted
-  }
+  def versions: Seq[String] = heads.map(_.name)
 
-  /** The table as of a retained manifest version — the lake-table time
-    * travel the log+compact layout gives for free (Delta's `versionAsOf`
-    * analog, bounded by the GC retention window).
+  private def segmentsAt(version: String): Seq[String] =
+    heads.find(_.name == version).map(_.segments).getOrElse(Seq.empty)
+
+  /** The table as of a retained version — the lake-table time travel the
+    * log+compact layout gives for free (Delta's `versionAsOf` analog,
+    * bounded by the GC retention window).
     */
   def rawAt(spark: SparkSession, version: String): DataFrame =
-    readSegments(spark, manifestOf(version))
+    readSegments(spark, segmentsAt(version))
 
   /** The in-progress set (what the reference's Mongo collection holds). */
   def snapshot(spark: SparkSession): DataFrame =
@@ -154,8 +199,8 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     */
   def changesBetween(spark: SparkSession, fromVersion: String,
       toVersion: String): DataFrame = {
-    val fromSegs = manifestOf(fromVersion)
-    val toSegs = manifestOf(toVersion)
+    val fromSegs = segmentsAt(fromVersion)
+    val toSegs = segmentsAt(toVersion)
     val before0 = readSegments(spark, fromSegs)
     val after0 = readSegments(spark, toSegs)
     val (before, after) =
@@ -192,69 +237,94 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
         col("c.img.timestamp").as("timestamp"))
   }
 
-  /** Next version id: one past the highest id any existing manifest or
+  /** Next version id: one past the highest id any head, manifest or
     * segment carries. Derived from the DIRECTORY, not a clock —
     * `System.nanoTime` has an arbitrary per-boot origin, so clock-named
     * versions would sort wrongly after a restart of a persistent table.
     * Zero-padded to fixed width so lexicographic order IS numeric order.
     */
-  private def nextId(): Long = {
-    val p = Paths.get(path)
-    val ids = if (!Files.exists(p)) Seq.empty[Long]
-      else Dirs.list(p).map(_.getFileName.toString)
-        .collect { case n if n.length > 1 && (n.head == 'm' || n.head == 's') =>
-          n.drop(1).takeWhile(_.isDigit) }
-        .filter(_.nonEmpty).map(_.toLong)
-    (ids :+ 0L).max + 1
+  private def nextId(names: Seq[String], found: Seq[Head]): Long = {
+    val ids = names
+      .collect { case n if n.length > 1 && (n.head == 'm' || n.head == 's') =>
+        n.drop(1).takeWhile(_.isDigit) }
+      .filter(_.nonEmpty).map(_.toLong)
+    (ids ++ found.map(_.id) :+ 0L).max + 1
   }
-
-  private def pad(id: Long): String = f"$id%018d"
 
   /** The write option that, set to "false", stops the committer leaving
     * a `_SUCCESS` file in a segment.
     */
   private val noMarker = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
+  /** Every filesystem step of a merge runs through here: `write` (one
+    * Spark segment write), `fsync` (one file), `dirsync`, `head` (one
+    * slot write) and `delete` (one path). In the table it only runs the
+    * step; a test overrides it to stop the table after any step, as a
+    * crash would.
+    */
+  protected def fsStep(step: String)(run: => Unit): Unit = run
+
   /** fsync every file in a freshly-written segment directory, then the
     * directory itself: Spark's local-FS parquet writer never forces the
-    * part files to disk, so without this a POWER loss could leave the
-    * durable pointer referencing a segment whose data blocks were lost —
-    * the manifest/pointer fsyncs below only cover the metadata chain.
-    * Same best-effort contract as [[FilePublisher.syncFile]].
+    * part files to disk, so without this a POWER loss could leave a head
+    * naming a segment whose data blocks were lost. Same best-effort
+    * contract as [[FilePublisher.syncFile]].
     */
   private def syncSegment(seg: String): Unit = {
-    val d = Paths.get(path, seg)
+    val d = file(seg)
     Dirs.list(d).filter(Files.isRegularFile(_))
-      .foreach(FilePublisher.syncFile)
-    FilePublisher.syncDir(d.toFile)
+      .foreach(f => fsStep("fsync")(FilePublisher.syncFile(f)))
+    fsStep("dirsync")(FilePublisher.syncDir(d.toFile))
+  }
+
+  /** Overwrite slot `i` in place with `head` and force it. The file is
+    * never truncated (a truncate frees blocks too); a shorter record
+    * leaves the old tail behind, which the length prefix skips. A slot
+    * file created here also needs its directory entry forced.
+    */
+  private def writeSlot(i: Int, head: Head): Unit = fsStep("head") {
+    val p = slotFile(i)
+    val created = !Files.exists(p)
+    val ch = FileChannel.open(p, StandardOpenOption.CREATE,
+      StandardOpenOption.WRITE)
+    try {
+      val buf = ByteBuffer.wrap(AlertStateTable.encode(head))
+      while (buf.hasRemaining) ch.write(buf, buf.position().toLong)
+      ch.force(true)
+    } finally ch.close()
+    if (created) FilePublisher.syncDir(Paths.get(path).toFile)
   }
 
   /** Merge one batch of updates into the table: write the batch as a new
     * delta segment (cost scales with the batch), fold into a fresh base
-    * only when the segment count reaches `compactEvery`.
+    * only when the version would reach `compactEvery` segments.
     *
     * The batch's plan runs exactly once, as the segment write: a
     * streaming batch's state-store version commits inside that action,
     * so it must run even when it yields no rows, and a second action
     * would recompute the whole stateful stage. The write counts its own
-    * rows; an empty segment is deleted before any manifest is written.
+    * rows; an empty segment is deleted before any head is written.
     * The batch is written unresolved: readers and compaction resolve
     * last-writer-wins, so a duplicate id inside one segment is harmless.
     * It is written as one file, with no `_SUCCESS` marker (see the class
     * doc for why the file count matters).
     */
   def merge(spark: SparkSession, updates: DataFrame): Unit = synchronized {
-    val prevManifest = currentManifestName
-    val segs = prevManifest.map(manifestOf).getOrElse(Seq.empty)
-    val id = nextId()
-    val delta = s"s${pad(id)}d"
+    val names = entries
+    val found = heads(names)
+    val segs = found.lastOption.map(_.segments).getOrElse(Seq.empty)
+    val id = nextId(names, found)
+    val delta = s"s${AlertStateTable.pad(id)}d"
+    val compacting = segs.length + 1 >= compactEvery
     val rows = Observation()
-    updates
-      .select(AlertStateTable.schema.fieldNames.toIndexedSeq.map(col): _*)
-      .coalesce(1)
-      .observe(rows, count(lit(1)).as("rows"))
-      .write.mode(SaveMode.Overwrite).option(noMarker, "false")
-      .parquet(s"$path/$delta")
+    fsStep("write") {
+      updates
+        .select(AlertStateTable.schema.fieldNames.toIndexedSeq.map(col): _*)
+        .coalesce(1)
+        .observe(rows, count(lit(1)).as("rows"))
+        .write.mode(SaveMode.Overwrite).option(noMarker, "false")
+        .parquet(s"$path/$delta")
+    }
     // the count arrives through the session's listener bus, which drops
     // events when its queue overflows: wait a bounded time, and without
     // a count keep the segment (an empty write still leaves a readable
@@ -263,71 +333,87 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
       try Some(Await.result(rows.future, 1.minute).getAs[Long]("rows"))
       catch { case _: TimeoutException => None }
     if (written.contains(0L)) {
-      deleteRecursively(Paths.get(path, delta))
+      Metrics.add(AlertStateTable.FreedMetric, delete(delta))
       return
     }
-    syncSegment(delta)
+    // a directory of the earlier layout: its current manifest becomes
+    // the first head, so the new version's GC keeps its segments
+    val committed = found match {
+      case Seq(old) if old.slot.isEmpty =>
+        writeSlot(0, old)
+        Seq(old.copy(slot = Some(0)))
+      case hs => hs
+    }
     val newSegs =
-      if (segs.length + 1 >= compactEvery) {
-        val base = s"s${pad(id)}b"
+      if (compacting) {
+        val base = s"s${AlertStateTable.pad(id)}b"
         // key-RANGE the compacted output: `compactPartitions` writer
-        // tasks each own a contiguous id range, so a 100× key space
-        // compacts as parallel files instead of funneling the whole
-        // table through one writer task — compaction wall-clock scales
-        // with the cluster, and each output file covers a disjoint key
-        // interval (a range-predicate reader can skip files via parquet
-        // min/max on id). Ranging BEFORE the resolve lets its window
-        // reuse the range partitioning: one shuffle, not two.
-        resolve(readRows(spark, segs :+ delta)
-          .repartitionByRange(compactPartitions, col("id")))
-          .write.mode(SaveMode.Overwrite).option(noMarker, "false")
-          .parquet(s"$path/$base")
+        // tasks each own a contiguous id range, so a caller with a 100×
+        // key space can compact into parallel files, each covering a
+        // disjoint key interval (a range-predicate reader can skip files
+        // via parquet min/max on id). Ranging BEFORE the resolve lets its
+        // window reuse the range partitioning: one shuffle, not two.
+        fsStep("write") {
+          resolve(readRows(spark, segs :+ delta)
+            .repartitionByRange(compactPartitions, col("id")))
+            .write.mode(SaveMode.Overwrite).option(noMarker, "false")
+            .parquet(s"$path/$base")
+        }
         syncSegment(base)
         Seq(base)
-      } else segs :+ delta
-    // immutable manifest file, then atomic pointer swap; each write is
-    // fsync'd and the directory is fsync'd after the swap so a POWER
-    // loss (not just a process crash) can't forget an acknowledged merge
-    // while the streaming checkpoint survives
-    val manifest = s"m${pad(id)}"
-    val manifestPath = Paths.get(path, manifest)
-    Files.write(manifestPath,
-      newSegs.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    FilePublisher.syncFile(manifestPath)
-    val tmp = Paths.get(path, "_CURRENT.tmp")
-    Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
-    FilePublisher.syncFile(tmp)
-    Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    FilePublisher.syncDir(Paths.get(path).toFile)
-    // retain the newest `retainGenerations` manifests (always including
-    // the one just swapped in and its predecessor): racing readers keep
-    // their planned files, and rawAt() can time-travel the window
-    val retained = versions.takeRight(math.max(retainGenerations, 2)).toSet
-    gc(keepManifests = retained ++ Set(manifest) ++ prevManifest)
+      } else {
+        syncSegment(delta)
+        segs :+ delta
+      }
+    // the new segment's directory entry is durable before a head names
+    // it; then the slot of the oldest retained version (a missing or
+    // invalid slot first) takes the new version — never the current
+    // version's slot, so a torn write leaves the current one intact
+    fsStep("dirsync")(FilePublisher.syncDir(Paths.get(path).toFile))
+    val held = committed.flatMap(h => h.slot.map(_ -> h.id)).toMap
+    val slot = (0 until slots).minBy(i => held.getOrElse(i, -1L))
+    val head = Head(id, newSegs, Some(slot))
+    writeSlot(slot, head)
+    val freed = gc(committed.filterNot(_.slot.contains(slot)) :+ head)
+    Metrics.add(AlertStateTable.MergesMetric, 1)
+    Metrics.add(AlertStateTable.FreedMetric, freed)
+    Metrics.set(AlertStateTable.SegmentsGauge, newSegs.length)
   }
 
-  /** Drop manifests and segments unreachable from the retained manifest
-    * generations. Also sweeps orphans from merges that crashed between
-    * segment write and pointer swap.
+  /** Delete what no retained version names, given every head on disk
+    * after a commit, oldest first. A head in a slot beyond this table's
+    * slot count (left by an instance with a larger `retainGenerations`)
+    * is dropped once it falls out of the newest `slots` versions, before
+    * its segments. The earlier layout's pointer and manifests go once a
+    * head exists. Also sweeps the orphans of merges that crashed before
+    * their head write. Returns the number of entries deleted.
     */
-  private def gc(keepManifests: Set[String]): Unit = {
-    val keepSegs = keepManifests.flatMap(manifestOf)
-    Dirs.list(Paths.get(path)).foreach { p =>
-      val name = p.getFileName.toString
-      val stale =
-        (name.startsWith("m") && !keepManifests.contains(name)) ||
-        (name.startsWith("s") && !keepSegs.contains(name))
-      if (stale) deleteRecursively(p)
-    }
+  private def gc(after: Seq[Head]): Int = {
+    val newest = after.takeRight(slots).toSet
+    val names = entries
+    val slotsFreed = names.flatMap(AlertStateTable.slotIndex)
+      .filter(i => i >= slots && !newest.exists(_.slot.contains(i)))
+      .map(i => delete(s"_HEAD$i")).sum
+    val keep = after.filter(h => h.slot.exists(_ < slots) || newest(h))
+      .flatMap(_.segments).toSet
+    slotsFreed + names.filter(n => n.startsWith("_CURRENT") ||
+        n.startsWith("m") || (n.startsWith("s") && !keep(n)))
+      .map(delete).sum
   }
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(Files.deleteIfExists(_))
-    }
+  /** Delete an entry of the table directory, depth first, one path per
+    * step; returns the number of paths deleted.
+    */
+  private def delete(name: String): Int = {
+    val paths =
+      try Using.resource(Files.walk(file(name)))(_.iterator().asScala.toList)
+      catch { case _: NoSuchFileException => Nil }
+    var n = 0
+    paths.reverse.foreach(p => fsStep("delete") {
+      if (Files.deleteIfExists(p)) n += 1
+    })
+    n
+  }
 }
 
 object AlertStateTable {
@@ -338,6 +424,56 @@ object AlertStateTable {
     StructField("eventId", IntegerType),
     StructField("worldId", IntegerType),
     StructField("timestamp", DoubleType)))
+
+  /** `/metrics` series: versions committed, directory entries deleted
+    * (both counters) and the current version's segment count (a gauge).
+    */
+  val MergesMetric = "table_merges"
+  val FreedMetric = "table_entries_freed"
+  val SegmentsGauge = "table_segments"
+
+  private def pad(id: Long): String = f"$id%018d"
+
+  /** One version record and the slot it was read from (none for the
+    * earlier layout's manifest).
+    */
+  private final case class Head(id: Long, segments: Seq[String],
+      slot: Option[Int]) {
+    def name: String = s"m${pad(id)}"
+  }
+
+  private def slotIndex(name: String): Option[Int] =
+    if (name.startsWith("_HEAD")) name.drop(5).toIntOption.filter(_ >= 0)
+    else None
+
+  /** A slot record: payload length, payload (the id, then one segment per
+    * line, UTF-8), CRC32 of the payload.
+    */
+  private def encode(h: Head): Array[Byte] = {
+    val payload = (h.id.toString +: h.segments).mkString("\n")
+      .getBytes(StandardCharsets.UTF_8)
+    val crc = new CRC32
+    crc.update(payload)
+    ByteBuffer.allocate(payload.length + 8).putInt(payload.length)
+      .put(payload).putInt(crc.getValue.toInt).array()
+  }
+
+  /** The record a slot holds, or None when it is torn or corrupt. */
+  private def decode(bytes: Array[Byte]): Option[Head] = {
+    val buf = ByteBuffer.wrap(bytes)
+    if (bytes.length < 8) return None
+    val n = buf.getInt()
+    if (n < 0 || n > bytes.length - 8) return None
+    val payload = new Array[Byte](n)
+    buf.get(payload)
+    val crc = new CRC32
+    crc.update(payload)
+    if (buf.getInt() != crc.getValue.toInt) return None
+    new String(payload, StandardCharsets.UTF_8).split("\n").toSeq match {
+      case first +: segs => first.toLongOption.map(Head(_, segs, None))
+      case _ => None
+    }
+  }
 
   /** Wire the full pipeline: events → stateful updates → durable table.
     * `AvailableNow` drains-and-stops (batch/replay mode); pass a

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 import org.scalatest.time.SpanSugar._
 import graft.sources.FrameTransport
-import graft.streaming.{Metrics, MetricsHttp}
+import graft.streaming.{AlertStateTable, AlertUpdate, Metrics, MetricsHttp}
 
 /** GET /metrics serves the Prometheus text format from a live server. */
 class MetricsHttpSpec extends AnyFunSuite {
@@ -61,6 +61,39 @@ class MetricsHttpSpec extends AnyFunSuite {
       val expected = counters.map(n => s"graft_$n" -> "counter") ++
         gauges.map(n => s"graft_$n" -> "gauge")
       assert(series.map { case (n, (t, _)) => n -> t } == expected.toMap, body)
+    } finally http.close()
+  }
+
+  test("the state table's merges, freed entries and segments are typed series, counters only grow") {
+    Metrics.reset()
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val table = new AlertStateTable(
+      java.nio.file.Files.createTempDirectory("alert_table_metrics").toString,
+      compactEvery = 3)
+    val http = new MetricsHttp(0)
+    def scrape(): Map[String, (String, Double)] = parseExposition(
+      HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${http.boundPort}/metrics")).GET().build(),
+        HttpResponse.BodyHandlers.ofString()).body())
+    try {
+      // compactEvery 3: merge 3 compacts, merge 4 frees its inputs
+      val seen = (1 to 5).map { g =>
+        table.merge(spark, Seq(AlertUpdate(s"k-$g", "live", g, 17, 1000.0 * g)).toDF())
+        scrape()
+      }
+      seen.foreach { m =>
+        assert(m("graft_table_merges")._1 == "counter")
+        assert(m("graft_table_entries_freed")._1 == "counter")
+        assert(m("graft_table_segments")._1 == "gauge")
+      }
+      val merges = seen.map(_("graft_table_merges")._2)
+      val freed = seen.map(_("graft_table_entries_freed")._2)
+      assert(merges == (1 to 5).map(_.toDouble), merges)
+      assert(freed.sliding(2).forall { case Seq(a, b) => b >= a }, freed)
+      assert(freed.last > freed.head, s"the GC after a compaction frees entries: $freed")
+      assert(seen.map(_("graft_table_segments")._2) == Seq(1.0, 2.0, 1.0, 2.0, 1.0))
     } finally http.close()
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.MetagameEvent
@@ -166,6 +167,45 @@ class StateTableSpec extends AnyFunSuite {
     val baseFiles = segFiles(dir, base)
     assert(baseFiles.count(_.startsWith("part-")) == 4 &&
       baseFiles.length == 8, s"a base is 4 part files and checksums: $baseFiles")
+  }
+
+  test("only a compaction and the merge after it free directory entries: at most 24 a cycle, and the default base is one file") {
+    val dir = Files.createTempDirectory("alert_table_freed")
+    val table = new AlertStateTable(dir.toString)
+    def tree: Set[String] = scala.util.Using.resource(Files.walk(dir))(
+      _.iterator().asScala.map(dir.relativize(_).toString).toSet)
+    def key(p: java.nio.file.Path) = Files.readAttributes(p,
+      classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+    def slotKeys = graft.io.Dirs.list(dir)
+      .filter(_.getFileName.toString.startsWith("_HEAD")).map(p => p -> key(p))
+    // seven keys over four writer tasks, so a multi-file base could form
+    val freed = (1 to 22).map { g =>
+      val before = tree
+      val keys = slotKeys
+      table.merge(spark, (0 until 7).map(i => AlertUpdate(s"k-$i", "live",
+        g * 10 + i, 17, 1000.0 * g + i)).toDF().repartition(4))
+      // a slot is overwritten in place, never replaced
+      keys.foreach { case (p, k) => assert(key(p) == k, s"$p was replaced") }
+      (before -- tree).size
+    }
+    // compactEvery 8: merges 8, 15 and 22 compact (each frees only its
+    // unsynced delta); 9 and 16 free the compacted segments
+    val compacting = Set(8, 15, 22)
+    val after = compacting.map(_ + 1)
+    freed.zipWithIndex.foreach { case (n, i) =>
+      if (!compacting(i + 1) && !after(i + 1))
+        assert(n == 0, s"merge ${i + 1} freed $n entries")
+    }
+    Seq(9 to 15, 16 to 22).foreach { cycle =>
+      val n = cycle.map(m => freed(m - 1)).sum
+      assert(n <= 24, s"merges $cycle freed $n entries: $freed")
+    }
+    val base = table.segmentDirs.head
+    val files = segFiles(dir.toString, base)
+    assert(table.segmentDirs == Seq(base) && base.endsWith("b") &&
+      files.length == 2 && files.count(_.startsWith("part-")) == 1,
+      s"the default base is one part file and its checksum: $files")
+    assert(table.snapshot(spark).count() == 7)
   }
 
   test("snapshot, rawAt and changesBetween are unchanged across a compaction") {

@@ -4,6 +4,9 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch compile test
+# this host's cost of freeing a synced file, on the filesystem the
+# benchmark runs on: the state table's commit and GC costs depend on it
+python3 tools/fs_cost_probe.py perfbench
 # the service path end to end: each run exits non-zero when its output
 # check fails, which fails this gate (set -e)
 for w in alert_live alert_bulk; do
