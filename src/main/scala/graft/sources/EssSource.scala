@@ -40,8 +40,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale note: like Spark's built-in socket/rate sources, ingest lands on
   * the driver and ships to executors inside the planned partitions; each
-  * batch is split across `numPartitions` (default: scheduler parallelism)
-  * contiguous ranges so replayed/bursty batches fan out over every core.
+  * batch is split across `numPartitions` (default: scheduler parallelism,
+  * at most one per 512 frames) contiguous ranges so replayed/bursty
+  * batches fan out over every core.
   * A firehose-scale feed should still land in Kafka and use that source;
   * this source's job is protocol parity, not bulk transport.
   */
@@ -63,6 +64,9 @@ object EssSource {
     StructField("seq", LongType, nullable = false),
     StructField("value", StringType, nullable = false),
     StructField("arrival", TimestampType, nullable = false)))
+
+  /** The fewest frames a default-split input partition carries. */
+  val MinFramesPerPartition = 512
 }
 
 private[sources] class EssTable(options: CaseInsensitiveStringMap)
@@ -164,15 +168,26 @@ private[sources] class EssMicroBatchStream(
     EssOffset(seq)
   }
 
-  // How many input partitions a batch is split across. Default: the
-  // session's scheduler parallelism, so a large replayed batch fans out
-  // over every core instead of running as one task (the round-1 choke).
-  private lazy val numPartitions: Int =
-    math.max(1, Option(options.get("numPartitions")).map(_.toInt).getOrElse {
-      try org.apache.spark.sql.SparkSession.active
-        .sparkContext.defaultParallelism
-      catch { case _: Throwable => 1 }
-    })
+  // How many input partitions a batch is split across: `numPartitions`
+  // when set; else the session's scheduler parallelism, so a large
+  // replayed batch fans out over every core instead of running as one
+  // task (the round-1 choke), but with at least `MinFramesPerPartition`
+  // frames to a partition. A task costs milliseconds to schedule against
+  // microseconds to parse a frame, and a durable publisher writes one
+  // fsync'd file per partition per batch, which on a filesystem mounted
+  // with online discard costs tens of milliseconds to free again.
+  private lazy val fixedPartitions: Option[Int] =
+    Option(options.get("numPartitions")).map(n => math.max(1, n.toInt))
+
+  private lazy val parallelism: Int =
+    try org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
+    catch { case _: Throwable => 1 }
+
+  private def partitionsFor(frames: Int): Int = {
+    val wanted = fixedPartitions.getOrElse(math.min(parallelism,
+      (frames + EssSource.MinFramesPerPartition - 1) / EssSource.MinFramesPerPartition))
+    math.max(1, math.min(wanted, frames))
+  }
 
   override def planInputPartitions(
       start: Offset, end: Offset): Array[InputPartition] = {
@@ -181,7 +196,7 @@ private[sources] class EssMicroBatchStream(
     // frames travel inside the serialized partitions to the executors,
     // split into contiguous near-equal sequence ranges (order preserved
     // within each partition; cross-partition order is carried by `seq`)
-    val p = math.max(1, math.min(numPartitions, frames.length))
+    val p = partitionsFor(frames.length)
     val base = frames.length / p
     val rem = frames.length % p
     val parts = new Array[InputPartition](p)

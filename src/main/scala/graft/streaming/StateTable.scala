@@ -71,9 +71,9 @@ import graft.model.MetagameEvent
   * after a compaction — and an ordinary merge frees none.
   *
   * A directory of the earlier layout (a `_CURRENT` pointer to `m…`
-  * manifest files, no `_HEAD*` file) reads as its current manifest; the
-  * first merge writes that version to a slot and then drops the old
-  * pointer and manifests.
+  * manifest files, no `_HEAD*` file that decodes) reads as its current
+  * manifest; the first merge writes that version to a slot and drops the
+  * old pointer and manifests only after its own head is forced.
   */
 class AlertStateTable(path: String, compactEvery: Int = 8,
     retainGenerations: Int = 2, compactPartitions: Int = 1)
@@ -96,16 +96,18 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     catch { case _: NoSuchFileException => None }
 
   /** The valid version records on disk, oldest first: every `_HEAD<i>`
-    * present, whatever `i` (so a reopen with another `retainGenerations`
-    * still finds the newest), or, in a directory of the earlier layout
-    * with no `_HEAD*` file, the manifest `_CURRENT` names.
+    * that decodes, whatever `i` (so a reopen with another
+    * `retainGenerations` still finds the newest). When no slot decodes,
+    * the manifest `_CURRENT` names: a directory of the earlier layout,
+    * whose adoption may have stopped with its first slot created but not
+    * yet written. Its pointer is deleted only after a slot was forced, so
+    * it is never read in place of a valid head.
     */
   private def heads(names: Seq[String]): Seq[Head] = {
     val slotted = names.flatMap(AlertStateTable.slotIndex)
-    if (slotted.nonEmpty)
-      slotted.flatMap(i => readFile(slotFile(i))
+      .flatMap(i => readFile(slotFile(i))
         .flatMap(AlertStateTable.decode).map(_.copy(slot = Some(i))))
-        .sortBy(_.id)
+    if (slotted.nonEmpty) slotted.sortBy(_.id)
     else (for {
       pointer <- readFile(file("_CURRENT"))
       manifest = new String(pointer, StandardCharsets.UTF_8).trim
@@ -257,10 +259,10 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
   private val noMarker = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
   /** Every filesystem step of a merge runs through here: `write` (one
-    * Spark segment write), `fsync` (one file), `dirsync`, `head` (one
-    * slot write) and `delete` (one path). In the table it only runs the
-    * step; a test overrides it to stop the table after any step, as a
-    * crash would.
+    * Spark segment write), `fsync` (one file), `dirsync`, `create` (a new
+    * empty slot file), `head` (one slot write) and `delete` (one path).
+    * In the table it only runs the step; a test overrides it to see the
+    * directory after each step, as a crash there would leave it.
     */
   protected def fsStep(step: String)(run: => Unit): Unit = run
 
@@ -280,19 +282,22 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
   /** Overwrite slot `i` in place with `head` and force it. The file is
     * never truncated (a truncate frees blocks too); a shorter record
     * leaves the old tail behind, which the length prefix skips. A slot
-    * file created here also needs its directory entry forced.
+    * file created here is empty until the write, and needs its directory
+    * entry forced after it.
     */
-  private def writeSlot(i: Int, head: Head): Unit = fsStep("head") {
+  private def writeSlot(i: Int, head: Head): Unit = {
     val p = slotFile(i)
     val created = !Files.exists(p)
-    val ch = FileChannel.open(p, StandardOpenOption.CREATE,
-      StandardOpenOption.WRITE)
-    try {
-      val buf = ByteBuffer.wrap(AlertStateTable.encode(head))
-      while (buf.hasRemaining) ch.write(buf, buf.position().toLong)
-      ch.force(true)
-    } finally ch.close()
-    if (created) FilePublisher.syncDir(Paths.get(path).toFile)
+    if (created) fsStep("create")(Files.createFile(p))
+    fsStep("head") {
+      val ch = FileChannel.open(p, StandardOpenOption.WRITE)
+      try {
+        val buf = ByteBuffer.wrap(AlertStateTable.encode(head))
+        while (buf.hasRemaining) ch.write(buf, buf.position().toLong)
+        ch.force(true)
+      } finally ch.close()
+    }
+    if (created) fsStep("dirsync")(FilePublisher.syncDir(Paths.get(path).toFile))
   }
 
   /** Merge one batch of updates into the table: write the batch as a new
@@ -348,9 +353,8 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
       if (compacting) {
         val base = s"s${AlertStateTable.pad(id)}b"
         // key-RANGE the compacted output: `compactPartitions` writer
-        // tasks each own a contiguous id range, so a caller with a 100×
-        // key space can compact into parallel files, each covering a
-        // disjoint key interval (a range-predicate reader can skip files
+        // tasks each own a contiguous id range, so the base's files cover
+        // disjoint key intervals (a range-predicate reader can skip files
         // via parquet min/max on id). Ranging BEFORE the resolve lets its
         // window reuse the range partitioning: one shuffle, not two.
         fsStep("write") {

@@ -99,6 +99,26 @@ class EssSourceSpec extends AnyFunSuite {
     assert(counts.max <= 16, s"unbalanced fan-out: $counts")
   }
 
+  test("the default split gives each input partition at least MinFramesPerPartition frames") {
+    def partitionsOf(frames: Int): Int = {
+      val ch = s"t5d_${frames}_${System.nanoTime()}"
+      (1 to frames).foreach(i => EssFeeds.push(ch, frame(s"17-$i", "started", 1000 + i)))
+      val name = s"ess_defpart_$ch"
+      val q = spark.readStream.format("ess").option("channel", ch).load()
+        .selectExpr("spark_partition_id() AS pid")
+        .writeStream.format("memory").queryName(name)
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      val pids = spark.table(name).as[Int].collect()
+      assert(pids.length == frames, "no frame lost or duplicated by the split")
+      pids.distinct.length
+    }
+    val min = graft.sources.EssSource.MinFramesPerPartition
+    val cores = spark.sparkContext.defaultParallelism
+    assert(partitionsOf(64) == 1, "a small batch is one task")
+    assert(partitionsOf(2 * min + 1) == math.min(cores, 3))
+  }
+
   test("maxFramesPerTrigger bounds every micro-batch of a replayed backlog") {
     val ch = s"t6_${System.nanoTime()}"
     (1 to 100).foreach(i => EssFeeds.push(ch, frame(s"17-$i", "started", 1000 + i)))

@@ -9,26 +9,28 @@ import graft.streaming.{AlertStateTable, AlertUpdate}
 
 /** The state table's durable protocol at every crash point: a merge stops
   * after each filesystem step (segment write, file fsync, directory
-  * fsync, slot write, delete) of a plain merge, a compacting merge and
-  * the merge that GCs a compaction's inputs; a fresh instance on the same
+  * fsync, slot create, slot write, delete) of a plain merge, a compacting
+  * merge, the merge that GCs a compaction's inputs and the merge that
+  * adopts a table of the earlier layout; a fresh instance on the same
   * directory must then read an acknowledged prefix, read no unreferenced
-  * segment, and sweep every orphan at its next merge. Single-row batches
+  * segment, and sweep every orphan at its next merge. Each merge runs
+  * once, copying its directory after every step, and single-row batches
   * keep each case to a few Spark jobs.
   */
 class StateTableCrashSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private final class Crash extends RuntimeException("crash")
-
-  /** A table that stops once `limit` filesystem steps have run. */
-  private final class Crashing(dir: Path, limit: Int)
+  /** A table that copies its directory to `at(k)` after its `k`-th
+    * filesystem step: each copy is what a crash after that step leaves.
+    */
+  private final class Recording(dir: Path, at: Int => Path)
       extends AlertStateTable(dir.toString, compactEvery = 3) {
-    private var steps = 0
+    var steps = 0
     override protected def fsStep(step: String)(run: => Unit): Unit = {
-      if (steps == limit) throw new Crash
       run
       steps += 1
+      copyTree(dir, at(steps))
     }
   }
 
@@ -92,48 +94,58 @@ class StateTableCrashSpec extends AnyFunSuite {
       s"unexpected entries: $onDisk")
   }
 
+  /** Every file under `dir` by relative path, with its bytes. */
+  private def tree(dir: Path): Seq[(String, Seq[Byte])] =
+    Using.resource(Files.walk(dir))(_.iterator().asScala.toList)
+      .filter(Files.isRegularFile(_))
+      .map(p => dir.relativize(p).toString -> Files.readAllBytes(p).toSeq)
+      .sortBy(_._1)
+
+  /** Run merge `j` (batch index) from the acknowledged directory `start`
+    * and check every point where it can stop: a fresh table there reads
+    * an acknowledged prefix and only referenced segments, and the
+    * redelivered batch's merge acknowledges it and leaves no orphan. A
+    * step that leaves the same files as the one before (an fsync) is
+    * checked once. Returns the merge's step count and the directory it
+    * completed in.
+    */
+  private def everyCrashPoint(root: Path, start: Path, j: Int): (Int, Path) = {
+    val at = (k: Int) => root.resolve(s"m${j + 1}_k$k")
+    val run = root.resolve(s"m${j + 1}")
+    copyTree(start, run)
+    copyTree(start, at(0))
+    val rec = new Recording(run, at)
+    merge(rec, j)
+    val trees = (0 until rec.steps).map(k => tree(at(k)))
+    (0 until rec.steps).filter(k => k == 0 || trees(k) != trees(k - 1))
+      .foreach { k =>
+        val fresh = table(at(k))
+        val got = rows(fresh)
+        assert(got == expected(j) || got == expected(j + 1),
+          s"merge ${j + 1} stopped after step $k: $got is no acknowledged prefix")
+        readsOnlyReferenced(fresh)
+        // the stream redelivers the batch that did not acknowledge
+        merge(fresh, j)
+        assert(rows(fresh) == expected(j + 1), s"merge ${j + 1}, step $k")
+        noOrphans(fresh, at(k))
+      }
+    (rec.steps, run)
+  }
+
   test("a merge stopped after any filesystem step leaves an acknowledged prefix, and the next merge sweeps its orphans") {
     val root = Files.createTempDirectory("alert_crash")
-    // the acknowledged directory before each of m1..m4, as the starting
-    // point of that merge
-    val prepared = (0 to 3).map(j => root.resolve(s"prep$j"))
-    val work = root.resolve("work")
-    Files.createDirectories(prepared(0))
-    Files.createDirectories(work)
-    val ref = table(work)
-    (0 until 3).foreach { j =>
-      merge(ref, j)
-      copyTree(work, prepared(j + 1))
-    }
-    val perMerge = (0 to 3).map { j =>
-      var k = 0
-      var crashed = true
-      while (crashed) {
-        val dir = root.resolve(s"m${j + 1}_k$k")
-        copyTree(prepared(j), dir)
-        crashed =
-          try { merge(new Crashing(dir, k), j); false }
-          catch { case _: Crash => true }
-        if (crashed) {
-          val fresh = table(dir)
-          val got = rows(fresh)
-          assert(got == expected(j) || got == expected(j + 1),
-            s"merge ${j + 1} stopped after step $k: $got is no acknowledged prefix")
-          readsOnlyReferenced(fresh)
-          // the stream redelivers the batch that did not acknowledge
-          merge(fresh, j)
-          assert(rows(fresh) == expected(j + 1), s"merge ${j + 1}, step $k")
-          noOrphans(fresh, dir)
-          k += 1
-        }
-      }
-      k
+    var start = Files.createDirectories(root.resolve("empty"))
+    val steps = (0 to 3).map { j =>
+      val (n, done) = everyCrashPoint(root, start, j)
+      start = done
+      n
     }
     // a plain merge: write, fsync part and .crc, sync the segment and the
-    // table directory, write the slot; a compacting merge adds its base
+    // table directory, then create, write and dir-sync a new slot (m1,
+    // m2) or overwrite an existing one; a compacting merge adds its base
     // write and the three deletes of its unsynced delta; the GC after it
     // deletes two 3-entry deltas
-    assert(perMerge == Seq(6, 6, 10, 12), perMerge)
+    assert(steps == Seq(8, 8, 10, 12), steps)
   }
 
   test("garbage in the newest slot: the table reads the previous version") {
@@ -180,12 +192,15 @@ class StateTableCrashSpec extends AnyFunSuite {
     assert(again.versions == narrow.versions && rows(again) == expected(5))
   }
 
-  test("a table of the earlier _CURRENT-and-manifest layout is adopted, not collected") {
-    val dir = Files.createTempDirectory("alert_crash_adopt")
-    // the earlier layout by hand: two delta segments, a manifest per
-    // version and a pointer to the newest
-    val seg = (i: Int) => f"s$i%018dd"
-    val man = (i: Int) => f"m$i%018d"
+  private val seg = (i: Int) => f"s$i%018dd"
+  private val man = (i: Int) => f"m$i%018d"
+
+  /** A table of the earlier layout after batches 0 and 1, built by hand
+    * once: two delta segments, a manifest per version and a pointer to
+    * the newest.
+    */
+  private lazy val oldLayout: Path = {
+    val dir = Files.createTempDirectory("alert_crash_old")
     (0 until 2).foreach(i => batches(i).toDF().coalesce(1).write
       .parquet(dir.resolve(seg(i + 1)).toString))
     def put(name: String, body: String): Unit =
@@ -193,6 +208,17 @@ class StateTableCrashSpec extends AnyFunSuite {
     put(man(1), seg(1))
     put(man(2), s"${seg(1)}\n${seg(2)}")
     put("_CURRENT", man(2))
+    dir
+  }
+
+  private def copyOfOldLayout(): Path = {
+    val dir = Files.createTempDirectory("alert_crash_adopt")
+    copyTree(oldLayout, dir)
+    dir
+  }
+
+  test("a table of the earlier _CURRENT-and-manifest layout is adopted, not collected") {
+    val dir = copyOfOldLayout()
     val t = table(dir)
     assert(t.versions == Seq(man(2)))
     assert(t.segmentDirs == Seq(seg(1), seg(2)))
@@ -208,5 +234,31 @@ class StateTableCrashSpec extends AnyFunSuite {
     merge(t, 3)
     assert(rows(t) == expected(4) && rows(table(dir)) == expected(4))
     noOrphans(t, dir)
+  }
+
+  test("the merge that adopts the earlier layout leaves an acknowledged prefix at every crash point") {
+    val root = Files.createTempDirectory("alert_crash_adopt_steps")
+    val (steps, _) = everyCrashPoint(root, oldLayout, 2)
+    // write the delta; create, write and dir-sync _HEAD0 with the adopted
+    // version; the compaction's base write, fsyncs and directory syncs;
+    // create, write and dir-sync _HEAD1; delete the unsynced delta (3),
+    // the pointer and both manifests
+    assert(steps == 18, steps)
+  }
+
+  test("an earlier-layout table whose first slot is empty or garbage reads its manifest, and the next merge keeps its segments") {
+    Seq(Array.emptyByteArray,
+        "not a version record".getBytes(StandardCharsets.UTF_8)).foreach { torn =>
+      val dir = copyOfOldLayout()
+      Files.write(dir.resolve("_HEAD0"), torn)
+      val t = table(dir)
+      assert(t.versions == Seq(man(2)) && rows(t) == expected(2))
+      merge(t, 2)
+      assert(rows(t) == expected(3))
+      assert(Files.exists(dir.resolve(seg(1))) && Files.exists(dir.resolve(seg(2))),
+        s"the adopted version's segments were collected: ${names(dir)}")
+      assert(rows(table(dir)) == expected(3))
+      noOrphans(t, dir)
+    }
   }
 }

@@ -4,9 +4,11 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch compile test
-# this host's cost of freeing a synced file, on the filesystem the
-# benchmark runs on: the state table's commit and GC costs depend on it
-python3 tools/fs_cost_probe.py perfbench
+# this host's cost of freeing a synced file, probed in the repository
+# root (the filesystem perfbench/ runs on, without writing under it): the
+# state table's commit and GC costs depend on it. Informational only, so
+# a probe that cannot run does not fail the gate
+python3 tools/fs_cost_probe.py . || echo '{"fs_cost_probe": "failed"}'
 # the service path end to end: each run exits non-zero when its output
 # check fails, which fails this gate (set -e)
 for w in alert_live alert_bulk; do
