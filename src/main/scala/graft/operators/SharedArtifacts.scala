@@ -113,6 +113,9 @@ private[graft] object SharedArtifacts {
     if (Files.exists(p))
       try Files.walk(p).iterator().asScala.toSeq.reverse
         .foreach(Files.deleteIfExists(_))
-      catch { case _: java.io.IOException => () } // best-effort reclaim
+      catch { // best-effort reclaim; a walk whose directory another
+        // thread deletes under it throws UncheckedIOException
+        case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+      }
   }
 }

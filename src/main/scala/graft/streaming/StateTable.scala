@@ -1,11 +1,12 @@
 package graft.streaming
 
+import java.io.{IOException, OutputStream}
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
-import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.TimeoutException
-import java.util.zip.CRC32
+import java.util.zip.{CRC32, CRC32C, CheckedInputStream}
 import scala.concurrent.Await
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
@@ -38,47 +39,64 @@ import graft.model.MetagameEvent
   * into a fresh base segment instead, so read amplification is bounded
   * and compaction cost amortizes to |table|/compactEvery per batch.
   *
+  * A segment is one parquet file directly in the table directory,
+  * `s<id>d` (a delta) or `s<id>b` (a base). Spark writes it into a
+  * staging directory `s<id>dw` / `s<id>bw` as one part file with no
+  * `_SUCCESS` marker; the part file is renamed to the segment's name and
+  * the staging directory (with the part file's `.crc`) is deleted.
+  *
   * Versions live in `max(retainGenerations, 2)` fixed head slots,
   * `_HEAD0`, `_HEAD1`, … — the superblock pattern of log-structured
   * stores. A slot holds one version record: the payload length, the
-  * payload (the version id, then the segment list) and its CRC32. The
-  * newest valid record is the current version; a torn or corrupt slot is
-  * ignored. A merge overwrites, in place, the slot of the oldest retained
-  * version (never the current one's) and forces it; a crash at any point
-  * leaves the current version readable. GC then deletes every segment no
-  * retained version names, so a reader that resolved the current version
-  * just before a merge still finds every file it planned (the previous
-  * version is retained), `rawAt` can time-travel the window, and the
-  * next merge sweeps the orphans of a merge that crashed.
+  * payload (the version id, then one `name length crc32c` line per
+  * segment) and its CRC32. The newest valid record is the current
+  * version; a torn or corrupt slot is ignored. A merge overwrites, in
+  * place, the slot of the oldest retained version (never the current
+  * one's) and forces it; a crash at any point leaves the current version
+  * readable. GC then deletes every segment no retained version names, so
+  * a reader that resolved the current version just before a merge still
+  * finds every file it planned (the previous version is retained),
+  * `rawAt` can time-travel the window, and the next merge sweeps the
+  * orphans (segments, staging directories) of a merge that crashed.
   *
-  * What is fsync'd, and why: every segment a head names (each part file,
-  * its `.crc` and the segment directory), then the table directory, so
-  * the segment's entry is durable before any head names it, then the
-  * slot. A compacting merge still writes its delta — the batch's plan
-  * must run exactly once — but no head ever names that delta, so it is
-  * read back into the base and deleted unsynced.
+  * Integrity: every read checks each segment's byte length and whole-file
+  * CRC32C against its head line before Spark opens it, and fails with an
+  * error naming the segment. This replaces the Hadoop `.crc` sidecar.
+  *
+  * What is fsync'd, and why: every segment a head names (its one file),
+  * then the table directory, so the segment's entry is durable before any
+  * head names it, then the slot. The staging directory and the `.crc` are
+  * never synced. A compacting merge still writes its delta — the batch's
+  * plan must run exactly once — but no head ever names that delta, so it
+  * is read back from its staging directory into the base and deleted
+  * unsynced.
   *
   * The cost of freeing a block: on a filesystem mounted with online
-  * discard, unlinking a file whose blocks were fsync'd costs tens of
-  * milliseconds (58 ms for a 4 KiB file on ext4 with `discard`, against
-  * 0.04 ms for an empty file and 0.23 ms to overwrite a synced file in
-  * place and `fdatasync` it), does not batch, and stalls every other
-  * fsync on the device. So no commit unlinks, renames over or truncates
-  * a synced file: a slot is overwritten without truncation, a delta is
-  * one part file with no `_SUCCESS` marker, and a base is
-  * `compactPartitions` files (one by default). A 7-merge cycle at the
-  * defaults frees 24 directory entries — 21 synced ones, in the merge
-  * after a compaction — and an ordinary merge frees none.
+  * discard, unlinking a file whose blocks were fsync'd, or removing a
+  * directory that was, costs tens of milliseconds (58 ms for a 4 KiB
+  * file and 49 ms for an empty directory on ext4 with `discard`, against
+  * 0.3 ms for a directory never synced and 0.23 ms to overwrite a synced
+  * file in place and `fdatasync` it), does not batch, and stalls every
+  * other fsync on the device. So no commit unlinks, renames over or
+  * truncates a synced file: a slot is overwritten without truncation and
+  * a segment is one synced file. An ordinary merge fsyncs one segment
+  * file and frees only its own unsynced staging entries; a 7-merge cycle
+  * at the defaults frees 7 synced segments, all in the merge after a
+  * compaction.
   *
-  * A directory of the earlier layout (a `_CURRENT` pointer to `m…`
-  * manifest files, no `_HEAD*` file that decodes) reads as its current
-  * manifest; the first merge writes that version to a slot and drops the
-  * old pointer and manifests only after its own head is forced.
+  * Tables of earlier layouts are read and adopted: a segment that is a
+  * directory (part files with `.crc`s, named by a head line without a
+  * checksum) reads as before, the next compaction folds it into a file
+  * base, and GC deletes it recursively. A directory with a `_CURRENT`
+  * pointer to `m…` manifest files and no `_HEAD*` file that decodes
+  * reads as its current manifest; the first merge writes that version to
+  * a slot and drops the old pointer and manifests only after its own head
+  * is forced.
   */
 class AlertStateTable(path: String, compactEvery: Int = 8,
-    retainGenerations: Int = 2, compactPartitions: Int = 1)
+    retainGenerations: Int = 2)
     extends Serializable {
-  import AlertStateTable.Head
+  import AlertStateTable.{Head, Segment}
 
   private val slots = math.max(retainGenerations, 2)
 
@@ -114,15 +132,18 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
       body <- readFile(file(manifest))
       id <- manifest.drop(1).toLongOption
     } yield Head(id, new String(body, StandardCharsets.UTF_8)
-      .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq, None)).toSeq
+      .linesIterator.map(_.trim).filter(_.nonEmpty).map(Segment(_, None))
+      .toSeq, None)).toSeq
   }
 
   private def heads: Seq[Head] = heads(entries)
 
-  /** Segment dirs (relative to `path`) of the current version, in
-    * application order. Exposed for the cost-scaling spec.
+  /** Segment names (relative to `path`) of the current version, in
+    * application order.
     */
-  def segmentDirs: Seq[String] =
+  def segmentDirs: Seq[String] = current.map(_.name)
+
+  private def current: Seq[Segment] =
     heads.lastOption.map(_.segments).getOrElse(Seq.empty)
 
   /** Last-writer-wins resolution. Tie-break beyond (timestamp, eventId):
@@ -145,20 +166,37 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       AlertStateTable.schema)
 
-  /** Segment rows as written, read with the table's schema: inferring it
-    * would launch a footer-reading job per read.
+  /** A segment whose head line carries a length and CRC32C must match
+    * them byte for byte before it is read.
     */
-  private def readRows(spark: SparkSession, segs: Seq[String]): DataFrame =
-    spark.read.schema(AlertStateTable.schema)
-      .parquet(segs.map(s => s"$path/$s"): _*)
+  private def verify(seg: Segment): Unit = seg.sum.foreach { want =>
+    val got =
+      try AlertStateTable.checksum(file(seg.name))
+      catch { case e: NoSuchFileException =>
+        throw new IOException(s"state-table segment ${seg.name} is missing", e) }
+    if (got != want)
+      throw new IOException(f"state-table segment ${seg.name} fails its check: " +
+        f"${got._1} bytes with CRC32C ${got._2}%08x, its head names " +
+        f"${want._1} bytes with CRC32C ${want._2}%08x")
+  }
 
-  private def readSegments(spark: SparkSession, segs: Seq[String]): DataFrame =
+  /** Segment rows as written, read with the table's schema: inferring it
+    * would launch a footer-reading job per read. Each segment is checked
+    * first.
+    */
+  private def readRows(spark: SparkSession, segs: Seq[Segment]): DataFrame = {
+    segs.foreach(verify)
+    spark.read.schema(AlertStateTable.schema)
+      .parquet(segs.map(s => s"$path/${s.name}"): _*)
+  }
+
+  private def readSegments(spark: SparkSession, segs: Seq[Segment]): DataFrame =
     if (segs.isEmpty) empty(spark)
     else resolve(readRows(spark, segs))
 
   /** All retained rows — live entries and tombstones, LWW-resolved. */
   def raw(spark: SparkSession): DataFrame =
-    readSegments(spark, segmentDirs)
+    readSegments(spark, current)
 
   /** Retained versions, oldest → newest (time travel horizon =
     * `retainGenerations`). A version's name is `m` and its zero-padded
@@ -167,7 +205,7 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     */
   def versions: Seq[String] = heads.map(_.name)
 
-  private def segmentsAt(version: String): Seq[String] =
+  private def segmentsAt(version: String): Seq[Segment] =
     heads.find(_.name == version).map(_.segments).getOrElse(Seq.empty)
 
   /** The table as of a retained version — the lake-table time travel the
@@ -239,11 +277,12 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
         col("c.img.timestamp").as("timestamp"))
   }
 
-  /** Next version id: one past the highest id any head, manifest or
-    * segment carries. Derived from the DIRECTORY, not a clock —
-    * `System.nanoTime` has an arbitrary per-boot origin, so clock-named
-    * versions would sort wrongly after a restart of a persistent table.
-    * Zero-padded to fixed width so lexicographic order IS numeric order.
+  /** Next version id: one past the highest id any head, manifest,
+    * segment or staging directory carries. Derived from the DIRECTORY,
+    * not a clock — `System.nanoTime` has an arbitrary per-boot origin, so
+    * clock-named versions would sort wrongly after a restart of a
+    * persistent table. Zero-padded to fixed width so lexicographic order
+    * IS numeric order.
     */
   private def nextId(names: Seq[String], found: Seq[Head]): Long = {
     val ids = names
@@ -259,24 +298,48 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
   private val noMarker = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
   /** Every filesystem step of a merge runs through here: `write` (one
-    * Spark segment write), `fsync` (one file), `dirsync`, `create` (a new
-    * empty slot file), `head` (one slot write) and `delete` (one path).
-    * In the table it only runs the step; a test overrides it to see the
-    * directory after each step, as a crash there would leave it.
+    * Spark segment write), `rename` (a part file to its segment name),
+    * `fsync` (one file), `dirsync`, `create` (a new empty slot file),
+    * `head` (one slot write) and `delete` (one path). In the table it
+    * only runs the step; a test overrides it to see the directory after
+    * each step, as a crash there would leave it.
     */
   protected def fsStep(step: String)(run: => Unit): Unit = run
 
-  /** fsync every file in a freshly-written segment directory, then the
-    * directory itself: Spark's local-FS parquet writer never forces the
-    * part files to disk, so without this a POWER loss could leave a head
-    * naming a segment whose data blocks were lost. Same best-effort
-    * contract as [[FilePublisher.syncFile]].
+  /** The staging directory Spark writes segment `seg` into. */
+  private def staging(seg: String): String = s"${seg}w"
+
+  /** Write `df` into segment `seg`'s staging directory: one writer task,
+    * so one part file, and no `_SUCCESS` marker.
     */
-  private def syncSegment(seg: String): Unit = {
-    val d = file(seg)
-    Dirs.list(d).filter(Files.isRegularFile(_))
-      .foreach(f => fsStep("fsync")(FilePublisher.syncFile(f)))
-    fsStep("dirsync")(FilePublisher.syncDir(d.toFile))
+  private def write(seg: String, df: DataFrame): Unit = fsStep("write") {
+    df.write.mode(SaveMode.Overwrite).option(noMarker, "false")
+      .parquet(s"$path/${staging(seg)}")
+  }
+
+  /** Make a written segment a file of the table directory: rename the
+    * staging directory's one part file to `seg`, delete what is left of
+    * the staging directory (the part file's `.crc` and the directory,
+    * neither ever synced, so freeing them is cheap), and fsync the file:
+    * Spark's local-FS parquet writer never forces it to disk, so without
+    * this a POWER loss could leave a head naming a segment whose data
+    * blocks were lost. Same best-effort contract as
+    * [[FilePublisher.syncFile]]. Returns the segment with its length and
+    * CRC32C.
+    */
+  private def publish(seg: String): Segment = {
+    val parts = Dirs.list(file(staging(seg)))
+      .filter(_.getFileName.toString.startsWith("part-"))
+    val part = parts match {
+      case Seq(p) => p
+      case _ => throw new IllegalStateException(
+        s"state-table segment $seg: expected one part file, found $parts")
+    }
+    fsStep("rename")(Files.move(part, file(seg), StandardCopyOption.ATOMIC_MOVE))
+    Metrics.add(AlertStateTable.FreedMetric, delete(staging(seg)))
+    val sum = AlertStateTable.checksum(file(seg))
+    fsStep("fsync")(FilePublisher.syncFile(file(seg)))
+    Segment(seg, Some(sum))
   }
 
   /** Overwrite slot `i` in place with `head` and force it. The file is
@@ -311,8 +374,6 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     * rows; an empty segment is deleted before any head is written.
     * The batch is written unresolved: readers and compaction resolve
     * last-writer-wins, so a duplicate id inside one segment is harmless.
-    * It is written as one file, with no `_SUCCESS` marker (see the class
-    * doc for why the file count matters).
     */
   def merge(spark: SparkSession, updates: DataFrame): Unit = synchronized {
     val names = entries
@@ -322,14 +383,10 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     val delta = s"s${AlertStateTable.pad(id)}d"
     val compacting = segs.length + 1 >= compactEvery
     val rows = Observation()
-    fsStep("write") {
-      updates
-        .select(AlertStateTable.schema.fieldNames.toIndexedSeq.map(col): _*)
-        .coalesce(1)
-        .observe(rows, count(lit(1)).as("rows"))
-        .write.mode(SaveMode.Overwrite).option(noMarker, "false")
-        .parquet(s"$path/$delta")
-    }
+    write(delta, updates
+      .select(AlertStateTable.schema.fieldNames.toIndexedSeq.map(col): _*)
+      .coalesce(1)
+      .observe(rows, count(lit(1)).as("rows")))
     // the count arrives through the session's listener bus, which drops
     // events when its queue overflows: wait a bounded time, and without
     // a count keep the segment (an empty write still leaves a readable
@@ -338,7 +395,7 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
       try Some(Await.result(rows.future, 1.minute).getAs[Long]("rows"))
       catch { case _: TimeoutException => None }
     if (written.contains(0L)) {
-      Metrics.add(AlertStateTable.FreedMetric, delete(delta))
+      Metrics.add(AlertStateTable.FreedMetric, delete(staging(delta)))
       return
     }
     // a directory of the earlier layout: its current manifest becomes
@@ -352,23 +409,13 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     val newSegs =
       if (compacting) {
         val base = s"s${AlertStateTable.pad(id)}b"
-        // key-RANGE the compacted output: `compactPartitions` writer
-        // tasks each own a contiguous id range, so the base's files cover
-        // disjoint key intervals (a range-predicate reader can skip files
-        // via parquet min/max on id). Ranging BEFORE the resolve lets its
-        // window reuse the range partitioning: one shuffle, not two.
-        fsStep("write") {
-          resolve(readRows(spark, segs :+ delta)
-            .repartitionByRange(compactPartitions, col("id")))
-            .write.mode(SaveMode.Overwrite).option(noMarker, "false")
-            .parquet(s"$path/$base")
-        }
-        syncSegment(base)
-        Seq(base)
-      } else {
-        syncSegment(delta)
-        segs :+ delta
-      }
+        // the unsynced delta is read from its staging directory; one
+        // partition before the resolve makes the base one file and meets
+        // the window's clustering, so the plan has one shuffle
+        write(base, resolve(readRows(spark, segs :+ Segment(staging(delta), None))
+          .repartition(1)))
+        Seq(publish(base))
+      } else segs :+ publish(delta)
     // the new segment's directory entry is durable before a head names
     // it; then the slot of the oldest retained version (a missing or
     // invalid slot first) takes the new version — never the current
@@ -390,7 +437,8 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
     * is dropped once it falls out of the newest `slots` versions, before
     * its segments. The earlier layout's pointer and manifests go once a
     * head exists. Also sweeps the orphans of merges that crashed before
-    * their head write. Returns the number of entries deleted.
+    * their head write, staging directories included. Returns the number
+    * of entries deleted.
     */
   private def gc(after: Seq[Head]): Int = {
     val newest = after.takeRight(slots).toSet
@@ -399,7 +447,7 @@ class AlertStateTable(path: String, compactEvery: Int = 8,
       .filter(i => i >= slots && !newest.exists(_.slot.contains(i)))
       .map(i => delete(s"_HEAD$i")).sum
     val keep = after.filter(h => h.slot.exists(_ < slots) || newest(h))
-      .flatMap(_.segments).toSet
+      .flatMap(_.segments).map(_.name).toSet
     slotsFreed + names.filter(n => n.startsWith("_CURRENT") ||
         n.startsWith("m") || (n.startsWith("s") && !keep(n)))
       .map(delete).sum
@@ -438,10 +486,30 @@ object AlertStateTable {
 
   private def pad(id: Long): String = f"$id%018d"
 
+  /** A segment a version names, with the byte length and CRC32C of its
+    * file; none for a directory segment of an earlier layout, or the
+    * unsynced delta a compaction reads.
+    */
+  private final case class Segment(name: String, sum: Option[(Long, Int)]) {
+    def line: String = sum.fold(name) { case (len, crc) => f"$name $len $crc%08x" }
+  }
+
+  private object Segment {
+    def parse(line: String): Option[Segment] = line.split(' ') match {
+      case Array(name) => Some(Segment(name, None))
+      case Array(name, len, crc) =>
+        for {
+          l <- len.toLongOption
+          c <- scala.util.Try(Integer.parseUnsignedInt(crc, 16)).toOption
+        } yield Segment(name, Some((l, c)))
+      case _ => None
+    }
+  }
+
   /** One version record and the slot it was read from (none for the
     * earlier layout's manifest).
     */
-  private final case class Head(id: Long, segments: Seq[String],
+  private final case class Head(id: Long, segments: Seq[Segment],
       slot: Option[Int]) {
     def name: String = s"m${pad(id)}"
   }
@@ -450,11 +518,18 @@ object AlertStateTable {
     if (name.startsWith("_HEAD")) name.drop(5).toIntOption.filter(_ >= 0)
     else None
 
-  /** A slot record: payload length, payload (the id, then one segment per
-    * line, UTF-8), CRC32 of the payload.
+  /** The byte length and CRC32C of a whole file. */
+  private def checksum(p: Path): (Long, Int) =
+    Using.resource(new CheckedInputStream(Files.newInputStream(p), new CRC32C)) { in =>
+      val len = in.transferTo(OutputStream.nullOutputStream())
+      (len, in.getChecksum.getValue.toInt)
+    }
+
+  /** A slot record: payload length, payload (the id, then one segment
+    * line per segment, UTF-8), CRC32 of the payload.
     */
   private def encode(h: Head): Array[Byte] = {
-    val payload = (h.id.toString +: h.segments).mkString("\n")
+    val payload = (h.id.toString +: h.segments.map(_.line)).mkString("\n")
       .getBytes(StandardCharsets.UTF_8)
     val crc = new CRC32
     crc.update(payload)
@@ -462,7 +537,10 @@ object AlertStateTable {
       .put(payload).putInt(crc.getValue.toInt).array()
   }
 
-  /** The record a slot holds, or None when it is torn or corrupt. */
+  /** The record a slot holds, or None when it is torn or corrupt. A
+    * segment line is `name length crc32c`, or a bare name (a directory
+    * segment, or any slot of the earlier layout).
+    */
   private def decode(bytes: Array[Byte]): Option[Head] = {
     val buf = ByteBuffer.wrap(bytes)
     if (bytes.length < 8) return None
@@ -474,7 +552,10 @@ object AlertStateTable {
     crc.update(payload)
     if (buf.getInt() != crc.getValue.toInt) return None
     new String(payload, StandardCharsets.UTF_8).split("\n").toSeq match {
-      case first +: segs => first.toLongOption.map(Head(_, segs, None))
+      case first +: lines =>
+        val segs = lines.map(Segment.parse)
+        if (segs.exists(_.isEmpty)) None
+        else first.toLongOption.map(Head(_, segs.flatten, None))
       case _ => None
     }
   }

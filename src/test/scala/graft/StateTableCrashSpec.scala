@@ -8,14 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{AlertStateTable, AlertUpdate}
 
 /** The state table's durable protocol at every crash point: a merge stops
-  * after each filesystem step (segment write, file fsync, directory
-  * fsync, slot create, slot write, delete) of a plain merge, a compacting
-  * merge, the merge that GCs a compaction's inputs and the merge that
-  * adopts a table of the earlier layout; a fresh instance on the same
-  * directory must then read an acknowledged prefix, read no unreferenced
-  * segment, and sweep every orphan at its next merge. Each merge runs
-  * once, copying its directory after every step, and single-row batches
-  * keep each case to a few Spark jobs.
+  * after each filesystem step (segment write, rename out of the staging
+  * directory, file fsync, directory fsync, slot create, slot write,
+  * delete) of a plain merge, a compacting merge, the merge that GCs a
+  * compaction's inputs and the merge that adopts a table of the earlier
+  * layout; a fresh instance on the same directory must then read an
+  * acknowledged prefix, read no unreferenced segment, and sweep every
+  * orphan at its next merge. A crash inside a Spark write is built by
+  * hand. Each merge runs once, copying its directory after every step,
+  * and single-row batches keep each case to a few Spark jobs.
   */
 class StateTableCrashSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -72,21 +73,24 @@ class StateTableCrashSpec extends AnyFunSuite {
     * every retained version is readable: no orphan is read, no named
     * segment is missing.
     */
-  private def readsOnlyReferenced(t: AlertStateTable): Unit = {
-    assert(segmentsOf(t.raw(spark)).toSet == t.segmentDirs.toSet,
+  private def readsOnlyReferenced(t: AlertStateTable, dir: Path): Unit = {
+    assert(segmentsOf(dir, t.raw(spark)).toSet == t.segmentDirs.toSet,
       s"the current version reads outside ${t.segmentDirs}")
-    t.versions.foreach(v => segmentsOf(t.rawAt(spark, v)))
+    t.versions.foreach(v => segmentsOf(dir, t.rawAt(spark, v)))
   }
 
-  /** The segment directories a read plans files from. */
-  private def segmentsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+  /** The table-directory entries (segment files or directories) a read
+    * plans files from.
+    */
+  private def segmentsOf(dir: Path, df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.inputFiles.toSeq
-      .map(f => Paths.get(new java.net.URI(f)).getParent.getFileName.toString)
+      .map(f => dir.toRealPath().relativize(Paths.get(new java.net.URI(f)).toRealPath())
+        .getName(0).toString)
       .distinct
 
   /** Nothing on disk but the slots and the retained versions' segments. */
   private def noOrphans(t: AlertStateTable, dir: Path): Unit = {
-    val named = t.versions.flatMap(v => segmentsOf(t.rawAt(spark, v))).toSet
+    val named = t.versions.flatMap(v => segmentsOf(dir, t.rawAt(spark, v))).toSet
     val onDisk = names(dir)
     assert(onDisk.filter(_.startsWith("s")).toSet == named,
       s"orphans left: $onDisk, named $named")
@@ -123,7 +127,7 @@ class StateTableCrashSpec extends AnyFunSuite {
         val got = rows(fresh)
         assert(got == expected(j) || got == expected(j + 1),
           s"merge ${j + 1} stopped after step $k: $got is no acknowledged prefix")
-        readsOnlyReferenced(fresh)
+        readsOnlyReferenced(fresh, at(k))
         // the stream redelivers the batch that did not acknowledge
         merge(fresh, j)
         assert(rows(fresh) == expected(j + 1), s"merge ${j + 1}, step $k")
@@ -140,12 +144,38 @@ class StateTableCrashSpec extends AnyFunSuite {
       start = done
       n
     }
-    // a plain merge: write, fsync part and .crc, sync the segment and the
-    // table directory, then create, write and dir-sync a new slot (m1,
-    // m2) or overwrite an existing one; a compacting merge adds its base
-    // write and the three deletes of its unsynced delta; the GC after it
-    // deletes two 3-entry deltas
-    assert(steps == Seq(8, 8, 10, 12), steps)
+    // a plain merge: write into the staging directory, rename the part
+    // file out, delete the staging .crc and directory, fsync the segment
+    // file, sync the table directory, then create, write and dir-sync a
+    // new slot (m1, m2) or overwrite an existing one; a compacting merge
+    // adds the delta write before its base's and the three deletes of
+    // the delta's staging directory; the GC after it deletes two
+    // one-file deltas
+    assert(steps == Seq(9, 9, 11, 9), steps)
+  }
+
+  test("a crash inside a Spark write leaves a staging directory that is never read and the next merge sweeps") {
+    val dir = Files.createTempDirectory("alert_crash_write")
+    val t = table(dir)
+    merge(t, 0)
+    merge(t, 1)
+    // the third merge's write stopped mid-task: a committed part file cut
+    // short and an attempt's truncated file under `_temporary`
+    val whole = Files.readAllBytes(dir.resolve(t.segmentDirs.last))
+    val cut = java.util.Arrays.copyOf(whole, whole.length / 2)
+    val stage = dir.resolve(seg(3) + "w")
+    val attempt = Files.createDirectories(stage.resolve(
+      "_temporary/0/_temporary/attempt_202601010000_0003_m_000000_3"))
+    Files.write(attempt.resolve("part-00000-3.snappy.parquet"), cut)
+    Files.write(stage.resolve("part-00000-2.snappy.parquet"), cut)
+    val fresh = table(dir)
+    assert(rows(fresh) == expected(2))
+    readsOnlyReferenced(fresh, dir)
+    merge(fresh, 2)
+    assert(rows(fresh) == expected(3))
+    assert(!Files.exists(stage), s"the staging directory stays: ${names(dir)}")
+    noOrphans(fresh, dir)
+    assert(rows(table(dir)) == expected(3))
   }
 
   test("garbage in the newest slot: the table reads the previous version") {
@@ -240,10 +270,11 @@ class StateTableCrashSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("alert_crash_adopt_steps")
     val (steps, _) = everyCrashPoint(root, oldLayout, 2)
     // write the delta; create, write and dir-sync _HEAD0 with the adopted
-    // version; the compaction's base write, fsyncs and directory syncs;
-    // create, write and dir-sync _HEAD1; delete the unsynced delta (3),
-    // the pointer and both manifests
-    assert(steps == 18, steps)
+    // version; the compaction's base write, rename, staging deletes (2),
+    // fsync and directory sync; create, write and dir-sync _HEAD1; delete
+    // the unsynced delta's staging directory (3), the pointer and both
+    // manifests
+    assert(steps == 19, steps)
   }
 
   test("an earlier-layout table whose first slot is empty or garbage reads its manifest, and the next merge keeps its segments") {

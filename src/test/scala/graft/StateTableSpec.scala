@@ -103,108 +103,88 @@ class StateTableSpec extends AnyFunSuite {
       s"stale segments not GC'd: $onDisk on disk")
   }
 
-  test("compaction writes key-ranged parallel files, reads unchanged") {
-    val dir = Files.createTempDirectory("alert_table_kr").toString
-    val table = new AlertStateTable(dir, compactEvery = 2, compactPartitions = 4)
-    // enough distinct keys that every one of the 4 ranges is non-empty;
-    // several merges so compaction has definitely run
-    (1 to 3).foreach { gen =>
-      table.merge(spark, (1 to 40).map(i =>
-        AlertUpdate(f"k-$i%03d", if (i % 5 == 0) "dead" else "live",
-          gen * 100 + i, 17, 1000.0 * gen + i)).toDF())
-    }
-    // the current generation is one compacted base segment...
-    val segs = table.segmentDirs
-    assert(segs.length == 1 && segs.head.endsWith("b"),
-      s"expected a single compacted base, got $segs")
-    // ...made of MULTIPLE key-ranged part files (a 100x key space
-    // compacts in parallel, not through one writer task)
-    val parts = new java.io.File(s"$dir/${segs.head}")
-      .listFiles().filter(f => f.getName.startsWith("part-"))
-    assert(parts.length == 4,
-      s"expected 4 key-ranged files, got ${parts.map(_.getName).toSeq}")
-    // files cover DISJOINT key intervals: per-file id ranges must not
-    // overlap (this is what lets a range-predicate reader skip files)
-    val ranges = parts.sortBy(_.getName).map { f =>
-      val ids = spark.read.parquet(f.getPath)
-        .select("id").as[String].collect().sorted
-      (ids.head, ids.last)
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo2, _)) =>
-        assert(hi < lo2, s"overlapping key ranges: $ranges")
-      case _ => ()
-    }
-    // and the resolved state is exactly what the merges said
-    assert(table.snapshot(spark).count() == 32) // 40 keys - 8 dead
-    assert(table.raw(spark).count() == 40)
-    val k7 = table.snapshot(spark)
-      .filter(org.apache.spark.sql.functions.col("id") === "k-007")
-      .select("eventId").as[Int].collect()
-    assert(k7.toSeq == Seq(307), "newest generation must win per key")
-  }
+  /** Every path under the table directory, relative to it. */
+  private def tree(dir: java.nio.file.Path): Set[String] =
+    scala.util.Using.resource(Files.walk(dir))(
+      _.iterator().asScala.map(dir.relativize(_).toString).toSet)
 
-  /** The file names of one segment directory. */
-  private def segFiles(dir: String, seg: String): Seq[String] =
-    new java.io.File(s"$dir/$seg").list().toSeq.sorted
-
-  test("a delta segment is one part file, a base compactPartitions, neither with _SUCCESS") {
-    val dir = Files.createTempDirectory("alert_table_files").toString
-    val table = new AlertStateTable(dir, compactEvery = 3, compactPartitions = 4)
+  test("a delta and a base are each one file in the table directory, with no .crc and no directory") {
+    val dir = Files.createTempDirectory("alert_table_files")
+    val table = new AlertStateTable(dir.toString, compactEvery = 3)
     val batch = (gen: Int) => (1 to 40).map(i => AlertUpdate(f"k-$i%03d",
       "live", gen * 100 + i, 17, 1000.0 * gen + i)).toDF()
       .repartition(4) // several writer tasks upstream of the segment write
+    def onlySegmentFiles(): Unit = {
+      val all = tree(dir) - ""
+      assert(all.forall(n => !n.contains("/") && !n.endsWith(".crc") &&
+        Files.isRegularFile(dir.resolve(n))),
+        s"the table directory holds only files: $all")
+      assert(table.segmentDirs.forall(all.contains), all)
+    }
     table.merge(spark, batch(1))
     val delta = table.segmentDirs.last
-    assert(delta.endsWith("d"))
-    val files = segFiles(dir, delta)
-    val part = files.filter(_.startsWith("part-"))
-    assert(part.length == 1 && files == Seq(s".${part.head}.crc", part.head),
-      s"a delta is one part file and its checksum: $files")
+    assert(delta.endsWith("d") && Files.isRegularFile(dir.resolve(delta)))
+    assert(spark.read.parquet(dir.resolve(delta).toString).count() == 40)
+    onlySegmentFiles()
     (2 to 3).foreach(g => table.merge(spark, batch(g)))
     val base = table.segmentDirs.head
-    assert(table.segmentDirs.length == 1 && base.endsWith("b"))
-    val baseFiles = segFiles(dir, base)
-    assert(baseFiles.count(_.startsWith("part-")) == 4 &&
-      baseFiles.length == 8, s"a base is 4 part files and checksums: $baseFiles")
+    assert(table.segmentDirs.length == 1 && base.endsWith("b") &&
+      Files.isRegularFile(dir.resolve(base)))
+    onlySegmentFiles()
+    assert(table.raw(spark).count() == 40)
   }
 
-  test("only a compaction and the merge after it free directory entries: at most 24 a cycle, and the default base is one file") {
+  test("an ordinary merge deletes only its own unsynced staging entries, and a 7-merge cycle deletes 7 named segments in the merge after the compaction") {
     val dir = Files.createTempDirectory("alert_table_freed")
-    val table = new AlertStateTable(dir.toString)
-    def tree: Set[String] = scala.util.Using.resource(Files.walk(dir))(
-      _.iterator().asScala.map(dir.relativize(_).toString).toSet)
+    // the top-level name of every path a merge deletes
+    var deleted = Vector.empty[String]
+    val table = new AlertStateTable(dir.toString) {
+      override protected def fsStep(step: String)(run: => Unit): Unit =
+        if (step != "delete") run
+        else {
+          val before = tree(dir)
+          run
+          deleted ++= (before -- tree(dir)).toSeq.map(_.takeWhile(_ != '/'))
+        }
+    }
     def key(p: java.nio.file.Path) = Files.readAttributes(p,
       classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
     def slotKeys = graft.io.Dirs.list(dir)
       .filter(_.getFileName.toString.startsWith("_HEAD")).map(p => p -> key(p))
-    // seven keys over four writer tasks, so a multi-file base could form
-    val freed = (1 to 22).map { g =>
-      val before = tree
+    // per merge: the names it deletes besides its own staging
+    // directories, and the current version's segments before it
+    val merges = (1 to 22).map { g =>
       val keys = slotKeys
+      val before = table.segmentDirs
+      deleted = Vector.empty
+      // seven keys over four writer tasks upstream of the segment write
       table.merge(spark, (0 until 7).map(i => AlertUpdate(s"k-$i", "live",
         g * 10 + i, 17, 1000.0 * g + i)).toDF().repartition(4))
       // a slot is overwritten in place, never replaced
       keys.foreach { case (p, k) => assert(key(p) == k, s"$p was replaced") }
-      (before -- tree).size
+      val own = table.versions.last.drop(1)
+      val (staging, named) = deleted.partition(n =>
+        n == s"s${own}dw" || n == s"s${own}bw")
+      // the part file's .crc and the staging directory; a compaction
+      // also deletes its delta's staging directory (part file, .crc, dir)
+      assert(staging.length == (if (Set(8, 15, 22)(g)) 5 else 2),
+        s"merge $g deleted $staging")
+      (named, before)
     }
-    // compactEvery 8: merges 8, 15 and 22 compact (each frees only its
-    // unsynced delta); 9 and 16 free the compacted segments
-    val compacting = Set(8, 15, 22)
-    val after = compacting.map(_ + 1)
-    freed.zipWithIndex.foreach { case (n, i) =>
-      if (!compacting(i + 1) && !after(i + 1))
-        assert(n == 0, s"merge ${i + 1} freed $n entries")
-    }
-    Seq(9 to 15, 16 to 22).foreach { cycle =>
-      val n = cycle.map(m => freed(m - 1)).sum
-      assert(n <= 24, s"merges $cycle freed $n entries: $freed")
+    // compactEvery 8: merges 8, 15 and 22 compact; 9 and 16 free the
+    // compacted segments, one path each
+    val after = Set(9, 16)
+    merges.zipWithIndex.foreach { case ((named, before), i) =>
+      if (after(i + 1)) {
+        assert(named.length == 7 && named.toSet == merges(i - 1)._2.toSet,
+          s"merge ${i + 1} deleted $named, the version before the compaction was " +
+          merges(i - 1)._2)
+        assert(!before.exists(named.contains))
+      } else assert(named.isEmpty, s"merge ${i + 1} deleted $named")
     }
     val base = table.segmentDirs.head
-    val files = segFiles(dir.toString, base)
     assert(table.segmentDirs == Seq(base) && base.endsWith("b") &&
-      files.length == 2 && files.count(_.startsWith("part-")) == 1,
-      s"the default base is one part file and its checksum: $files")
+      Files.isRegularFile(dir.resolve(base)))
     assert(table.snapshot(spark).count() == 7)
   }
 

@@ -11,11 +11,16 @@ median of 20 trials, in milliseconds, each trial after a 50 ms pause:
   rename_over_synced_ms   rename a synced file over a synced one
   overwrite_fdatasync_ms  overwrite a synced 4 KiB file in place, fdatasync
   unlink_20_synced_ms     20 synced 4 KiB files unlinked back to back (total)
+  unlink_synced_4m_ms     unlink a 4 MiB file whose data was fsync'd
+  rmdir_synced_dir_ms     remove an empty directory fsync'd with its parent
+  rmdir_unsynced_dir_ms   remove an empty directory never fsync'd, after
+                          another file's fsync forced a journal commit
 plus the filesystem type and mount options of DIR. On a filesystem mounted
 with online discard, freeing a synced file's blocks is the expensive step.
 """
 import json
 import os
+import shutil
 import statistics
 import sys
 import tempfile
@@ -78,6 +83,20 @@ def main():
                 return ((lambda: (mk(p(f"f{i}"), block, sync), sync_dir(d))),
                         (lambda: os.unlink(p(f"f{i}"))))
             res[f"unlink_{'synced' if sync else 'unsynced'}_ms"] = median_of(trial)
+        big = b"x" * (4 << 20)
+        res["unlink_synced_4m_ms"] = median_of(
+            lambda i: ((lambda: (mk(p(f"g{i}"), big, True), sync_dir(d))),
+                       (lambda: os.unlink(p(f"g{i}")))))
+
+        def synced_dir(i):
+            os.mkdir(p(f"sd{i}"))
+            sync_dir(p(f"sd{i}"))
+            sync_dir(d)
+        res["rmdir_synced_dir_ms"] = median_of(
+            lambda i: ((lambda: synced_dir(i)), (lambda: os.rmdir(p(f"sd{i}")))))
+        res["rmdir_unsynced_dir_ms"] = median_of(
+            lambda i: ((lambda: (os.mkdir(p(f"ud{i}")), mk(p(f"j{i}"), block, True))),
+                       (lambda: os.rmdir(p(f"ud{i}")))))
         res["unlink_synced_empty_ms"] = median_of(
             lambda i: ((lambda: (mk(p(f"e{i}"), b"", True), sync_dir(d))),
                        (lambda: os.unlink(p(f"e{i}")))))
@@ -103,9 +122,7 @@ def main():
         res["unlink_20_synced_ms"] = round(timed(
             lambda: [os.unlink(p(f"b{i}")) for i in range(20)]), 3)
     finally:
-        for n in os.listdir(d):
-            os.unlink(p(n))
-        os.rmdir(d)
+        shutil.rmtree(d)
     res["fstype"], res["mount_options"] = mount_of(base)
     print(json.dumps(res))
 
