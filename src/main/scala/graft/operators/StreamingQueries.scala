@@ -1,9 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode,
+  StatefulProcessor, TimeMode, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.Tables.{load => T}
 import graft.io.Dirs
 import graft.streaming.{AlertPipeline, AlertStateTable, AlertUpdate, LiveCountsView}
@@ -33,28 +38,12 @@ object StreamingQueries {
     // unbounded over batches; the table's merge is O(|batch|) segment
     // appends with bounded compaction, all executor-side
     val run = Materialized.runDir("graft_inprog_", d)
-    val tableDir = run.resolve("table").toString
-    // ask the reader for raw nanos (LongType, staged by stageNanosEvents)
-    // and rebuild the NTZ timestamp exactly as Tables.load does for batch
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
     // the file streaming source wants a directory; glob-select the table
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(stageNanosEvents(s, d, run.resolve("src")))
-    val events = AlertPipeline.eventsTableAsAlerts(s,
-      raw.withColumn("ts",
-        expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)")))
-    val table = new AlertStateTable(tableDir)
-    withStreamingParallelism(s) {
-      val q = AlertStateTable.sink(events, table, ttlSeconds = None)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
-    }
+    val raw = source(s, eventsNanos(s, d),
+      stageNanosEvents(s, d, run.resolve("src")), "events.parquet")
+    val events = AlertPipeline.eventsTableAsAlerts(s, microsTs(raw, ntz = true))
+    val table = new AlertStateTable(run.resolve("table").toString)
+    replay(s, run)(AlertStateTable.sink(events, table, ttlSeconds = None))
     table.snapshot(s)
       .select(col("id").cast("long").as("user_id"),
         col("eventId").cast("long").as("last_event_id"))
@@ -102,11 +91,6 @@ object StreamingQueries {
     * its own maintained view from the shared run; a fresh process always
     * replays. Each face's hash is unchanged — only the harness bill is
     * shared.
-    *
-    * The harness: 4-file staged events → `maxFilesPerTrigger=1`
-    * AvailableNow replay → durable [[graft.streaming.AlertStateTable]]
-    * merges (compaction forced mid-replay) with both views refreshed
-    * from the change feed after each merge.
     */
   private lazy val ivmViews = Materialized.memo("ivm_views", "graft_ivm_",
       "ivmrun:v1:2views") { (s, d, run) =>
@@ -118,33 +102,21 @@ object StreamingQueries {
     // hard-linked here (r10 rewrote the whole events table per
     // invocation — the head of stream_ivm_counts' 7 s bench bill)
     stageIvmSource(s, d, run)
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val raw = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val events = AlertPipeline.eventsTableAsAlerts(s,
-      raw.withColumn("ts",
-        expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)")))
+      microsTs(source(s, eventsNanos(s, d), srcDir), ntz = true))
     val table = new AlertStateTable(run.resolve("table").toString,
       compactEvery = 3)
     val views = Seq(
       new LiveCountsView(run.resolve("view").toString),
       new LiveCountsView(run.resolve("view_ev").toString,
         bucketExpr = "eventId", keyName = "event_id"))
-    withStreamingParallelism(s) {
-      val q = AlertPipeline.updates(events, ttlSeconds = None)
+    replay(s, run) {
+      AlertPipeline.updates(events, ttlSeconds = None)
         .writeStream.outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[AlertUpdate], _: Long) =>
-            table.merge(batch.sparkSession, batch.toDF())
-            views.foreach(_.refresh(batch.sparkSession, table))
+        .foreachBatch { (batch: Dataset[AlertUpdate], _: Long) =>
+          table.merge(batch.sparkSession, batch.toDF())
+          views.foreach(_.refresh(batch.sparkSession, table))
         }
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
     views
   }
@@ -166,29 +138,16 @@ object StreamingQueries {
   private val stateTimeTravel: Q = (s, d) => {
     val run = Materialized.runDir("graft_tt_", d)
     stageIvmSource(s, d, run)
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val raw = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(run.resolve("src").toString)
-    val events = AlertPipeline.eventsTableAsAlerts(s,
-      raw.withColumn("ts",
-        expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)")))
+    val raw = source(s, eventsNanos(s, d), run.resolve("src").toString)
+    val events = AlertPipeline.eventsTableAsAlerts(s, microsTs(raw, ntz = true))
     val table = new AlertStateTable(run.resolve("table").toString,
       retainGenerations = 8)
-    withStreamingParallelism(s) {
-      val q = AlertPipeline.updates(events, ttlSeconds = None)
+    replay(s, run) {
+      AlertPipeline.updates(events, ttlSeconds = None)
         .writeStream.outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[AlertUpdate], _: Long) =>
-            table.merge(batch.sparkSession, batch.toDF())
+        .foreachBatch { (batch: Dataset[AlertUpdate], _: Long) =>
+          table.merge(batch.sparkSession, batch.toDF())
         }
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
     val vs = table.versions
     assert(vs.size >= 2, s"expected ≥2 retained versions, got $vs")
@@ -218,13 +177,13 @@ object StreamingQueries {
     * replay hash) is IDENTICAL to the window formulation's.
     */
   private[graft] def rankQuartiles(df: DataFrame, sketchCol: String,
-      order: Seq[org.apache.spark.sql.Column]): DataFrame = {
+      order: Seq[Column]): DataFrame = {
     val bounds = df.stat.approxQuantile(sketchCol,
       (1 until 32).map(_ / 32.0).toArray, 0.001)
     val pid = bounds.distinct.sorted
       .map(b => when(col(sketchCol) > b, 1).otherwise(0))
       .reduceOption((a, b) => a + b)
-      .getOrElse(lit(0): org.apache.spark.sql.Column)
+      .getOrElse(lit(0): Column)
     val rn = df.withColumn("_pid", pid)
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col("_pid")).orderBy(order: _*)))
@@ -268,7 +227,7 @@ object StreamingQueries {
     rankQuartiles(_, "ts", Seq(col("ts"), col("event_id"))))
 
   private def stageIvmSource(s: SparkSession, d: String,
-      run: java.nio.file.Path): Unit = link4(ivmEvents4(s, d), run)
+      run: Path): Unit = link4(ivmEvents4(s, d), run)
 
   /** The 4-file staging for the LATE-DATA replay: bucket = a content
     * hash of the event id, so each micro-batch holds a uniform MIX of
@@ -287,7 +246,7 @@ object StreamingQueries {
         .cast("long") % 4))
 
   private def stageLateSource(s: SparkSession, d: String,
-      run: java.nio.file.Path): Unit = link4(lateEvents4(s, d), run)
+      run: Path): Unit = link4(lateEvents4(s, d), run)
 
   /** Shared machinery of the 4-file stagings: nanos-long `ts`, a
     * caller-supplied deterministic `bucket` column, one file per
@@ -297,7 +256,6 @@ object StreamingQueries {
       assign: DataFrame => DataFrame) =
     Materialized.shared(name, name + "_", layout, "events.parquet")(
         Materialized.dir) { (s, d, staging) =>
-      import java.nio.file.Files
       val bucketed = assign(T(s, d, "events")
         .withColumn("ts", expr("unix_micros(CAST(ts AS TIMESTAMP)) * 1000")))
         .persist()
@@ -317,9 +275,7 @@ object StreamingQueries {
     * mtimes, so the file source's (mtime, path) order equals bucket
     * order.
     */
-  private def link4(base: java.nio.file.Path,
-      run: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
+  private def link4(base: Path, run: Path): Unit = {
     Files.createDirectories(run.resolve("src"))
     Dirs.list(base.resolve("data"))
       .filter(_.getFileName.toString.endsWith(".parquet")).sorted
@@ -335,28 +291,153 @@ object StreamingQueries {
       }
   }
 
-  /** Run a drain-and-stop streaming replay with shuffle parallelism
-    * sized to the replay, not the box. The state-store instance count is
-    * fixed at the shuffle partition count when the checkpoint is
-    * created, and every micro-batch then pays (delta file + commit
-    * marker) × instances of fixed I/O however little data flows — at
-    * this replay's volume, 32 instances are pure overhead per 2-batch
-    * run. A long-running deployment sizes this to its cluster and keeps
-    * ONE checkpoint for the query's lifetime, so the per-batch constant
-    * amortizes; these registry replays create a fresh checkpoint per
-    * invocation, so the constant is the bill. The override spans the
-    * whole run (first-batch planning captures the conf asynchronously
-    * after `start()`), then the session value is restored.
+  /** Run one drain-and-stop replay: `query` writes a file source's
+    * stream, runs with `Trigger.AvailableNow()` and its checkpoint at
+    * `run/<chk>` (checkpoints are per run, so no invocation resumes
+    * another's offsets or state), and is waited for until it stops.
     *
-    * Measured (r7, sf0.1): 8 vs 4 vs 2 instances is flat (~1.7-2.0 s
-    * warm) — the per-query bill is query start/stop + offset/commit-log
-    * fsyncs, not per-instance state-store I/O, so shrinking below 8
-    * buys nothing here. `GRAFT_STREAM_SHUFFLE` overrides for smaller
-    * boxes.
+    * Shuffle parallelism is sized to the replay, not the box. The
+    * state-store instance count is fixed at the shuffle partition count
+    * when the checkpoint is created, and every micro-batch then pays
+    * (delta file + commit marker) × instances of fixed I/O however
+    * little data flows. A long-running deployment sizes this to its
+    * cluster and keeps ONE checkpoint for the query's lifetime, so the
+    * per-batch constant amortizes; these replays create a fresh
+    * checkpoint per invocation, so the constant is the bill. Measured
+    * (r7, sf0.1): 8 vs 4 vs 2 instances is flat (~1.7-2.0 s warm) —
+    * the per-query bill is query start/stop + offset/commit-log fsyncs,
+    * not per-instance state-store I/O, so shrinking below 8 buys
+    * nothing here.
+    *
+    * `rocksDb` selects the RocksDB state store provider, which
+    * `transformWithState` requires; other replays keep the session's
+    * provider. Both scopes span the whole run (first-batch planning
+    * captures the conf asynchronously after `start()`), `query` is
+    * built inside them, and the session's values come back after.
     */
-  private def withStreamingParallelism[A](s: SparkSession)(run: => A): A =
-    ConfScope.enter(s, "spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8"))(run)
+  private[graft] def replay(s: SparkSession, run: Path, chk: String = "chk",
+      rocksDb: Boolean = false)(query: => DataStreamWriter[_]): Unit =
+    ConfScope.enter(s, "spark.sql.shuffle.partitions", "8") {
+      def go(): Unit = query
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", run.resolve(chk).toString)
+        .start()
+        .awaitTermination()
+      if (!rocksDb) go()
+      else ConfScope.enter(s, "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")(go())
+    }
+
+  /** A parquet file source over `dir`: one file per micro-batch, or,
+    * given `glob`, every matching file in one.
+    */
+  private def source(s: SparkSession, schema: StructType, dir: String,
+      glob: String = ""): DataFrame = {
+    val r = s.readStream.schema(schema)
+    if (glob.isEmpty) r.option("maxFilesPerTrigger", "1").parquet(dir)
+    else r.option("pathGlobFilter", glob).parquet(dir)
+  }
+
+  /** Stage `df` as a 3-file arrival stream under `run/src` (3 hash
+    * partitions on `key`, so 3 micro-batches under [[source]]) and
+    * return the directory.
+    */
+  private def stage3(df: DataFrame, key: String, run: Path): String = {
+    val srcDir = run.resolve("src").toString
+    df.repartition(3, col(key)).write.mode("overwrite").parquet(srcDir)
+    srcDir
+  }
+
+  /** The events schema with `ts` as raw nanos (`LongType`), the shape
+    * [[stageNanosEvents]] and the 4-file stagings hold.
+    */
+  private def eventsNanos(s: SparkSession, d: String): StructType =
+    StructType(T(s, d, "events").schema.map(f =>
+      if (f.name == "ts") f.copy(dataType = LongType) else f))
+
+  /** Rebuild `ts` from nanos as a plain UTC TIMESTAMP (watermarks
+    * reject TIMESTAMP_NTZ; the run is pinned UTC, so the values equal
+    * the batch NTZ wall-clock), or with `ntz` as the NTZ timestamp
+    * exactly as `Tables.load` builds it for batch.
+    */
+  private def microsTs(df: DataFrame, ntz: Boolean = false): DataFrame = {
+    val ts = "timestamp_micros(ts div 1000)"
+    df.withColumn("ts", expr(if (ntz) s"CAST($ts AS TIMESTAMP_NTZ)" else ts))
+  }
+
+  /** An append-mode parquet file sink at `out`, created up front. */
+  private def toParquet(ds: Dataset[_], out: String): DataStreamWriter[_] = {
+    Files.createDirectories(Paths.get(out))
+    ds.writeStream.outputMode("append").format("parquet").option("path", out)
+  }
+
+  /** A `foreachBatch` writer that writes `gen(batch)` as generation
+    * `dir/b<batchId>`: a replayed batch overwrites its own generation,
+    * the idempotent exactly-once idiom.
+    */
+  private def genSink(raw: DataFrame, dir: Path)(
+      gen: DataFrame => DataFrame): DataStreamWriter[_] =
+    raw.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      gen(batch).write.mode("overwrite")
+        .parquet(dir.resolve(f"b$batchId%05d").toString)
+    }
+
+  /** Union every generation under `dir`. Generation dirs are listed
+    * explicitly (a glob path would make the batch reader probe it for
+    * streaming-sink metadata and log a spurious FileNotFoundException
+    * before falling back).
+    */
+  private def readGens(s: SparkSession, dir: Path): DataFrame =
+    s.read.parquet(Dirs.list(dir).map(_.toString).sorted: _*)
+
+  /** Replay `agg`, an update-mode aggregation, into an append log at
+    * `run/out`: each micro-batch appends its updated rows tagged with
+    * the batch id, and the read side keeps each key's newest emission —
+    * exactly what a downstream upsert consumer (or the log-compaction
+    * in [[graft.streaming.AlertStateTable]]) does with an update
+    * stream. Returns `cols` of the newest row per `keys`.
+    */
+  private def newestPerKey(s: SparkSession, run: Path, keys: Seq[String],
+      cols: Seq[String])(agg: => DataFrame): DataFrame = {
+    val out = run.resolve("out").toString
+    Files.createDirectories(Paths.get(out))
+    replay(s, run) {
+      agg.writeStream.outputMode("update")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          batch.withColumn("batch_id", lit(batchId))
+            .write.mode("append").parquet(out)
+        }
+    }
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("batch_id").desc)
+    s.read.parquet(out)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(cols.map(col): _*)
+  }
+
+  /** Stage 2 of the two-stage topologies: stream the finalized stage-1
+    * rows under `mid` (with `ddl` as their schema; `keep` drops the
+    * sentinel's rows), fold them per `key` through `processor` on
+    * RocksDB, and append its emissions to `run/out`, which is returned
+    * for the caller's read-back.
+    */
+  private def keyedStage2[K: Encoder, I <: Product : TypeTag,
+      O <: Product : TypeTag](s: SparkSession, run: Path, mid: String,
+      ddl: String, keep: Column, processor: StatefulProcessor[K, I, O])(
+      key: I => K): String = {
+    val out = run.resolve("out").toString
+    replay(s, run, "chk2", rocksDb = true) {
+      toParquet(source(s, StructType.fromDDL(ddl), mid, "*.parquet")
+        .filter(keep)
+        .as(Encoders.product[I])
+        .groupByKey(key)
+        .transformWithState(processor, TimeMode.None(), OutputMode.Append())(
+          Encoders.product[O]), out)
+    }
+    out
+  }
 
   /** REFERENCE-COUNTED session-conf scoping — the concurrency-safe form
     * of "set, run, restore". The replay GROUPS run several face bodies
@@ -364,13 +445,13 @@ object StreamingQueries {
     * scopes; with naive save/restore the first body to FINISH would
     * restore the original value while its siblings' queries are still
     * STARTING (streaming conf is captured at `start()`), silently
-    * running them under the wrong provider/parallelism. Per (session,
-    * key) the first enter saves the outer value and sets the scoped
-    * one; only the last exit restores — nested or overlapping scopes
-    * of the SAME value (the only combination the groups create) are
-    * exact.
+    * running them under the wrong provider/parallelism. Per key the
+    * first enter saves the session's own setting (absent when unset)
+    * and sets the scoped one; only the last exit restores — nested or
+    * overlapping scopes of the SAME value (the only combination the
+    * groups create) are exact.
     */
-  private object ConfScope {
+  private[graft] object ConfScope {
     private final class Scope { var depth = 0; var outer: Option[String] = None }
     private val scopes =
       new java.util.concurrent.ConcurrentHashMap[String, Scope]()
@@ -378,7 +459,7 @@ object StreamingQueries {
       val sc = scopes.computeIfAbsent(key, _ => new Scope)
       sc.synchronized {
         if (sc.depth == 0) {
-          sc.outer = s.conf.getOption(key)
+          sc.outer = s.conf.getAll.get(key)
           s.conf.set(key, value)
         } else {
           // overlapping scopes must agree: a second enter requesting a
@@ -514,50 +595,23 @@ object StreamingQueries {
     * in UPDATE mode against a durable (parquet append-log) sink — the
     * production shape: watermark eviction keeps state bounded (spec'd in
     * WindowedAggsSpec) and nothing accumulates on the driver, unlike
-    * complete-mode + memory sink. Each micro-batch appends its updated
-    * windows tagged with the batch id; the read side keeps each key's
-    * newest emission — exactly what a downstream upsert consumer (or the
-    * log-compaction in [[graft.streaming.AlertStateTable]]) does with an
-    * update stream. Hash-checked against the batch date_trunc oracle:
-    * streaming window semantics must equal SQL calendar bucketing.
+    * complete-mode + memory sink ([[newestPerKey]]). Hash-checked
+    * against the batch date_trunc oracle: streaming window semantics
+    * must equal SQL calendar bucketing.
     */
   private val streamWindowed: Q = (s, d) => {
     val run = Materialized.runDir("graft_winstream_", d)
-    val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(stageNanosEvents(s, d, run.resolve("src")))
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    withStreamingParallelism(s) {
-      val q = raw
+    val raw = microsTs(source(s, eventsNanos(s, d),
+      stageNanosEvents(s, d, run.resolve("src")), "events.parquet"))
+    newestPerKey(s, run, Seq("hour_epoch", "event_type"),
+        Seq("hour_epoch", "event_type", "n")) {
+      raw
         .withWatermark("ts", "1 hour")
-        .groupBy(org.apache.spark.sql.functions.window(col("ts"), "1 hour"),
-          col("event_type"))
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(unix_seconds(col("window.start")).as("hour_epoch"),
           col("event_type"), col("n"))
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("hour_epoch"), col("event_type"))
-      .orderBy(col("batch_id").desc)
-    s.read.parquet(out)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("hour_epoch"), col("event_type"), col("n"))
   }
 
   /** The count-min sketch maintained as STREAMING STATE — the sketch's
@@ -575,38 +629,15 @@ object StreamingQueries {
     */
   private val streamCountmin: Q = (s, d) => {
     val run = Materialized.runDir("graft_cms_", d)
-    val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     stageIvmSource(s, d, run)
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val raw = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(run.resolve("src").toString)
-    withStreamingParallelism(s) {
-      val q = raw
+    val raw = source(s, eventsNanos(s, d), run.resolve("src").toString)
+    val cells = newestPerKey(s, run, Seq("row", "bucket"),
+        Seq("row", "bucket", "c")) {
+      raw
         .select(Breadth.cmsCells(col("user_id")).as("cell"))
         .groupBy(col("cell.row").as("row"), col("cell.bucket").as("bucket"))
         .agg(count(lit(1)).as("c"))
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("row"), col("bucket"))
-      .orderBy(col("batch_id").desc)
-    val cells = s.read.parquet(out)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("row"), col("bucket"), col("c"))
     Breadth.cmsReport(cells, T(s, d, "events"))
   }
 
@@ -624,39 +655,15 @@ object StreamingQueries {
     */
   private val streamKmv: Q = (s, d) => {
     val run = Materialized.runDir("graft_kmv_", d)
-    val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     stageIvmSource(s, d, run)
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val raw = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(run.resolve("src").toString)
+    val raw = source(s, eventsNanos(s, d), run.resolve("src").toString)
     val mink = udaf(new graft.functions.MinKAggregator(Breadth.KmvK),
-      org.apache.spark.sql.Encoders.scalaLong)
-    withStreamingParallelism(s) {
-      val q = raw
+      Encoders.scalaLong)
+    val sk = newestPerKey(s, run, Seq("event_type"), Seq("event_type", "ks")) {
+      raw
         .select(col("event_type"), Breadth.kmvHash(col("user_id")).as("h"))
         .groupBy(col("event_type")).agg(mink(col("h")).as("ks"))
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type"))
-      .orderBy(col("batch_id").desc)
-    val sk = s.read.parquet(out)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("event_type"), col("ks"))
     Breadth.kmvReport(sk, T(s, d, "events"))
   }
 
@@ -670,38 +677,14 @@ object StreamingQueries {
     */
   private val streamQuantile: Q = (s, d) => {
     val run = Materialized.runDir("graft_qtl_", d)
-    val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     stageIvmSource(s, d, run)
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val raw = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(run.resolve("src").toString)
+    val raw = source(s, eventsNanos(s, d), run.resolve("src").toString)
     val mink = udaf(new graft.functions.MinKAggregator(Breadth.KmvK),
-      org.apache.spark.sql.Encoders.scalaLong)
-    withStreamingParallelism(s) {
-      val q = Breadth.qPacked(raw)
+      Encoders.scalaLong)
+    val sk = newestPerKey(s, run, Seq("event_type"), Seq("event_type", "ks")) {
+      Breadth.qPacked(raw)
         .groupBy(col("event_type")).agg(mink(col("p")).as("ks"))
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type"))
-      .orderBy(col("batch_id").desc)
-    val sk = s.read.parquet(out)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("event_type"), col("ks"))
     Breadth.quantileReport(sk, T(s, d, "events"))
   }
 
@@ -717,37 +700,14 @@ object StreamingQueries {
     */
   private val streamHll: Q = (s, d) => {
     val run = Materialized.runDir("graft_hll_", d)
-    val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     stageIvmSource(s, d, run)
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val raw = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(run.resolve("src").toString)
-    withStreamingParallelism(s) {
-      val q = Breadth.hllCells(raw)
+    val raw = source(s, eventsNanos(s, d), run.resolve("src").toString)
+    newestPerKey(s, run, Seq("event_type", "bucket"),
+        Seq("event_type", "bucket", "register")) {
+      Breadth.hllCells(raw)
         .groupBy(col("event_type"), col("bucket"))
         .agg(max(col("rank")).as("register"))
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type"), col("bucket"))
-      .orderBy(col("batch_id").desc)
-    s.read.parquet(out)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("event_type"), col("bucket"), col("register"))
   }
 
   /** WATERMARK LATE-DATA SEMANTICS, hash-checked — the contract every
@@ -779,21 +739,14 @@ object StreamingQueries {
   private val streamLateDrops: Q = (s, d) => {
     val run = Materialized.runDir("graft_late_", d)
     val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+    Files.createDirectories(Paths.get(out))
     stageLateSource(s, d, run)
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val raw = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(run.resolve("src").toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    withStreamingParallelism(s) {
-      val q = raw
+    val raw = microsTs(
+      source(s, eventsNanos(s, d), run.resolve("src").toString))
+    replay(s, run) {
+      raw
         .withWatermark("ts", "1 hour")
-        .groupBy(org.apache.spark.sql.functions.window(col("ts"), "1 hour"),
-          col("event_type"))
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(unix_seconds(col("window.start")).as("hour_epoch"),
           col("event_type"), col("n"))
@@ -801,10 +754,6 @@ object StreamingQueries {
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("append").parquet(out)
         }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
     // append mode: each window emitted exactly once — no compaction
     s.read.parquet(out)
@@ -838,27 +787,11 @@ object StreamingQueries {
   private val streamSessionize: Q = (s, d) => {
     val run = Materialized.runDir("graft_sessstream_", d)
     val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val src = stageSessionSource(s, d, schema, run)
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet").parquet(src)
-      // plain UTC TIMESTAMP: watermarks reject TIMESTAMP_NTZ; the run is
-      // pinned UTC so the values equal the batch NTZ wall-clock
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      .select(col("user_id"), col("ts"))
-    withStreamingParallelism(s) {
-      val q = graft.streaming.WindowedAggs.sessionWindows(raw)
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
-    }
+    val schema = eventsNanos(s, d)
+    val raw = microsTs(source(s, schema, stageSessionSource(s, d, schema, run),
+      "*.parquet")).select(col("user_id"), col("ts"))
+    replay(s, run)(
+      toParquet(graft.streaming.WindowedAggs.sessionWindows(raw), out))
     s.read.schema(
       "user_id BIGINT, session_start TIMESTAMP, session_end TIMESTAMP, " +
         "n BIGINT").parquet(out)
@@ -874,13 +807,6 @@ object StreamingQueries {
         col("n"))
   }
 
-  /** Stage a streaming replay source dir: a hard link to the events
-    * file (copy fallback) plus a single-row sentinel parquet whose
-    * event time sits `sentinelOffsetNanos` past the stream's max — far
-    * enough that the final watermark clears every real window/session
-    * close (default: three 30-min session gaps; the hourly-window
-    * replays pass three hours).
-    */
   /** Stage `events.parquet` under `dest` with `ts` as a raw LONG of
     * NANOS — the one shape every replay below consumes. Old testdata
     * stores TIMESTAMP(NANOS), which the nanosAsLong reader already
@@ -893,12 +819,11 @@ object StreamingQueries {
     * stateful operators.
     */
   private def stageNanosEvents(s: SparkSession, d: String,
-      dest: java.nio.file.Path): String = {
-    import java.nio.file.{Files, Paths}
+      dest: Path): String = {
     Files.createDirectories(dest)
     val events = Paths.get(d, "events.parquet")
     val onDisk = s.read.parquet(events.toString).schema("ts").dataType
-    if (onDisk == org.apache.spark.sql.types.LongType) {
+    if (onDisk == LongType) {
       linkOrCopy(events, dest.resolve("events.parquet"))
     } else {
       // native-micros testdata: the nanos-long rebuild is a pure
@@ -924,7 +849,7 @@ object StreamingQueries {
     Dirs.list(base.resolve("data"))
       .find(_.getFileName.toString.endsWith(".parquet")).get
   } { (s, d, staging) =>
-    s.read.parquet(java.nio.file.Paths.get(d, "events.parquet").toString)
+    s.read.parquet(Paths.get(d, "events.parquet").toString)
       .withColumn("ts", expr("unix_micros(CAST(ts AS TIMESTAMP)) * 1000"))
       .coalesce(1).write.mode("overwrite")
       .parquet(staging.resolve("data").toString)
@@ -936,18 +861,23 @@ object StreamingQueries {
   private[graft] lazy val eventStagings = Materialized.together(
     "stream_stagings_build")(Seq(nanosEventsArtifact, ivmEvents4, lateEvents4))
 
-  private def linkOrCopy(src: java.nio.file.Path,
-      dst: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
+  private def linkOrCopy(src: Path,
+      dst: Path): Unit = {
     try Files.createLink(dst, src)
     catch { case _: java.io.IOException => Files.copy(src, dst) }
   }
 
+  /** Stage a streaming replay source dir: a hard link to the events
+    * file (copy fallback) plus a single-row sentinel parquet whose
+    * event time sits `sentinelOffsetNanos` past the stream's max — far
+    * enough that the final watermark clears every real window/session
+    * close (default: three 30-min session gaps; the hourly-window
+    * replays pass three hours).
+    */
   private def stageSessionSource(s: SparkSession, d: String,
-      schema: org.apache.spark.sql.types.StructType,
-      run: java.nio.file.Path,
+      schema: StructType,
+      run: Path,
       sentinelOffsetNanos: Long = 3 * 1800L * 1000 * 1000 * 1000): String = {
-    import java.nio.file.{Files, Paths}
     val src = run.resolve("src")
     stageNanosEvents(s, d, src)
     // one-row sentinel: max raw ts (nanos) + the offset; the single
@@ -998,22 +928,9 @@ object StreamingQueries {
   private val streamDedupIngest: Q = (s, d) => {
     val run = Materialized.runDir("graft_ingest_", d)
     val pairsDir = run.resolve("pairs").toString
-    val schema = T(s, d, "documents").schema
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(d)
-    withStreamingParallelism(s) {
-      withRocksDbStateStore(s) {
-        val q = graft.streaming.IngestDedup.pairHits(raw)
-          .writeStream.outputMode("append")
-          .format("parquet").option("path", pairsDir)
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", run.resolve("chk").toString)
-          .start()
-        q.awaitTermination()
-        if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-          q.recentProgress.foreach(p => System.err.println(p.json))
-      }
-    }
+    val raw = source(s, T(s, d, "documents").schema, d, "documents.parquet")
+    replay(s, run, rocksDb = true)(
+      toParquet(graft.streaming.IngestDedup.pairHits(raw), pairsDir))
     readIngestPairs(s, pairsDir)
   }
 
@@ -1061,40 +978,18 @@ object StreamingQueries {
     Dedup.sharedSigSlice(s, d,
         ranked.filter(col("bucket") < 3).select(col("doc_id")))
       .write.mode("overwrite").parquet(idx.resolve("base").toString)
-    val srcDir = run.resolve("src").toString
-    ranked.filter(col("bucket") === 3).drop("bucket")
-      .repartition(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Dedup.minhashSig(Dedup.shingleRows(batch))
-            .write.mode("overwrite")
-            .parquet(idx.resolve(f"b$batchId%05d").toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
+    val src = stage3(ranked.filter(col("bucket") === 3).drop("bucket"),
+      "doc_id", run)
+    replay(s, run) {
+      genSink(source(s, docs.schema, src), idx) { batch =>
+        Dedup.minhashSig(Dedup.shingleRows(batch))
+      }
     }
     idx
   }
 
-  /** Union every generation under an index dir. Generation dirs are
-    * listed explicitly (a glob path would make the batch reader probe
-    * it for streaming-sink metadata and log a spurious
-    * FileNotFoundException before falling back).
-    */
-  private def readIndexGens(s: SparkSession,
-      idx: java.nio.file.Path): DataFrame = {
-    val gens = Dirs.list(idx).map(_.toString).sorted
-    s.read.parquet(gens: _*)
-  }
-
   private val dedupIndexIvm: Q = (s, d) =>
-    Dedup.bandPairs(readIndexGens(s, dedupIndexRun(s, d)))
+    Dedup.bandPairs(readGens(s, dedupIndexRun(s, d)))
 
   /** MAINTAINED-DEDUP-INDEX COMPACTION — [[textIndexCompact]]'s
     * lifecycle op applied to the signature store: generations
@@ -1118,9 +1013,9 @@ object StreamingQueries {
   private val dedupIndexCompact: Q = (s, d) => {
     val idx = dedupIndexRun(s, d)
     val cidx = idx.getParent.resolve("compacted")
-    readIndexGens(s, idx).write.mode("overwrite")
+    readGens(s, idx).write.mode("overwrite")
       .parquet(cidx.resolve("base").toString)
-    Dedup.bandPairs(readIndexGens(s, cidx))
+    Dedup.bandPairs(readGens(s, cidx))
   }
 
   /** MAINTAINED VECTOR INDEX — [[dedupIndexIvm]]'s pattern applied to
@@ -1167,34 +1062,23 @@ object StreamingQueries {
       .write.mode("overwrite").parquet(idx.resolve("base").toString)
     // the arriving tail: ids only through the stream (the file source
     // re-reads vectors per batch from the staged parquet)
-    val srcDir = run.resolve("src").toString
-    emb.join(ranked.filter(col("bucket") === 3).select(col("vec_id")),
-        Seq("vec_id"))
-      .repartition(3, col("vec_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Similarity.assignCells(
-              batch.select(col("vec_id"),
-                graft.functions.VectorFunctions.asDouble(col("embedding"))
-                  .as("v")),
-              frozen)
-            .write.mode("overwrite")
-            .parquet(idx.resolve(f"b$batchId%05d").toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
+    val src = stage3(emb.join(
+      ranked.filter(col("bucket") === 3).select(col("vec_id")), Seq("vec_id")),
+      "vec_id", run)
+    replay(s, run) {
+      genSink(source(s, emb.schema, src), idx) { batch =>
+        graft.operators.Similarity.assignCells(
+          batch.select(col("vec_id"),
+            graft.functions.VectorFunctions.asDouble(col("embedding"))
+              .as("v")),
+          frozen)
+      }
     }
     idx
   }
 
   private val simIndexIvm: Q = (s, d) =>
-    readIndexGens(s, simIndexRun(s, d))
+    readGens(s, simIndexRun(s, d))
       .select(col("vec_id"), col("cid").cast("long").as("cid"))
 
   /** MAINTAINED-VECTOR-INDEX COMPACTION — the IVF list store's
@@ -1214,9 +1098,9 @@ object StreamingQueries {
   private val simIndexCompact: Q = (s, d) => {
     val idx = simIndexRun(s, d)
     val cidx = idx.getParent.resolve("compacted")
-    readIndexGens(s, idx).write.mode("overwrite")
+    readGens(s, idx).write.mode("overwrite")
       .parquet(cidx.resolve("base").toString)
-    readIndexGens(s, cidx)
+    readGens(s, cidx)
       .select(col("vec_id"), col("cid").cast("long").as("cid"))
   }
 
@@ -1258,43 +1142,31 @@ object StreamingQueries {
     val esh = s.read.parquet(run.resolve("eshingles").toString)
       .select(col("doc_id").as("eval_id"), col("shingle"))
     val esz = esh.groupBy(col("eval_id")).agg(count(lit(1)).as("ne"))
-    val srcDir = run.resolve("src").toString
-    docs.filter(!isEval).repartition(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val bands = Dedup.bandKeysPerRow(batch)
-            .select(col("doc_id").as("train_id"), col("band"), col("key"))
-          val cand = bands.join(eb, Seq("band", "key"))
-            .groupBy(col("eval_id"), col("train_id"))
-            .agg(count(lit(1)).as("n_bands"))
-          val bsh = Dedup.shingleRows(batch)
-            .select(col("doc_id").as("train_id"), col("shingle"))
-          val bsz = bsh.groupBy(col("train_id")).agg(count(lit(1)).as("nt"))
-          val inter = cand.select(col("eval_id"), col("train_id"))
-            .join(esh, Seq("eval_id"))
-            .join(bsh, Seq("train_id", "shingle"))
-            .groupBy(col("eval_id"), col("train_id"))
-            .agg(count(lit(1)).as("i"))
-          cand.join(inter, Seq("eval_id", "train_id"))
-            .join(esz, Seq("eval_id")).join(bsz, Seq("train_id"))
-            .withColumn("jac_bp", expr("i * 10000 div (ne + nt - i)"))
-            .filter(col("jac_bp") >= Dedup.DecontamFloorBp)
-            .select(col("eval_id"), col("train_id"), col("n_bands"),
-              col("jac_bp"))
-            .write.mode("overwrite")
-            .parquet(out.resolve(f"b$batchId%05d").toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
+    val src = stage3(docs.filter(!isEval), "doc_id", run)
+    replay(s, run) {
+      genSink(source(s, docs.schema, src), out) { batch =>
+        val bands = Dedup.bandKeysPerRow(batch)
+          .select(col("doc_id").as("train_id"), col("band"), col("key"))
+        val cand = bands.join(eb, Seq("band", "key"))
+          .groupBy(col("eval_id"), col("train_id"))
+          .agg(count(lit(1)).as("n_bands"))
+        val bsh = Dedup.shingleRows(batch)
+          .select(col("doc_id").as("train_id"), col("shingle"))
+        val bsz = bsh.groupBy(col("train_id")).agg(count(lit(1)).as("nt"))
+        val inter = cand.select(col("eval_id"), col("train_id"))
+          .join(esh, Seq("eval_id"))
+          .join(bsh, Seq("train_id", "shingle"))
+          .groupBy(col("eval_id"), col("train_id"))
+          .agg(count(lit(1)).as("i"))
+        cand.join(inter, Seq("eval_id", "train_id"))
+          .join(esz, Seq("eval_id")).join(bsz, Seq("train_id"))
+          .withColumn("jac_bp", expr("i * 10000 div (ne + nt - i)"))
+          .filter(col("jac_bp") >= Dedup.DecontamFloorBp)
+          .select(col("eval_id"), col("train_id"), col("n_bands"),
+            col("jac_bp"))
+      }
     }
-    val gens = Dirs.list(out).map(_.toString).sorted
-    s.read.parquet(gens: _*)
+    readGens(s, out)
   }
 
   /** SUBSTRING GATE AT INGEST — `dedup_substring`'s verbatim-copy scan
@@ -1327,30 +1199,18 @@ object StreamingQueries {
       .write.mode("overwrite").parquet(run.resolve("resgrams").toString)
     val res = s.read.parquet(run.resolve("resgrams").toString)
       .withColumn("isdup", lit(1L))
-    val srcDir = run.resolve("src").toString
-    docs.filter(isArr).repartition(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Dedup.substringGrams(batch)
-            .join(res, Seq("gram"), "left")
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_grams"),
-              sum(coalesce(col("isdup"), lit(0L))).as("n_dup"))
-            .withColumn("dup_bp", expr("n_dup * 10000 div n_grams"))
-            .write.mode("overwrite")
-            .parquet(out.resolve(f"b$batchId%05d").toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
+    val src = stage3(docs.filter(isArr), "doc_id", run)
+    replay(s, run) {
+      genSink(source(s, docs.schema, src), out) { batch =>
+        Dedup.substringGrams(batch)
+          .join(res, Seq("gram"), "left")
+          .groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("n_grams"),
+            sum(coalesce(col("isdup"), lit(0L))).as("n_dup"))
+          .withColumn("dup_bp", expr("n_dup * 10000 div n_grams"))
+      }
     }
-    val gens = Dirs.list(out).map(_.toString).sorted
-    s.read.parquet(gens: _*)
+    readGens(s, out)
   }
 
   /** LABEL-CONSISTENCY CLASSIFIER AT INGEST — `sim_knn_classify` run
@@ -1381,31 +1241,19 @@ object StreamingQueries {
     val (corpus, centroids) = Similarity.frozenKnnIndex(s, d)
     val isArr = pmod(col("vec_id"), lit(Similarity.ClsArrMod)) ===
       Similarity.ClsArrRem
-    val srcDir = run.resolve("src").toString
-    emb.filter(isArr).repartition(3, col("vec_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Similarity.classifyAgainstFrozen(
-              batch.select(col("vec_id"),
-                graft.functions.VectorFunctions.asDouble(col("embedding"))
-                  .as("v"))
-                .withColumn("nrm",
-                  graft.functions.VectorFunctions.norm2(col("v"))),
-              centroids, corpus)
-            .write.mode("overwrite")
-            .parquet(out.resolve(f"b$batchId%05d").toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
+    val src = stage3(emb.filter(isArr), "vec_id", run)
+    replay(s, run) {
+      genSink(source(s, emb.schema, src), out) { batch =>
+        Similarity.classifyAgainstFrozen(
+          batch.select(col("vec_id"),
+            graft.functions.VectorFunctions.asDouble(col("embedding"))
+              .as("v"))
+            .withColumn("nrm",
+              graft.functions.VectorFunctions.norm2(col("v"))),
+          centroids, corpus)
+      }
     }
-    val gens = Dirs.list(out).map(_.toString).sorted
-    s.read.parquet(gens: _*)
+    readGens(s, out)
       .join(emb.select(col("vec_id"),
         col("label").cast("long").as("label")), Seq("vec_id"))
       .groupBy(col("label").as("true_label"), col("pred_label"))
@@ -1433,27 +1281,15 @@ object StreamingQueries {
       .select(col("gram")).distinct()
       .write.mode("overwrite").parquet(run.resolve("resgrams").toString)
     val res = s.read.parquet(run.resolve("resgrams").toString)
-    val srcDir = run.resolve("src").toString
-    docs.filter(isArr).repartition(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Dedup.carveFlagged(batch,
-              Dedup.substringGramPos(batch).join(res, Seq("gram"))
-                .select(col("doc_id"), col("pos")))
-            .write.mode("overwrite")
-            .parquet(out.resolve(f"b$batchId%05d").toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
+    val src = stage3(docs.filter(isArr), "doc_id", run)
+    replay(s, run) {
+      genSink(source(s, docs.schema, src), out) { batch =>
+        Dedup.carveFlagged(batch,
+          Dedup.substringGramPos(batch).join(res, Seq("gram"))
+            .select(col("doc_id"), col("pos")))
+      }
     }
-    val gens = Dirs.list(out).map(_.toString).sorted
-    s.read.parquet(gens: _*)
+    readGens(s, out)
   }
 
   /** QUALITY GATE AT INGEST — `text_quality_classifier` run AT THE
@@ -1474,22 +1310,10 @@ object StreamingQueries {
   private val streamQualityGate: Q = (s, d) => {
     val run = Materialized.runDir("graft_sqg_", d)
     val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     val docs = T(s, d, "documents")
-    val srcDir = run.resolve("src").toString
-    docs.repartition(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamingParallelism(s) {
-      val q = TextAnalysis.qualityClassifierOn(raw)
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
-    }
+    val src = stage3(docs, "doc_id", run)
+    replay(s, run)(toParquet(
+      TextAnalysis.qualityClassifierOn(source(s, docs.schema, src)), out))
     s.read
       .schema("doc_id BIGINT, score_scaled BIGINT, p_bp BIGINT, kept BIGINT")
       .parquet(out)
@@ -1528,34 +1352,22 @@ object StreamingQueries {
       .withColumn("bucket", expr(s"((xq - mn) * $B) div (mx - mn + 1)"))
       .groupBy(col("i"), col("bucket")).agg(count(lit(1)).as("n_a"))
       .write.mode("overwrite").parquet(run.resolve("refhist").toString)
-    val srcDir = run.resolve("src").toString
-    emb.filter(pmod(col("vec_id"), lit(2)) === 1)
-      .repartition(3, col("vec_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Similarity.sqElements(batch)
-            .join(broadcast(batch.sparkSession.read
-              .parquet(run.resolve("ranges").toString)), Seq("i"))
-            .withColumn("xqc",
-              least(greatest(col("xq"), col("mn")), col("mx")))
-            .withColumn("bucket",
-              expr(s"((xqc - mn) * $B) div (mx - mn + 1)"))
-            .groupBy(col("i"), col("bucket"))
-            .agg(count(lit(1)).as("n_b_part"))
-            .write.mode("overwrite")
-            .parquet(out.resolve(f"b$batchId%05d").toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
+    val src = stage3(emb.filter(pmod(col("vec_id"), lit(2)) === 1),
+      "vec_id", run)
+    replay(s, run) {
+      genSink(source(s, emb.schema, src), out) { batch =>
+        Similarity.sqElements(batch)
+          .join(broadcast(batch.sparkSession.read
+            .parquet(run.resolve("ranges").toString)), Seq("i"))
+          .withColumn("xqc",
+            least(greatest(col("xq"), col("mn")), col("mx")))
+          .withColumn("bucket",
+            expr(s"((xqc - mn) * $B) div (mx - mn + 1)"))
+          .groupBy(col("i"), col("bucket"))
+          .agg(count(lit(1)).as("n_b_part"))
+      }
     }
-    val gens = Dirs.list(out).map(_.toString).sorted
-    val arrHist = s.read.parquet(gens: _*)
+    val arrHist = readGens(s, out)
       .groupBy(col("i"), col("bucket"))
       .agg(sum(col("n_b_part")).as("n_b"))
     val counts = s.read.parquet(run.resolve("refhist").toString)
@@ -1608,7 +1420,7 @@ object StreamingQueries {
     * against rung-sized resident corpora.
     */
   private[graft] def textIndexGen(batch: DataFrame,
-      idx: java.nio.file.Path, gen: String): Unit = {
+      idx: Path, gen: String): Unit = {
     val tok = batch.select(col("doc_id"),
       explode(split(trim(col("text")), "\\s+")).as("term"))
     tok.groupBy(col("doc_id"), col("term"))
@@ -1626,7 +1438,7 @@ object StreamingQueries {
     * per generation instead of four.
     */
   private def textIndexDeriveFromPost(sp: SparkSession,
-      idx: java.nio.file.Path, gen: String): Unit = {
+      idx: Path, gen: String): Unit = {
     val tfb = sp.read.parquet(idx.resolve(s"post/$gen").toString)
     tfb.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       .write.mode("overwrite").parquet(idx.resolve(s"dl/$gen").toString)
@@ -1664,7 +1476,7 @@ object StreamingQueries {
     * batch's own work, as in production.
     */
   private[graft] def textIndexBaseFromShared(s: SparkSession, d: String,
-      ids: DataFrame, idx: java.nio.file.Path,
+      ids: DataFrame, idx: Path,
       gen: String = "base"): Unit = {
     sharedTfTable(s, d).join(ids, Seq("doc_id"), "left_semi")
       .write.mode("overwrite").parquet(idx.resolve(s"post/$gen").toString)
@@ -1683,37 +1495,20 @@ object StreamingQueries {
     val docs = T(s, d, "documents")
     val ranked = docQuartiles(docs)
     val idx = run.resolve("index")
-    def writeGen(batch: DataFrame, gen: String): Unit =
-      textIndexGen(batch, idx, gen)
     // the base adopts the shared tokenized-corpus artifact
     // (row-identical to a fresh tokenize, spec-pinned); streamed
     // arrival generations below tokenize themselves
     textIndexBaseFromShared(s, d,
       ranked.filter(col("bucket") < 3).select(col("doc_id")), idx)
-    val srcDir = run.resolve("src").toString
-    ranked.filter(col("bucket") === 3).drop("bucket")
-      .repartition(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
+    val src = stage3(ranked.filter(col("bucket") === 3).drop("bucket"),
+      "doc_id", run)
+    replay(s, run) {
+      source(s, docs.schema, src).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          writeGen(batch, f"b$batchId%05d")
+          textIndexGen(batch, idx, f"b$batchId%05d")
         }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
     idx
-  }
-
-  /** Union every generation of one maintained-index frame. */
-  private def readTextGens(s: SparkSession, idx: java.nio.file.Path,
-      sub: String): DataFrame = {
-    val gens = Dirs.list(idx.resolve(sub)).map(_.toString).sorted
-    s.read.parquet(gens: _*)
   }
 
   /** The `text_bm25_grouped` ranking computed from maintained frames
@@ -1721,13 +1516,13 @@ object StreamingQueries {
     * faces share.
     */
   private def scoreTextIndex(s: SparkSession,
-      idx: java.nio.file.Path): DataFrame =
+      idx: Path): DataFrame =
     TextAnalysis.bm25GroupedRanked(TextAnalysis.bm25GroupedScoredFrom(
-      readTextGens(s, idx, "post"),
-      readTextGens(s, idx, "dl"),
-      readTextGens(s, idx, "df")
+      readGens(s, idx.resolve("post")),
+      readGens(s, idx.resolve("dl")),
+      readGens(s, idx.resolve("df"))
         .groupBy(col("term")).agg(sum(col("dfp")).as("df")),
-      readTextGens(s, idx, "st").agg(sum(col("np")).as("n"),
+      readGens(s, idx.resolve("st")).agg(sum(col("np")).as("n"),
         sum(col("totalp")).as("total"))))
 
   private val textIndexIvm: Q = (s, d) =>
@@ -1757,14 +1552,14 @@ object StreamingQueries {
   private val textIndexCompact: Q = (s, d) => {
     val idx = textIndexRun(s, d)
     val cidx = idx.getParent.resolve("compacted")
-    readTextGens(s, idx, "post").write.mode("overwrite")
+    readGens(s, idx.resolve("post")).write.mode("overwrite")
       .parquet(cidx.resolve("post/base").toString)
-    readTextGens(s, idx, "dl").write.mode("overwrite")
+    readGens(s, idx.resolve("dl")).write.mode("overwrite")
       .parquet(cidx.resolve("dl/base").toString)
-    readTextGens(s, idx, "df")
+    readGens(s, idx.resolve("df"))
       .groupBy(col("term")).agg(sum(col("dfp")).as("dfp"))
       .write.mode("overwrite").parquet(cidx.resolve("df/base").toString)
-    readTextGens(s, idx, "st")
+    readGens(s, idx.resolve("st"))
       .agg(sum(col("np")).as("np"), sum(col("totalp")).as("totalp"))
       .write.mode("overwrite").parquet(cidx.resolve("st/base").toString)
     scoreTextIndex(s, cidx)
@@ -1807,31 +1602,31 @@ object StreamingQueries {
     val isDel = pmod(col("doc_id"), lit(TakedownMod)) === TakedownRem
     // tombstones: the victims AS INDEXED (read from the stored doc
     // lengths — the corpus is never consulted)
-    readTextGens(s, idx, "dl").select(col("doc_id")).filter(isDel)
+    readGens(s, idx.resolve("dl")).select(col("doc_id")).filter(isDel)
       .write.mode("overwrite").parquet(del.resolve("tomb").toString)
     val tomb = s.read.parquet(del.resolve("tomb").toString)
     // negative partials, recounted from the victims' stored postings
-    readTextGens(s, idx, "post")
+    readGens(s, idx.resolve("post"))
       .join(tomb, Seq("doc_id"), "left_semi")
       .groupBy(col("term"))
       .agg((lit(0L) - count(lit(1))).as("dfp"))
       .write.mode("overwrite").parquet(del.resolve("dfneg").toString)
-    readTextGens(s, idx, "dl")
+    readGens(s, idx.resolve("dl"))
       .join(tomb, Seq("doc_id"), "left_semi")
       .agg((lit(0L) - count(lit(1))).as("np"),
         (lit(0L) - sum(col("dl"))).as("totalp"))
       .write.mode("overwrite").parquet(del.resolve("stneg").toString)
     // read side: anti-join the row frames, SUM the partials as ever
     // (the negative generation rides the existing fold)
-    val post = readTextGens(s, idx, "post")
+    val post = readGens(s, idx.resolve("post"))
       .join(tomb, Seq("doc_id"), "left_anti")
-    val dl = readTextGens(s, idx, "dl")
+    val dl = readGens(s, idx.resolve("dl"))
       .join(tomb, Seq("doc_id"), "left_anti")
-    val df = readTextGens(s, idx, "df")
+    val df = readGens(s, idx.resolve("df"))
       .union(s.read.parquet(del.resolve("dfneg").toString))
       .groupBy(col("term")).agg(sum(col("dfp")).as("df"))
       .filter(col("df") > 0)
-    val st = readTextGens(s, idx, "st")
+    val st = readGens(s, idx.resolve("st"))
       .union(s.read.parquet(del.resolve("stneg").toString))
       .agg(sum(col("np")).as("n"), sum(col("totalp")).as("total"))
     TextAnalysis.bm25GroupedRanked(
@@ -1850,13 +1645,13 @@ object StreamingQueries {
   private val dedupIndexDelete: Q = (s, d) => {
     val idx = dedupIndexRun(s, d)
     val del = idx.getParent.resolve("deletes")
-    readIndexGens(s, idx).select(col("doc_id"))
+    readGens(s, idx).select(col("doc_id"))
       .filter(pmod(col("doc_id"), lit(TakedownMod)) === TakedownRem)
       .distinct()
       .write.mode("overwrite").parquet(del.resolve("tomb").toString)
     val tomb = s.read.parquet(del.resolve("tomb").toString)
     Dedup.bandPairs(
-      readIndexGens(s, idx).join(tomb, Seq("doc_id"), "left_anti"))
+      readGens(s, idx).join(tomb, Seq("doc_id"), "left_anti"))
   }
 
   /** MAINTAINED-VECTOR-INDEX DELETION — the takedown for the IVF list
@@ -1869,11 +1664,11 @@ object StreamingQueries {
   private val simIndexDelete: Q = (s, d) => {
     val idx = simIndexRun(s, d)
     val del = idx.getParent.resolve("deletes")
-    readIndexGens(s, idx).select(col("vec_id"))
+    readGens(s, idx).select(col("vec_id"))
       .filter(pmod(col("vec_id"), lit(TakedownMod)) === TakedownRem)
       .write.mode("overwrite").parquet(del.resolve("tomb").toString)
     val tomb = s.read.parquet(del.resolve("tomb").toString)
-    readIndexGens(s, idx).join(tomb, Seq("vec_id"), "left_anti")
+    readGens(s, idx).join(tomb, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cid").cast("long").as("cid"))
   }
 
@@ -1902,57 +1697,46 @@ object StreamingQueries {
     val del = run.resolve("del")
     // the takedown REQUESTS: ids only (a request names the doc; the
     // index supplies everything else), arriving in three batches
-    val srcDir = run.resolve("src").toString
-    readTextGens(s, idx, "dl").select(col("doc_id"))
-      .filter(pmod(col("doc_id"), lit(TakedownMod)) === TakedownRem)
-      .repartition(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream.schema("doc_id BIGINT")
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
+    val src = stage3(readGens(s, idx.resolve("dl")).select(col("doc_id"))
+      .filter(pmod(col("doc_id"), lit(TakedownMod)) === TakedownRem),
+      "doc_id", run)
+    replay(s, run) {
+      source(s, StructType.fromDDL("doc_id BIGINT"), src).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sp = batch.sparkSession
           val gen = f"b$batchId%05d"
           // tombstones: the batch's requests AS INDEXED (idempotent
           // per-gen overwrite; requests for unindexed docs are no-ops)
           batch.dropDuplicates("doc_id")
-            .join(readTextGens(sp, idx, "dl").select(col("doc_id")),
+            .join(readGens(sp, idx.resolve("dl")).select(col("doc_id")),
               Seq("doc_id"), "left_semi")
             .write.mode("overwrite")
             .parquet(del.resolve(s"tomb/$gen").toString)
           val tomb = sp.read.parquet(del.resolve(s"tomb/$gen").toString)
-          readTextGens(sp, idx, "post")
+          readGens(sp, idx.resolve("post"))
             .join(tomb, Seq("doc_id"), "left_semi")
             .groupBy(col("term"))
             .agg((lit(0L) - count(lit(1))).as("dfp"))
             .write.mode("overwrite")
             .parquet(del.resolve(s"dfneg/$gen").toString)
-          readTextGens(sp, idx, "dl")
+          readGens(sp, idx.resolve("dl"))
             .join(tomb, Seq("doc_id"), "left_semi")
             .agg((lit(0L) - count(lit(1))).as("np"),
               (lit(0L) - sum(col("dl"))).as("totalp"))
             .write.mode("overwrite")
             .parquet(del.resolve(s"stneg/$gen").toString)
         }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
-    def delGens(sub: String): DataFrame = {
-      val gens = Dirs.list(del.resolve(sub)).map(_.toString).sorted
-      s.read.parquet(gens: _*)
-    }
+    def delGens(sub: String): DataFrame = readGens(s, del.resolve(sub))
     val tomb = delGens("tomb")
-    val post = readTextGens(s, idx, "post")
+    val post = readGens(s, idx.resolve("post"))
       .join(tomb, Seq("doc_id"), "left_anti")
-    val dl = readTextGens(s, idx, "dl")
+    val dl = readGens(s, idx.resolve("dl"))
       .join(tomb, Seq("doc_id"), "left_anti")
-    val df = readTextGens(s, idx, "df").union(delGens("dfneg"))
+    val df = readGens(s, idx.resolve("df")).union(delGens("dfneg"))
       .groupBy(col("term")).agg(sum(col("dfp")).as("df"))
       .filter(col("df") > 0)
-    val st = readTextGens(s, idx, "st").union(delGens("stneg"))
+    val st = readGens(s, idx.resolve("st")).union(delGens("stneg"))
       .agg(sum(col("np")).as("n"), sum(col("totalp")).as("total"))
     TextAnalysis.bm25GroupedRanked(
       TextAnalysis.bm25GroupedScoredFrom(post, dl, df, st))
@@ -2000,36 +1784,26 @@ object StreamingQueries {
     */
   private val streamGnavInsert: Q = (s, d) => {
     val run = Materialized.runDir("graft_sgins_", d)
-    val srcDir = run.resolve("src").toString
-    T(s, d, "embeddings")
-      .filter(pmod(col("vec_id"), lit(Similarity.ClsArrMod)) ===
-        Similarity.ClsArrRem)
-      .repartition(3, col("vec_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream
-      .schema(T(s, d, "embeddings").schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    val emb = T(s, d, "embeddings")
+    val src = stage3(emb.filter(pmod(col("vec_id"),
+      lit(Similarity.ClsArrMod)) === Similarity.ClsArrRem), "vec_id", run)
     val gensDir = run.resolve("newe")
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
+    replay(s, run) {
+      source(s, emb.schema, src).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sym = Similarity.gnavInsertEdgesFor(
             batch.sparkSession, d, batch)
           sym.write.mode("overwrite")
             .parquet(gensDir.resolve(f"b$batchId%05d").toString)
-          graft.operators.Dedup.releaseCheckpoint(sym)
+          Dedup.releaseCheckpoint(sym)
         }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
     // an empty arrival slice writes no generation at all (the dir may
     // not even exist) — the fold's identity is the resident adjacency
     // itself, which is already degree-capped (a restriction of the
     // published capped graph), so no re-cap is needed
     val gens = {
-      if (!java.nio.file.Files.isDirectory(gensDir)) Seq.empty[String]
+      if (!Files.isDirectory(gensDir)) Seq.empty[String]
       else Dirs.list(gensDir).map(_.toString).sorted
     }
     val resident = Similarity.gnavResidentAdj(s, d)
@@ -2087,15 +1861,6 @@ object StreamingQueries {
   // mechanisms: the replays can only diverge in delivery, never in
   // fold semantics.
 
-  /** Union every generation under `dir` (explicit listing — the glob
-    * caveat of [[readIndexGens]]).
-    */
-  private def rdGensOf(s: SparkSession, dir: java.nio.file.Path)
-      : DataFrame = {
-    val gens = Dirs.list(dir).map(_.toString).sorted
-    s.read.parquet(gens: _*)
-  }
-
   /** Text-index TAKEDOWN: tombstones from the STORED index plus the
     * negative df/stats partials — the deletion generation. Split from
     * the compaction so a schedule may place them at different
@@ -2103,15 +1868,15 @@ object StreamingQueries {
     * so the tombstone set is fixed at takedown time).
     */
   private def textTakedown(s: SparkSession,
-      tix: java.nio.file.Path, tdel: java.nio.file.Path,
-      isVictim: org.apache.spark.sql.Column): Unit = {
-    rdGensOf(s, tix.resolve("dl")).select(col("doc_id")).filter(isVictim)
+      tix: Path, tdel: Path,
+      isVictim: Column): Unit = {
+    readGens(s, tix.resolve("dl")).select(col("doc_id")).filter(isVictim)
       .write.mode("overwrite").parquet(tdel.resolve("tomb").toString)
     val ttomb = s.read.parquet(tdel.resolve("tomb").toString)
-    rdGensOf(s, tix.resolve("post")).join(ttomb, Seq("doc_id"), "left_semi")
+    readGens(s, tix.resolve("post")).join(ttomb, Seq("doc_id"), "left_semi")
       .groupBy(col("term")).agg((lit(0L) - count(lit(1))).as("dfp"))
       .write.mode("overwrite").parquet(tdel.resolve("dfneg").toString)
-    rdGensOf(s, tix.resolve("dl")).join(ttomb, Seq("doc_id"), "left_semi")
+    readGens(s, tix.resolve("dl")).join(ttomb, Seq("doc_id"), "left_semi")
       .agg((lit(0L) - count(lit(1))).as("np"),
         (lit(0L) - sum(col("dl"))).as("totalp"))
       .write.mode("overwrite").parquet(tdel.resolve("stneg").toString)
@@ -2122,19 +1887,19 @@ object StreamingQueries {
     * participates — a compacted partial is still a partial).
     */
   private def textCompactInto(s: SparkSession,
-      tix: java.nio.file.Path, tdel: java.nio.file.Path,
-      tixC: java.nio.file.Path): Unit = {
+      tix: Path, tdel: Path,
+      tixC: Path): Unit = {
     val ttomb = s.read.parquet(tdel.resolve("tomb").toString)
-    rdGensOf(s, tix.resolve("post")).join(ttomb, Seq("doc_id"), "left_anti")
+    readGens(s, tix.resolve("post")).join(ttomb, Seq("doc_id"), "left_anti")
       .write.mode("overwrite").parquet(tixC.resolve("post/base").toString)
-    rdGensOf(s, tix.resolve("dl")).join(ttomb, Seq("doc_id"), "left_anti")
+    readGens(s, tix.resolve("dl")).join(ttomb, Seq("doc_id"), "left_anti")
       .write.mode("overwrite").parquet(tixC.resolve("dl/base").toString)
-    rdGensOf(s, tix.resolve("df"))
+    readGens(s, tix.resolve("df"))
       .union(s.read.parquet(tdel.resolve("dfneg").toString))
       .groupBy(col("term")).agg(sum(col("dfp")).as("dfp"))
       .filter(col("dfp") > 0)
       .write.mode("overwrite").parquet(tixC.resolve("df/base").toString)
-    rdGensOf(s, tix.resolve("st"))
+    readGens(s, tix.resolve("st"))
       .union(s.read.parquet(tdel.resolve("stneg").toString))
       .agg(sum(col("np")).as("np"), sum(col("totalp")).as("totalp"))
       .write.mode("overwrite").parquet(tixC.resolve("st/base").toString)
@@ -2144,9 +1909,9 @@ object StreamingQueries {
     * schedule).
     */
   private def textTakedownCompact(s: SparkSession,
-      tix: java.nio.file.Path, tdel: java.nio.file.Path,
-      tixC: java.nio.file.Path,
-      isVictim: org.apache.spark.sql.Column): Unit = {
+      tix: Path, tdel: Path,
+      tixC: Path,
+      isVictim: Column): Unit = {
     textTakedown(s, tix, tdel, isVictim)
     textCompactInto(s, tix, tdel, tixC)
   }
@@ -2154,26 +1919,26 @@ object StreamingQueries {
   /** Signature-store TAKEDOWN: distinct stored victim ids as
     * tombstones.
     */
-  private def sigTakedown(s: SparkSession, dix: java.nio.file.Path,
-      tombPath: java.nio.file.Path,
-      isVictim: org.apache.spark.sql.Column): Unit =
-    rdGensOf(s, dix).select(col("doc_id")).filter(isVictim).distinct()
+  private def sigTakedown(s: SparkSession, dix: Path,
+      tombPath: Path,
+      isVictim: Column): Unit =
+    readGens(s, dix).select(col("doc_id")).filter(isVictim).distinct()
       .write.mode("overwrite").parquet(tombPath.toString)
 
   /** Signature-store COMPACTION: one anti-join rewrite into
     * `dixC/base`.
     */
-  private def sigCompactInto(s: SparkSession, dix: java.nio.file.Path,
-      tombPath: java.nio.file.Path, dixC: java.nio.file.Path): Unit =
-    rdGensOf(s, dix)
+  private def sigCompactInto(s: SparkSession, dix: Path,
+      tombPath: Path, dixC: Path): Unit =
+    readGens(s, dix)
       .join(s.read.parquet(tombPath.toString), Seq("doc_id"), "left_anti")
       .write.mode("overwrite").parquet(dixC.resolve("base").toString)
 
   /** Signature-store takedown + compaction at one boundary. */
   private def sigTakedownCompact(s: SparkSession,
-      dix: java.nio.file.Path, tombPath: java.nio.file.Path,
-      dixC: java.nio.file.Path,
-      isVictim: org.apache.spark.sql.Column): Unit = {
+      dix: Path, tombPath: Path,
+      dixC: Path,
+      isVictim: Column): Unit = {
     sigTakedown(s, dix, tombPath, isVictim)
     sigCompactInto(s, dix, tombPath, dixC)
   }
@@ -2187,9 +1952,9 @@ object StreamingQueries {
     * [[CcTakedownStore.rdRemap]]), and the gk registry compacts with
     * its tombstones.
     */
-  private def ccTakedownCompact(sp: SparkSession, cc: java.nio.file.Path,
-      ccC: java.nio.file.Path, boundary: Long,
-      isVictim: org.apache.spark.sql.Column): Unit = {
+  private def ccTakedownCompact(sp: SparkSession, cc: Path,
+      ccC: Path, boundary: Long,
+      isVictim: Column): Unit = {
     val st = new CcTakedownStore(cc, boundary)
     val priorSig = sp.read.parquet(st.gensBefore("sig", boundary): _*)
     val priorSh = sp.read.parquet(st.gensBefore("sh", boundary): _*)
@@ -2231,8 +1996,8 @@ object StreamingQueries {
     * and write the vacuumed adjacency to `out`.
     */
   private def gnavVacuumInto(s: SparkSession, d: String, adjA: DataFrame,
-      out: java.nio.file.Path): Unit = {
-    val survN = (c: org.apache.spark.sql.Column) =>
+      out: Path): Unit = {
+    val survN = (c: Column) =>
       pmod(c, lit(TakedownMod)) =!= TakedownRem
     val emb = T(s, d, "embeddings")
     val prun = adjA.filter(survN(col("vec_id")) && survN(col("nbr_id")))
@@ -2257,10 +2022,10 @@ object StreamingQueries {
     * compaction invariant).
     */
   private def ccTerminalLabels(s: SparkSession,
-      ccC: java.nio.file.Path): DataFrame = {
+      ccC: Path): DataFrame = {
     val lblGens = Dirs.list(ccC.resolve("lbl")).map(_.toString).sorted
     val remapGens =
-      if (!java.nio.file.Files.isDirectory(ccC.resolve("remap"))) Seq.empty
+      if (!Files.isDirectory(ccC.resolve("remap"))) Seq.empty
       else Dirs.list(ccC.resolve("remap")).map(_.toString).sorted
     val lbl = s.read.parquet(lblGens: _*)
     if (remapGens.isEmpty) lbl.select(col("doc_id"), col("component"))
@@ -2404,7 +2169,7 @@ object StreamingQueries {
     val gAR = Similarity.ClsArrRem
     val gW = 2 * gAM
     val gdir = state.resolve("gnav")
-    val survN = (c: org.apache.spark.sql.Column) =>
+    val survN = (c: Column) =>
       pmod(c, lit(TakedownMod)) =!= TakedownRem
     val lbase = Similarity.gnavResidentAdj(s, d)
     val symA = Similarity.gnavWalkEdgesOn(s, d,
@@ -2444,7 +2209,7 @@ object StreamingQueries {
     * LSH over the surviving documents.
     */
   private val lifecycleDedup: Q = (s, d) =>
-    Dedup.bandPairs(readIndexGens(s,
+    Dedup.bandPairs(readGens(s,
       lifecycleRun(s, d).resolve("dedupc")))
 
   /** Terminal maintained labels of the lifecycle replay, resolved
@@ -2464,8 +2229,7 @@ object StreamingQueries {
     * (the [[link4]] discipline applied to a run-local source).
     */
   private def stageOrderedFiles(slices: Seq[DataFrame],
-      srcDir: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
+      srcDir: Path): Unit = {
     Files.createDirectories(srcDir)
     // one fixed base stamp for the whole staging — per-slice "now"
     // could go backwards across slices on a slow clock tick
@@ -2601,11 +2365,8 @@ object StreamingQueries {
       waveB.filter(pmod(col("doc_id"), lit(2)) === 1)),
       run.resolve("src"))
     Dedup.releaseCheckpoint(ranked)
-    val raw = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(run.resolve("src").toString)
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
+    replay(s, run) {
+      source(s, docs.schema, run.resolve("src").toString).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sp = batch.sparkSession
           val bt0 = System.nanoTime()
@@ -2649,10 +2410,6 @@ object StreamingQueries {
           System.err.println(f"[lifecycle-stream] docs b$batchId " +
             f"${(System.nanoTime() - bt0) / 1e9}%.2f s")
         }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
     }
     }, () => {
@@ -2664,18 +2421,15 @@ object StreamingQueries {
     val gAR = Similarity.ClsArrRem
     val gW = 2 * gAM
     val gw2 = 2 * gW
-    val survV = (c: org.apache.spark.sql.Column) =>
+    val survV = (c: Column) =>
       pmod(c, lit(TakedownMod)) =!= TakedownRem
     val gdir = state.resolve("gnav")
     stageOrderedFiles(
       Seq(gAR, gAR + gW, gAR + gAM, gAR + gAM + gW).map(r =>
         emb.filter(pmod(col("vec_id"), lit(gw2)) === r)),
       run.resolve("gsrc"))
-    val graw = s.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(run.resolve("gsrc").toString)
-    withStreamingParallelism(s) {
-      val q = graw.writeStream
+    replay(s, run, "gchk") {
+      source(s, emb.schema, run.resolve("gsrc").toString).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sp = batch.sparkSession
           val bt0 = System.nanoTime()
@@ -2684,7 +2438,7 @@ object StreamingQueries {
             // door's monotone cap algebra), then vacuum
             capAdj(Similarity.gnavResidentAdj(sp, d)
                 .select(col("vec_id"), col("nbr_id"), col("sim"))
-                .unionByName(rdGensOf(sp, gdir.resolve("wa"))))
+                .unionByName(readGens(sp, gdir.resolve("wa"))))
               .write.mode("overwrite")
               .parquet(gdir.resolve("adja").toString)
             gnavVacuumInto(sp, d,
@@ -2708,15 +2462,11 @@ object StreamingQueries {
           System.err.println(f"[lifecycle-stream] gnav b$batchId " +
             f"${(System.nanoTime() - bt0) / 1e9}%.2f s")
         }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("gchk").toString)
-        .start()
-      q.awaitTermination()
     }
     // terminal adjacency: ONE degree re-cap folds the wave-B
     // generations onto the vacuumed tier
     capAdj(s.read.parquet(gdir.resolve("adjv").toString)
-        .unionByName(rdGensOf(s, gdir.resolve("wb"))))
+        .unionByName(readGens(s, gdir.resolve("wb"))))
       .write.mode("overwrite").parquet(gdir.resolve("final").toString)
     }
     })
@@ -2736,7 +2486,7 @@ object StreamingQueries {
     * LSH over the surviving documents.
     */
   private val lifecycleStreamDedup: Q = (s, d) =>
-    Dedup.bandPairs(readIndexGens(s,
+    Dedup.bandPairs(readGens(s,
       lifecycleStreamRun(s, d).resolve("dedupc")))
 
   /** Terminal maintained labels of the STREAMING lifecycle ≡
@@ -2857,11 +2607,11 @@ object StreamingQueries {
     val emb = T(s, d, "embeddings")
     val isArr = pmod(col("vec_id"), lit(Similarity.ClsArrMod)) ===
       Similarity.ClsArrRem
-    val survV = (c: org.apache.spark.sql.Column) =>
+    val survV = (c: Column) =>
       pmod(c, lit(TakedownMod)) =!= TakedownRem
     val gBatch = pmod(xxhash64(lit(s"lcpg$seed"), col("vec_id")), lit(k))
     val gdir = state.resolve("gnav")
-    def capTo(df: DataFrame, out: java.nio.file.Path): DataFrame = {
+    def capTo(df: DataFrame, out: Path): DataFrame = {
       capAdj(df).write.mode("overwrite").parquet(out.toString)
       s.read.parquet(out.toString)
     }
@@ -2870,7 +2620,7 @@ object StreamingQueries {
       gdir.resolve("t0"))
     var segGens = Seq.empty[String]
     var vacuumed = false
-    def foldSegment(out: java.nio.file.Path): DataFrame =
+    def foldSegment(out: Path): DataFrame =
       capTo(if (segGens.isEmpty) tier
         else tier.unionByName(s.read.parquet(segGens: _*)), out)
     def vacuum(tag: String): Unit = {
@@ -2895,7 +2645,7 @@ object StreamingQueries {
     if (vacPos == k) vacuum("k")
     val gterm = foldSegment(gdir.resolve("final"))
     (scoreTextIndex(s, tixC),
-      Dedup.bandPairs(readIndexGens(s, dixC)),
+      Dedup.bandPairs(readGens(s, dixC)),
       ccTerminalLabels(s, ccC), gterm)
   }
 
@@ -2916,7 +2666,7 @@ object StreamingQueries {
       .write.mode("overwrite")
       .parquet(run.resolve("dedup/base").toString)
     (scoreTextIndex(s, tix),
-      Dedup.bandPairs(readIndexGens(s, run.resolve("dedup"))))
+      Dedup.bandPairs(readGens(s, run.resolve("dedup"))))
   }
 
   /** MAINTAINED-CLUSTERING DELETION — the takedown family's capstone,
@@ -2953,7 +2703,7 @@ object StreamingQueries {
   private val dedupCcDelete: Q = (s, d) => {
     val labels = Dedup.componentLabels(s, d)
     val pairs = Dedup.verifiedPairsTable(s, d)
-    def survives(c: org.apache.spark.sql.Column) =
+    def survives(c: Column) =
       pmod(c, lit(TakedownMod)) =!= TakedownRem
     val affected = labels.filter(!survives(col("doc_id")))
       .select(col("component")).distinct()
@@ -2995,48 +2745,61 @@ object StreamingQueries {
     val state = run.resolve("state")
     Dedup.ccIvmBaseFromShared(s, d,
       ranked.filter(col("bucket") < 3).select(col("doc_id")), state)
-    val srcDir = run.resolve("src").toString
-    ranked.filter(col("bucket") === 3).drop("bucket")
-      .repartition(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    // generations BEFORE batch k: "base" plus b<k — named by batch id,
-    // so a replayed batch deterministically re-reads the same priors
-    // (its own earlier writes are excluded, the idempotency the
-    // per-gen-dir layout exists for)
-    def gensBefore(sub: String, batchId: Long): Seq[String] = {
-      val dir = state.resolve(sub)
-      if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
-      else Dirs.list(dir)
-        .filter { p =>
-          val n = p.getFileName.toString
-          n == "base" || n.drop(1).toLong < batchId
-        }.map(_.toString).sorted
-    }
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
+    val src = stage3(ranked.filter(col("bucket") === 3).drop("bucket"),
+      "doc_id", run)
+    replay(s, run) {
+      source(s, docs.schema, src).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val sp = batch.sparkSession
-          def rd(sub: String) = sp.read.parquet(gensBefore(sub, batchId): _*)
-          val remaps = gensBefore("remap", batchId)
-          val prevRemap =
-            if (remaps.isEmpty)
-              sp.range(0).select(col("id").as("old"), col("id").as("root"))
-            else sp.read.parquet(remaps.max)
-          Dedup.ccIvmBatch(batch, rd("sh"), rd("sig"), rd("lbl"),
-            prevRemap, rd("gk"), state, f"b$batchId%05d")
+          ccFold(batch, state, batchId)
         }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
-    // read-back: every label generation, resolved through the FINAL
-    // compacted remap (one hop — the compaction invariant)
-    val allGens = gensBefore("lbl", Long.MaxValue)
-    val allLbl = s.read.parquet(allGens: _*)
-    val remapGens = gensBefore("remap", Long.MaxValue)
+    resolvedLabels(s, state)
+  }
+
+  /** Generations under `root/sub` before batch `batchId`: "base" plus
+    * b<k> for k < batchId — named by batch id, so a replayed batch
+    * deterministically re-reads the same priors (its own earlier writes
+    * are excluded, the idempotency the per-gen-dir layout exists for).
+    */
+  private def gensBefore(root: Path, sub: String,
+      batchId: Long): Seq[String] = {
+    val dir = root.resolve(sub)
+    if (!Files.isDirectory(dir)) Seq.empty
+    else Dirs.list(dir)
+      .filter { p =>
+        val n = p.getFileName.toString
+        n == "base" || n.drop(1).toLong < batchId
+      }.map(_.toString).sorted
+  }
+
+  /** The newest remap generation under `root` before `batchId`, or the
+    * empty remap.
+    */
+  private def remapBefore(sp: SparkSession, root: Path,
+      batchId: Long): DataFrame = {
+    val remaps = gensBefore(root, "remap", batchId)
+    if (remaps.isEmpty)
+      sp.range(0).select(col("id").as("old"), col("id").as("root"))
+    else sp.read.parquet(remaps.max)
+  }
+
+  /** One [[Dedup.ccIvmBatch]] fold of `batch` into the clustering store
+    * at `root`, reading the generations before the batch.
+    */
+  private def ccFold(batch: DataFrame, root: Path, batchId: Long): Unit = {
+    val sp = batch.sparkSession
+    def rd(sub: String) = sp.read.parquet(gensBefore(root, sub, batchId): _*)
+    val prevRemap = remapBefore(sp, root, batchId)
+    Dedup.ccIvmBatch(batch, rd("sh"), rd("sig"), rd("lbl"),
+      prevRemap, rd("gk"), root, f"b$batchId%05d")
+  }
+
+  /** Every label generation of the store at `root`, resolved through
+    * its FINAL compacted remap (one hop — the compaction invariant).
+    */
+  private def resolvedLabels(s: SparkSession, root: Path): DataFrame = {
+    val allLbl = s.read.parquet(gensBefore(root, "lbl", Long.MaxValue): _*)
+    val remapGens = gensBefore(root, "remap", Long.MaxValue)
     if (remapGens.isEmpty) allLbl.select(col("doc_id"), col("component"))
     else allLbl
       .join(s.read.parquet(remapGens.max)
@@ -3083,72 +2846,29 @@ object StreamingQueries {
     val cstate = run.resolve("cstate") // compacted store, folds after
     Dedup.ccIvmBaseFromShared(s, d,
       ranked.filter(col("bucket") < 3).select(col("doc_id")), state)
-    val srcDir = run.resolve("src").toString
-    ranked.filter(col("bucket") === 3).drop("bucket")
-      .repartition(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val raw = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    // generations BEFORE batch k under a store root — the dedupCcIvm
-    // helper parameterized over the root, because this face folds into
-    // two stores (live until the boundary, compacted after)
-    def gensBefore(root: java.nio.file.Path, sub: String,
-        batchId: Long): Seq[String] = {
-      val dir = root.resolve(sub)
-      if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
-      else Dirs.list(dir)
-        .filter { p =>
-          val n = p.getFileName.toString
-          n == "base" || n.drop(1).toLong < batchId
-        }.map(_.toString).sorted
-    }
+    val src = stage3(ranked.filter(col("bucket") === 3).drop("bucket"),
+      "doc_id", run)
     val compactAt = 2L
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
+    replay(s, run) {
+      source(s, docs.schema, src).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sp = batch.sparkSession
-          val root = if (batchId < compactAt) state else cstate
           if (batchId == compactAt) {
             // the boundary: rewrite everything folded so far (inputs
             // fixed — gens strictly before the boundary) into the
             // compacted store; idempotent overwrite under replay
             def all(sub: String) =
               sp.read.parquet(gensBefore(state, sub, compactAt): _*)
-            val remaps = gensBefore(state, "remap", compactAt)
-            val finalRemap =
-              if (remaps.isEmpty)
-                sp.range(0).select(col("id").as("old"), col("id").as("root"))
-              else sp.read.parquet(remaps.max)
+            val finalRemap = remapBefore(sp, state, compactAt)
             Dedup.ccCompact(all("sh"), all("sig"), all("lbl"),
               finalRemap, all("gk"), cstate)
           }
-          def rd(sub: String) =
-            sp.read.parquet(gensBefore(root, sub, batchId): _*)
-          val remaps = gensBefore(root, "remap", batchId)
-          val prevRemap =
-            if (remaps.isEmpty)
-              sp.range(0).select(col("id").as("old"), col("id").as("root"))
-            else sp.read.parquet(remaps.max)
-          Dedup.ccIvmBatch(batch, rd("sh"), rd("sig"), rd("lbl"),
-            prevRemap, rd("gk"), root, f"b$batchId%05d")
+          ccFold(batch, if (batchId < compactAt) state else cstate, batchId)
         }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
-    // read-back: the compacted store's label generations resolved
-    // through ITS final remap (base labels are already live roots —
-    // the compaction invariant; only post-boundary merges re-point)
-    val allLbl = s.read.parquet(
-      gensBefore(cstate, "lbl", Long.MaxValue): _*)
-    val remapGens = gensBefore(cstate, "remap", Long.MaxValue)
-    if (remapGens.isEmpty) allLbl.select(col("doc_id"), col("component"))
-    else allLbl
-      .join(s.read.parquet(remapGens.max)
-        .withColumnRenamed("old", "component"), Seq("component"), "left")
-      .select(col("doc_id"),
-        coalesce(col("root"), col("component")).as("component"))
+    // read-back: the compacted store's labels (base labels are already
+    // live roots; only post-boundary merges re-point)
+    resolvedLabels(s, cstate)
   }
 
   /** MAINTAINED CLUSTERING UNDER INTERLEAVED ARRIVALS AND TAKEDOWNS —
@@ -3200,19 +2920,12 @@ object StreamingQueries {
     * replay's own per-batch folds and the read-back, and constructed
     * fresh per read so the plan binds to the reading session.
     */
-  private final class CcTakedownStore(state: java.nio.file.Path,
+  private final class CcTakedownStore(state: Path,
       val deleteAt: Long = 1L) {
     val dGen = f"d$deleteAt%05d"
 
-    def gensBefore(sub: String, batchId: Long): Seq[String] = {
-      val dir = state.resolve(sub)
-      if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
-      else Dirs.list(dir)
-        .filter { p =>
-          val n = p.getFileName.toString
-          n == "base" || n.drop(1).toLong < batchId
-        }.map(_.toString).sorted
-    }
+    def gensBefore(sub: String, batchId: Long): Seq[String] =
+      StreamingQueries.gensBefore(state, sub, batchId)
 
     def rdDelete(sp: SparkSession, sub: String): DataFrame =
       sp.read.parquet(state.resolve(s"$sub/$dGen").toString)
@@ -3265,7 +2978,7 @@ object StreamingQueries {
       else {
         val m = sp.read.parquet(remaps.max)
         val genName =
-          java.nio.file.Paths.get(remaps.max).getFileName.toString
+          Paths.get(remaps.max).getFileName.toString
         val preBoundary =
           genName == "base" || genName.drop(1).toLong < deleteAt
         if (!withDelete || !preBoundary) m
@@ -3291,24 +3004,20 @@ object StreamingQueries {
     * [[CcTakedownStore]] reads the terminal labels back.
     */
   private def ccTakedownInto(s: SparkSession, d: String,
-      run: java.nio.file.Path): java.nio.file.Path = {
+      run: Path): Path = {
     val docs = T(s, d, "documents")
     val ranked = Dedup.materialize(docQuartiles(docs))
     val state = run.resolve("state")
     Dedup.ccIvmBaseFromShared(s, d,
       ranked.filter(col("bucket") < 2).select(col("doc_id")), state)
-    val srcDir = run.resolve("src").toString
-    ranked.filter(col("bucket") >= 2).drop("bucket")
-      .repartition(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
+    val src = stage3(ranked.filter(col("bucket") >= 2).drop("bucket"),
+      "doc_id", run)
     Dedup.releaseCheckpoint(ranked)
-    val raw = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val st = new CcTakedownStore(state)
     val deleteAt = st.deleteAt
     val isVictim = pmod(col("doc_id"), lit(TakedownMod)) === TakedownRem
-    withStreamingParallelism(s) {
-      val q = raw.writeStream
+    replay(s, run) {
+      source(s, docs.schema, src).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sp = batch.sparkSession
           if (batchId == deleteAt) {
@@ -3339,10 +3048,6 @@ object StreamingQueries {
             st.rdRows(sp, "gk", batchId),
             state, f"b$batchId%05d")
         }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
     state
   }
@@ -3354,6 +3059,57 @@ object StreamingQueries {
   private[graft] def ccTakedownRaw: Q = (s, d) =>
     new CcTakedownStore(ccTakedownInto(s, d,
       Materialized.runDir("graft_cctds_", d))).readBack(s)
+
+  /** The finalized hourly `(event_type, hour_epoch, n)` windows every
+    * hourly-recurrence face folds: one append-mode watermarked window
+    * query over the 3 h-sentinel staging, written once per dataset
+    * version per process and read by every stage-2 (before r13 each of
+    * anomaly/ewma/holtwinters re-ran it). Concurrent group members wait
+    * on the one build and adopt its directory.
+    */
+  private[graft] lazy val hourlyStage = Materialized.memo(
+      "stream_stage1_hourly", "graft_hourly1_", "hourlywin:v1") {
+      (s, d, run) =>
+    stage1(s, d, run, run.resolve("win").toString) { raw =>
+      microsTs(raw).withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("event_type"),
+          unix_seconds(col("window.start")).as("hour_epoch"), col("n"))
+    }
+  }
+
+  /** Stage 1 of the two-stage topologies: replay the events plus a
+    * sentinel `sentinelOffsetNanos` past their end (see
+    * [[stageSessionSource]]) through `windows`, an append-mode
+    * watermarked window query over the raw nanos stream, into `out`,
+    * which is returned.
+    */
+  private def stage1(s: SparkSession, d: String, run: Path, out: String,
+      sentinelOffsetNanos: Long = 3 * 3600L * 1000 * 1000 * 1000)(
+      windows: DataFrame => DataFrame): String = {
+    val schema = eventsNanos(s, d)
+    val src = stageSessionSource(s, d, schema, run, sentinelOffsetNanos)
+    replay(s, run, "chk1")(
+      toParquet(windows(source(s, schema, src, "*.parquet")), out))
+    out
+  }
+
+  /** Stage 2 of the hourly faces: the finalized hourly windows of
+    * [[hourlyStage]] folded per event type through `processor`, read
+    * back with `outDdl`.
+    */
+  private def hourlyFold[O <: Product : TypeTag](s: SparkSession, d: String,
+      runPrefix: String,
+      processor: StatefulProcessor[String, graft.streaming.HourCount, O],
+      outDdl: String): DataFrame = {
+    import s.implicits._
+    val win = hourlyStage(s, d)
+    val out = keyedStage2(s, Materialized.runDir(runPrefix, d), win,
+      "event_type STRING, hour_epoch BIGINT, n BIGINT",
+      col("event_type").isNotNull, processor)(_.event_type)
+    s.read.schema(outDdl).parquet(out)
+  }
 
   /** The streaming face of `events_anomaly` — a TWO-STAGE streaming
     * topology, each stage the production shape:
@@ -3377,73 +3133,11 @@ object StreamingQueries {
     * sentinel's own (null-typed) window never closes, so it never even
     * reaches stage 2.
     */
-  /** The finalized hourly `(event_type, hour_epoch, n)` windows every
-    * hourly-recurrence face folds: one append-mode watermarked window
-    * query over the 3 h-sentinel staging, written once per dataset
-    * version per process and read by every stage-2 (before r13 each of
-    * anomaly/ewma/holtwinters re-ran it). Concurrent group members wait
-    * on the one build and adopt its directory.
-    */
-  private[graft] lazy val hourlyStage = Materialized.memo(
-      "stream_stage1_hourly", "graft_hourly1_", "hourlywin:v1") {
-      (s, d, run) =>
-    val win = run.resolve("win").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(win))
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts")
-          f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val src = stageSessionSource(s, d, schema, run,
-      sentinelOffsetNanos = 3 * 3600L * 1000 * 1000 * 1000)
-    withStreamingParallelism(s) {
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet").parquet(src)
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      val q1 = raw.withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("event_type"),
-          unix_seconds(col("window.start")).as("hour_epoch"), col("n"))
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", win)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk1").toString)
-        .start()
-      q1.awaitTermination()
-    }
-    win
-  }
-
-  private val streamAnomaly: Q = (s, d) => {
-    val win = hourlyStage(s, d)
-    val run = Materialized.runDir("graft_anostream_", d)
-    val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    withStreamingParallelism(s) {
-      // stage 2: keyed trailing-baseline fold over the finalized windows
-      withRocksDbStateStore(s) {
-        import s.implicits._
-        val rows = s.readStream
-          .schema("event_type STRING, hour_epoch BIGINT, n BIGINT")
-          .option("pathGlobFilter", "*.parquet").parquet(win)
-          .filter(col("event_type").isNotNull)
-          .as[graft.streaming.HourCount]
-        val q2 = rows.groupByKey(_.event_type)
-          .transformWithState(new graft.streaming.TrailingBaselineProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-          .writeStream.outputMode("append")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", run.resolve("chk2").toString)
-          .start()
-        q2.awaitTermination()
-      }
-    }
-    s.read.schema("event_type STRING, hour_epoch BIGINT, n BIGINT, " +
-        "w_cnt BIGINT, w_sum BIGINT, is_spike BOOLEAN").parquet(out)
-  }
+  private val streamAnomaly: Q = (s, d) =>
+    hourlyFold(s, d, "graft_anostream_",
+      new graft.streaming.TrailingBaselineProcessor,
+      "event_type STRING, hour_epoch BIGINT, n BIGINT, " +
+        "w_cnt BIGINT, w_sum BIGINT, is_spike BOOLEAN")
 
   /** Streaming EWMA — the `events_ewma` recurrence as a streaming
     * topology, sharing its oracle: stage 1 finalizes hourly counts
@@ -3453,34 +3147,9 @@ object StreamingQueries {
     * the O(1)-state streaming shape of a recurrence that batch SQL can
     * only express as a sequential fold.
     */
-  private val streamEwma: Q = (s, d) => {
-    val win = hourlyStage(s, d)
-    val run = Materialized.runDir("graft_ewmastream_", d)
-    val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    withStreamingParallelism(s) {
-      withRocksDbStateStore(s) {
-        import s.implicits._
-        val rows = s.readStream
-          .schema("event_type STRING, hour_epoch BIGINT, n BIGINT")
-          .option("pathGlobFilter", "*.parquet").parquet(win)
-          .filter(col("event_type").isNotNull)
-          .as[graft.streaming.HourCount]
-        val q2 = rows.groupByKey(_.event_type)
-          .transformWithState(new graft.streaming.EwmaProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-          .writeStream.outputMode("append")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", run.resolve("chk2").toString)
-          .start()
-        q2.awaitTermination()
-      }
-    }
-    s.read.schema("event_type STRING, hour_epoch BIGINT, n BIGINT, " +
-        "ewma_scaled BIGINT").parquet(out)
-  }
+  private val streamEwma: Q = (s, d) =>
+    hourlyFold(s, d, "graft_ewmastream_", new graft.streaming.EwmaProcessor,
+      "event_type STRING, hour_epoch BIGINT, n BIGINT, ewma_scaled BIGINT")
 
   /** The Holt-Winters seasonal recurrence as STREAMING STATE — the
     * vector-state member of the `stream_ewma` family: finalized hourly
@@ -3490,35 +3159,12 @@ object StreamingQueries {
     * fold (the shared oracle): seasonal state accumulated batch over
     * batch prices identically to the one-pass HOF.
     */
-  private val streamHoltWinters: Q = (s, d) => {
-    val win = hourlyStage(s, d)
-    val run = Materialized.runDir("graft_hwstream_", d)
-    val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    withStreamingParallelism(s) {
-      withRocksDbStateStore(s) {
-        import s.implicits._
-        val rows = s.readStream
-          .schema("event_type STRING, hour_epoch BIGINT, n BIGINT")
-          .option("pathGlobFilter", "*.parquet").parquet(win)
-          .filter(col("event_type").isNotNull)
-          .as[graft.streaming.HourCount]
-        val q2 = rows.groupByKey(_.event_type)
-          .transformWithState(new graft.streaming.HoltWintersProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-          .writeStream.outputMode("append")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", run.resolve("chk2").toString)
-          .start()
-        q2.awaitTermination()
-      }
-    }
-    s.read.schema("event_type STRING, hour_epoch BIGINT, n BIGINT, " +
+  private val streamHoltWinters: Q = (s, d) =>
+    hourlyFold(s, d, "graft_hwstream_",
+      new graft.streaming.HoltWintersProcessor,
+      "event_type STRING, hour_epoch BIGINT, n BIGINT, " +
         "level_scaled BIGINT, trend_scaled BIGINT, seasonal_scaled BIGINT, " +
-        "forecast_scaled BIGINT").parquet(out)
-  }
+        "forecast_scaled BIGINT")
 
   /** Streaming CONVERSION FUNNEL — the per-user view → click → purchase
     * state machine as a streaming topology, sharing the batch
@@ -3535,61 +3181,28 @@ object StreamingQueries {
     * same three-row stage count the batch face emits.
     */
   private val streamFunnel: Q = (s, d) => {
+    import s.implicits._
     val run = Materialized.runDir("graft_funstream_", d)
-    val mid = run.resolve("mid").toString
-    val out = run.resolve("out").toString
-    Seq(mid, out).foreach(p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p)))
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val src = stageSessionSource(s, d, schema, run,
-      sentinelOffsetNanos = 3 * 3600L * 1000 * 1000 * 1000)
-    withStreamingParallelism(s) {
-      // stage 1: finalized per-(user, hour, type) timestamp lists; the
-      // sentinel row must pass the filter to drive the final watermark
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet").parquet(src)
-        .filter(col("event_type").isin("view", "click", "purchase") ||
-          col("user_id") === SentinelUser)
-        .withColumn("ts_nanos", col("ts"))
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      val q1 = raw.withWatermark("ts", "1 hour")
+    // stage 1: finalized per-(user, hour, type) timestamp lists; the
+    // sentinel row must pass the filter to drive the final watermark
+    val mid = stage1(s, d, run, run.resolve("mid").toString) { raw =>
+      microsTs(raw
+          .filter(col("event_type").isin("view", "click", "purchase") ||
+            col("user_id") === SentinelUser)
+          .withColumn("ts_nanos", col("ts")))
+        .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("user_id"),
           col("event_type"))
         .agg(collect_list(col("ts_nanos")).as("ts_list"))
         .select(col("user_id"),
           unix_seconds(col("window.start")).as("hour_epoch"),
           col("event_type"), col("ts_list"))
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", mid)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk1").toString)
-        .start()
-      q1.awaitTermination()
-      // stage 2: keyed three-long funnel state per user
-      withRocksDbStateStore(s) {
-        import s.implicits._
-        val rows = s.readStream
-          .schema("user_id BIGINT, hour_epoch BIGINT, " +
-            "event_type STRING, ts_list ARRAY<BIGINT>")
-          .option("pathGlobFilter", "*.parquet").parquet(mid)
-          .filter(col("user_id") =!= SentinelUser &&
-            col("event_type").isNotNull)
-          .as[graft.streaming.UserHourEvents]
-        val q2 = rows.groupByKey(_.user_id)
-          .transformWithState(new graft.streaming.FunnelStageProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-          .writeStream.outputMode("append")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", run.resolve("chk2").toString)
-          .start()
-        q2.awaitTermination()
-      }
     }
+    // stage 2: keyed three-long funnel state per user
+    val out = keyedStage2(s, run, mid, "user_id BIGINT, hour_epoch BIGINT, " +
+        "event_type STRING, ts_list ARRAY<BIGINT>",
+      col("user_id") =!= SentinelUser && col("event_type").isNotNull,
+      new graft.streaming.FunnelStageProcessor)(_.user_id)
     val unset = graft.streaming.FunnelFold.Unset
     val finals = s.read
       .schema("user_id BIGINT, v BIGINT, c BIGINT, p BIGINT").parquet(out)
@@ -3621,53 +3234,21 @@ object StreamingQueries {
     * real week.
     */
   private val streamRetention: Q = (s, d) => {
+    import s.implicits._
     val run = Materialized.runDir("graft_retstream_", d)
-    val mid = run.resolve("mid").toString
-    val out = run.resolve("out").toString
-    Seq(mid, out).foreach(p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p)))
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val src = stageSessionSource(s, d, schema, run,
-      sentinelOffsetNanos = 9 * 24 * 3600L * 1000 * 1000 * 1000)
-    withStreamingParallelism(s) {
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet").parquet(src)
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      val q1 = raw.withWatermark("ts", "1 hour")
+    val mid = stage1(s, d, run, run.resolve("mid").toString,
+        sentinelOffsetNanos = 9 * 24 * 3600L * 1000 * 1000 * 1000) { raw =>
+      microsTs(raw).withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "7 days", "7 days", "4 days"),
           col("user_id"))
         .agg(count(lit(1)).as("n"))
         .select(col("user_id"),
           (unix_seconds(col("window.start")) / 86400L).cast("long")
             .as("week_day"))
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", mid)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk1").toString)
-        .start()
-      q1.awaitTermination()
-      withRocksDbStateStore(s) {
-        import s.implicits._
-        val rows = s.readStream
-          .schema("user_id BIGINT, week_day BIGINT")
-          .option("pathGlobFilter", "*.parquet").parquet(mid)
-          .filter(col("user_id") =!= SentinelUser)
-          .as[graft.streaming.WeekActive]
-        val q2 = rows.groupByKey(_.user_id)
-          .transformWithState(new graft.streaming.RetentionCohortProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-          .writeStream.outputMode("append")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", run.resolve("chk2").toString)
-          .start()
-        q2.awaitTermination()
-      }
     }
+    val out = keyedStage2(s, run, mid, "user_id BIGINT, week_day BIGINT",
+      col("user_id") =!= SentinelUser,
+      new graft.streaming.RetentionCohortProcessor)(_.user_id)
     s.read
       .schema("user_id BIGINT, cohort_day BIGINT, week_day BIGINT")
       .parquet(out)
@@ -3695,32 +3276,19 @@ object StreamingQueries {
     val run = Materialized.runDir("graft_quarstream_", d)
     val good = run.resolve("good").toString
     val dead = run.resolve("dead").toString
-    Seq(good, dead).foreach(p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p)))
     val schema = T(s, d, "orders").schema
     def feed() = {
       val js = concat(lit("{\"k\":"), col("o_orderkey"),
         lit(",\"s\":\""), col("o_orderstatus"), lit("\"}"))
-      s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet").parquet(d)
+      source(s, schema, d, "orders.parquet")
         .select(when(pmod(col("o_orderkey"), lit(13)) === 0,
           substring(js, 1, 9)).otherwise(js).as("js"))
         .withColumn("k", get_json_object(col("js"), "$.k").cast("long"))
     }
-    withStreamingParallelism(s) {
-      def route(df: DataFrame, out: String, chk: String): Unit = {
-        val q = df.writeStream.outputMode("append")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", run.resolve(chk).toString)
-          .start()
-        q.awaitTermination()
-      }
-      route(feed().filter(col("k").isNotNull).select(col("k")),
-        good, "chk_good")
-      route(feed().filter(col("k").isNull).select(col("js")),
-        dead, "chk_dead")
-    }
+    replay(s, run, "chk_good")(
+      toParquet(feed().filter(col("k").isNotNull).select(col("k")), good))
+    replay(s, run, "chk_dead")(
+      toParquet(feed().filter(col("k").isNull).select(col("js")), dead))
     s.read.schema("k BIGINT").parquet(good)
       .agg(count(lit(1)).as("n"), sum(col("k")).as("k_sum"))
       .select(lit("parsed").as("bucket"), col("n"), col("k_sum"))
@@ -3729,15 +3297,6 @@ object StreamingQueries {
           lit(null).cast("long").as("k_sum"))
         .select(lit("quarantined").as("bucket"), col("n"), col("k_sum")))
   }
-
-  /** `transformWithState` requires the RocksDB state store provider;
-    * scope it to the run and restore the session's prior setting (the
-    * other replays keep whatever the session was configured with).
-    */
-  private def withRocksDbStateStore[A](s: SparkSession)(run: => A): A =
-    ConfScope.enter(s, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")(run)
 
   /** The accumulated near-dup pairs: fold per-band hits into the
     * per-pair shared-band count (idempotent under batch replay).
@@ -3771,29 +3330,14 @@ object StreamingQueries {
   private val streamJoinAttrib: Q = (s, d) => {
     val run = Materialized.runDir("graft_sjoin_", d)
     val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
+    val schema = eventsNanos(s, d)
     val src = stageNanosEvents(s, d, run.resolve("src"))
     // two independent stream readers over the same replay file — the
     // shape of two genuinely distinct topics sharing an event-time axis
-    def feed = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(src)
-      // plain UTC TIMESTAMP: watermarks reject TIMESTAMP_NTZ (run is UTC)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    withStreamingParallelism(s) {
-      val q = joinClicksToPurchases(
-          feed.filter(col("event_type") === "click"),
-          feed.filter(col("event_type") === "purchase"))
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
-    }
+    def feed = microsTs(source(s, schema, src, "events.parquet"))
+    replay(s, run)(toParquet(joinClicksToPurchases(
+      feed.filter(col("event_type") === "click"),
+      feed.filter(col("event_type") === "purchase")), out))
     s.read.schema(
       "user_id BIGINT, click_id BIGINT, purchase_id BIGINT, gap_us BIGINT")
       .parquet(out)
@@ -3834,30 +3378,20 @@ object StreamingQueries {
   private val streamEnrich: Q = (s, d) => {
     val run = Materialized.runDir("graft_enrich_", d)
     val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     // this replay never touches ts — read with the table's own on-disk
     // schema so the stream is physical-type-agnostic, no staging needed
     val schema = s.read.parquet(s"$d/events.parquet").schema
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
+    val raw = source(s, schema, d, "events.parquet")
     val dim = T(s, d, "customer")
       .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-    withStreamingParallelism(s) {
-      // the parquet STREAMING sink, not foreachBatch + blind append:
-      // foreachBatch is at-least-once, so a failed-then-replayed
-      // micro-batch would double-append rows and silently inflate
-      // n_events/total_value — the sink's transactional file log
-      // commits each batch exactly once instead (r7 shipped the blind
-      // append; flagged by the round-7 advisor)
-      val q = raw.join(broadcast(dim), Seq("user_id"))
-        .select(col("c_mktsegment"), col("user_id"), col("value"))
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
-    }
+    // the parquet STREAMING sink, not foreachBatch + blind append:
+    // foreachBatch is at-least-once, so a failed-then-replayed
+    // micro-batch would double-append rows and silently inflate
+    // n_events/total_value — the sink's transactional file log
+    // commits each batch exactly once instead (r7 shipped the blind
+    // append; flagged by the round-7 advisor)
+    replay(s, run)(toParquet(raw.join(broadcast(dim), Seq("user_id"))
+      .select(col("c_mktsegment"), col("user_id"), col("value")), out))
     s.read.schema("c_mktsegment STRING, user_id BIGINT, value DOUBLE")
       .parquet(out)
       .groupBy(col("c_mktsegment"), col("user_id"))
@@ -3865,16 +3399,6 @@ object StreamingQueries {
         round(sum(col("value")), 2).as("total_value"))
   }
 
-  /** Streaming face of `events_state_history` — the CDC-consumer SCD2
-    * materializer run as a stream: watermark-finalized per-(user,
-    * hour) event lists feed a keyed open-run fold
-    * ([[graft.streaming.StateHistoryFold]], where the ordering
-    * exactness argument is spec'd without a harness), emitting run
-    * snapshots whose per-version `max(n_events)` read-back is the
-    * batch table; interval closure (`valid_to` = next run's start) is
-    * recomputed from the finalized version starts, exactly as the
-    * batch face's lead().
-    */
   /** The finalized per-(user, hour) typed event lists every user-walk
     * face folds (micros ts — the batch faces' precision; see
     * [[graft.streaming.EventAt]]), built ONCE per dataset version per
@@ -3883,73 +3407,44 @@ object StreamingQueries {
     */
   private[graft] lazy val walkStage = Materialized.memo(
       "stream_stage1_walk", "graft_walk1_", "walkmid:v1") { (s, d, run) =>
-    val mid = run.resolve("mid").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(mid))
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts")
-          f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val src = stageSessionSource(s, d, schema, run,
-      sentinelOffsetNanos = 3 * 3600L * 1000 * 1000 * 1000)
-    withStreamingParallelism(s) {
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet").parquet(src)
-        .withColumn("ts_us", expr("ts div 1000"))
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      val q1 = raw.withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("user_id"))
-        .agg(collect_list(struct(col("ts_us").as("ts"), col("event_id"),
-          col("event_type"))).as("evs"))
-        .select(col("user_id"),
-          unix_seconds(col("window.start")).as("hour_epoch"), col("evs"))
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", mid)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk1").toString)
-        .start()
-      q1.awaitTermination()
-    }
-    mid
+    stage1(s, d, run, run.resolve("mid").toString)(userHourLists(_))
+  }
+
+  /** Stage-1 body of the user walks: per-(user, hour) lists of every
+    * event's `(ts, event_id, event_type)` — `ts` in micros, the batch
+    * faces' precision (see [[graft.streaming.EventAt]]) — plus the
+    * `extra` columns, each added to the stream under its name.
+    */
+  private def userHourLists(raw: DataFrame,
+      extra: (String, Column)*): DataFrame = {
+    val withUs = raw.withColumn("ts_us", expr("ts div 1000"))
+    microsTs(extra.foldLeft(withUs) { case (df, (n, c)) =>
+        df.withColumn(n, c)
+      })
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour"), col("user_id"))
+      .agg(collect_list(struct(Seq(col("ts_us").as("ts"), col("event_id"),
+        col("event_type")) ++ extra.map(e => col(e._1)): _*)).as("evs"))
+      .select(col("user_id"),
+        unix_seconds(col("window.start")).as("hour_epoch"), col("evs"))
   }
 
   /** Shared two-stage topology for the keyed walk replays
     * (`stream_state_history`, `stream_paths`, CEP, rate-limit): stage 1
     * is the SHARED [[walkStage]] finalization (one run, four
-    * consumers); stage 2 runs the given `transformWithState` processor
-    * per user on RocksDB and writes its emissions to `out`, which the
-    * caller reads back.
+    * consumers); stage 2 folds it per user through `processor`
+    * ([[keyedStage2]]) in a run under `runPrefix`.
     */
-  private def runUserWalkTopology[O](s: SparkSession, d: String,
-      run: java.nio.file.Path,
-      processor: org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, graft.streaming.UserHourTyped, O],
-      outEncoder: org.apache.spark.sql.Encoder[O]): String = {
-    val mid = walkStage(s, d)
-    val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    withStreamingParallelism(s) {
-      withRocksDbStateStore(s) {
-        import s.implicits._
-        val rows = s.readStream
-          .schema("user_id BIGINT, hour_epoch BIGINT, evs ARRAY<STRUCT<" +
-            "ts: BIGINT, event_id: BIGINT, event_type: STRING>>")
-          .option("pathGlobFilter", "*.parquet").parquet(mid)
-          .filter(col("user_id") =!= SentinelUser)
-          .as[graft.streaming.UserHourTyped]
-        val q2 = rows.groupByKey(_.user_id)
-          .transformWithState(processor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Append())(outEncoder)
-          .writeStream.outputMode("append")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", run.resolve("chk2").toString)
-          .start()
-        q2.awaitTermination()
-      }
-    }
-    out
+  private def runUserWalkTopology[O <: Product : TypeTag](s: SparkSession,
+      d: String, runPrefix: String,
+      processor: StatefulProcessor[Long, graft.streaming.UserHourTyped, O])
+      : String = {
+    import s.implicits._
+    val run = Materialized.runDir(runPrefix, d)
+    keyedStage2(s, run, walkStage(s, d), "user_id BIGINT, " +
+        "hour_epoch BIGINT, evs ARRAY<STRUCT<" +
+        "ts: BIGINT, event_id: BIGINT, event_type: STRING>>",
+      col("user_id") =!= SentinelUser, processor)(_.user_id)
   }
 
   /** Streaming LAST-TOUCH ATTRIBUTION — the `events_attribution` carry
@@ -3963,55 +3458,15 @@ object StreamingQueries {
     * read side is the same groupBy the batch face ends with.
     */
   private val streamAttribution: Q = (s, d) => {
+    import s.implicits._
     val run = Materialized.runDir("graft_attrstream_", d)
-    val mid = run.resolve("mid").toString
-    val out = run.resolve("out").toString
-    Seq(mid, out).foreach(p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p)))
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val src = stageSessionSource(s, d, schema, run,
-      sentinelOffsetNanos = 3 * 3600L * 1000 * 1000 * 1000)
-    withStreamingParallelism(s) {
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet").parquet(src)
-        .withColumn("ts_us", expr("ts div 1000"))
-        .withColumn("cents", expr("CAST(round(value * 100) AS BIGINT)"))
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      val q1 = raw.withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("user_id"))
-        .agg(collect_list(struct(col("ts_us").as("ts"), col("event_id"),
-          col("event_type"), col("cents"))).as("evs"))
-        .select(col("user_id"),
-          unix_seconds(col("window.start")).as("hour_epoch"), col("evs"))
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", mid)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk1").toString)
-        .start()
-      q1.awaitTermination()
-      withRocksDbStateStore(s) {
-        import s.implicits._
-        val rows = s.readStream
-          .schema("user_id BIGINT, hour_epoch BIGINT, evs ARRAY<STRUCT<" +
-            "ts: BIGINT, event_id: BIGINT, event_type: STRING, cents: BIGINT>>")
-          .option("pathGlobFilter", "*.parquet").parquet(mid)
-          .filter(col("user_id") =!= SentinelUser)
-          .as[graft.streaming.UserHourValued]
-        val q2 = rows.groupByKey(_.user_id)
-          .transformWithState(new graft.streaming.AttributionProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-          .writeStream.outputMode("append")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", run.resolve("chk2").toString)
-          .start()
-        q2.awaitTermination()
-      }
-    }
+    val mid = stage1(s, d, run, run.resolve("mid").toString)(
+      userHourLists(_, "cents" -> expr("CAST(round(value * 100) AS BIGINT)")))
+    val out = keyedStage2(s, run, mid, "user_id BIGINT, hour_epoch BIGINT, " +
+        "evs ARRAY<STRUCT<ts: BIGINT, event_id: BIGINT, event_type: STRING, " +
+        "cents: BIGINT>>",
+      col("user_id") =!= SentinelUser,
+      new graft.streaming.AttributionProcessor)(_.user_id)
     s.read.schema("user_id BIGINT, touch_type STRING, cents BIGINT")
       .parquet(out)
       .groupBy(col("touch_type"))
@@ -4032,25 +3487,18 @@ object StreamingQueries {
     */
   private val streamM4: Q = (s, d) => {
     val run = Materialized.runDir("graft_m4stream_", d)
-    val out = run.resolve("out").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     stageIvmSource(s, d, run)
-    val schema = org.apache.spark.sql.types.StructType(
-      T(s, d, "events").schema.map(f =>
-        if (f.name == "ts") f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    val raw = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(run.resolve("src").toString)
-      .withColumn("te", expr("ts div 1000000000"))
-      .withColumn("c", expr("CAST(round(value * 100) AS BIGINT)"))
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    withStreamingParallelism(s) {
+    val raw = microsTs(
+      source(s, eventsNanos(s, d), run.resolve("src").toString)
+        .withColumn("te", expr("ts div 1000000000"))
+        .withColumn("c", expr("CAST(round(value * 100) AS BIGINT)")))
+    newestPerKey(s, run, Seq("bucket_epoch", "event_type"),
+        Seq("event_type", "bucket_epoch", "n", "v_min_cents", "v_max_cents",
+          "v_first_cents", "v_last_cents")) {
       val anchor = struct(col("te"), col("event_id"), col("c"))
-      val q = raw
+      raw
         .withWatermark("ts", "1 hour")
-        .groupBy(org.apache.spark.sql.functions.window(col("ts"), "6 hours"),
-          col("event_type"))
+        .groupBy(window(col("ts"), "6 hours"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           min(col("c")).as("v_min_cents"), max(col("c")).as("v_max_cents"),
           min(anchor).as("fs"), max(anchor).as("ls"))
@@ -4058,25 +3506,7 @@ object StreamingQueries {
           col("event_type"), col("n"), col("v_min_cents"),
           col("v_max_cents"), col("fs.c").as("v_first_cents"),
           col("ls.c").as("v_last_cents"))
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", run.resolve("chk").toString)
-        .start()
-      q.awaitTermination()
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bucket_epoch"), col("event_type"))
-      .orderBy(col("batch_id").desc)
-    s.read.parquet(out)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("event_type"), col("bucket_epoch"), col("n"),
-        col("v_min_cents"), col("v_max_cents"), col("v_first_cents"),
-        col("v_last_cents"))
   }
 
   /** Streaming CEP — the `events_cep_match` negative-condition sequence
@@ -4091,10 +3521,8 @@ object StreamingQueries {
     * alternative of buffering event history per pattern.
     */
   private val streamCepMatch: Q = (s, d) => {
-    val run = Materialized.runDir("graft_cepstream_", d)
-    val out = runUserWalkTopology(s, d, run,
-      new graft.streaming.CepProcessor,
-      org.apache.spark.sql.Encoders.product[graft.streaming.CepVerdict])
+    val out = runUserWalkTopology(s, d, "graft_cepstream_",
+      new graft.streaming.CepProcessor)
     s.read.schema("user_id BIGINT, te BIGINT, matched BIGINT")
       .parquet(out)
       .groupBy(expr("te div 86400 * 86400").as("day_epoch"))
@@ -4112,10 +3540,8 @@ object StreamingQueries {
     * oracle.
     */
   private val streamRateLimit: Q = (s, d) => {
-    val run = Materialized.runDir("graft_rlstream_", d)
-    val out = runUserWalkTopology(s, d, run,
-      new graft.streaming.RateLimitProcessor,
-      org.apache.spark.sql.Encoders.product[graft.streaming.RlVerdict])
+    val out = runUserWalkTopology(s, d, "graft_rlstream_",
+      new graft.streaming.RateLimitProcessor)
     s.read.schema("user_id BIGINT, ord BIGINT, allowed BIGINT, " +
         "tok_after BIGINT")
       .parquet(out)
@@ -4127,12 +3553,20 @@ object StreamingQueries {
           .as("tokens_final_scaled"))
   }
 
+  /** Streaming face of `events_state_history` — the CDC-consumer SCD2
+    * materializer run as a stream: watermark-finalized per-(user,
+    * hour) event lists feed a keyed open-run fold
+    * ([[graft.streaming.StateHistoryFold]], where the ordering
+    * exactness argument is spec'd without a harness), emitting run
+    * snapshots whose per-version `max(n_events)` read-back is the
+    * batch table; interval closure (`valid_to` = next run's start) is
+    * recomputed from the finalized version starts, exactly as the
+    * batch face's lead().
+    */
   private val streamStateHistory: Q = (s, d) => {
-    val run = Materialized.runDir("graft_scd2stream_", d)
-    val out = runUserWalkTopology(s, d, run,
-      new graft.streaming.StateHistoryProcessor,
-      org.apache.spark.sql.Encoders.product[graft.streaming.RunSnapshot])
-    val byVersion = org.apache.spark.sql.expressions.Window
+    val out = runUserWalkTopology(s, d, "graft_scd2stream_",
+      new graft.streaming.StateHistoryProcessor)
+    val byVersion = Window
       .partitionBy(col("user_id")).orderBy(col("version"))
     s.read.schema("user_id BIGINT, version BIGINT, state STRING, " +
         "valid_from_us BIGINT, n_events BIGINT").parquet(out)
@@ -4155,10 +3589,8 @@ object StreamingQueries {
     * count + the batch face's total-order top-10 cut.
     */
   private val streamPaths: Q = (s, d) => {
-    val run = Materialized.runDir("graft_pathstream_", d)
-    val out = runUserWalkTopology(s, d, run,
-      new graft.streaming.PathsProcessor,
-      org.apache.spark.sql.Encoders.product[graft.streaming.PathHit])
+    val out = runUserWalkTopology(s, d, "graft_pathstream_",
+      new graft.streaming.PathsProcessor)
     s.read.schema("user_id BIGINT, path STRING").parquet(out)
       .groupBy(col("path")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("path"))
